@@ -75,6 +75,22 @@ def make_postgres_connection_factory(pg_python_package: str = "psycopg2"):
     return functools.partial(psycopg2.connect, dbname=database, **params)
 
 
+def _connect_sqlite(path: str):
+    # Imports the whole driver module: pickled ``sqlite3.connect`` is
+    # ``_sqlite3.connect``, and an executor that never imports
+    # ``sqlite3`` has no datetime adapters registered.
+    import sqlite3
+
+    return sqlite3.connect(path)
+
+
+def _connect_duckdb(path: str):
+    # ``duckdb.connect`` is a pybind builtin that does not pickle.
+    import duckdb
+
+    return duckdb.connect(path)
+
+
 def make_file_db_connection_factory(dialect: str, db_path: str):
     """Zero-arg picklable connection factory for the file-backed
     dialects (sqlite/duckdb). Each writer partition calls it to open
@@ -84,15 +100,10 @@ def make_file_db_connection_factory(dialect: str, db_path: str):
     or the staging strategy for DuckDB targets)."""
     import functools
 
-    if dialect == "sqlite":
-        import sqlite3
-
-        return functools.partial(sqlite3.connect, db_path)
-    if dialect == "duckdb":
-        import duckdb
-
-        return functools.partial(duckdb.connect, db_path)
-    raise ValueError(f"not a file-backed dialect: {dialect!r}")
+    connect = {"sqlite": _connect_sqlite, "duckdb": _connect_duckdb}.get(dialect)
+    if connect is None:
+        raise ValueError(f"not a file-backed dialect: {dialect!r}")
+    return functools.partial(connect, db_path)
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -9,10 +9,10 @@ piece of that machinery is pytest-verified against fake-pg/sqlite, but
 until this query none of it sat under the round driver's value hash.
 
 ``sink_upsert_final_state`` closes that gap: it drives the REAL sink
-(:func:`..sinks.upsert.upsert_dataframe`, multirow fast path, batch
-bisection, per-key last-wins dedup including the rejected-winner
-replay) into an actual DuckDB database file with a CHECK constraint,
-reads the final table back, and attaches the LoadStats counters as
+(:func:`..sinks.upsert.upsert_dataframe`, DuckDB's Arrow-relation
+chunk form, batch bisection, per-key last-wins dedup including the
+rejected-winner replay) into an actual DuckDB database file with a
+CHECK constraint, reads the final table back, and attaches the LoadStats counters as
 constant columns. The DuckDB oracle replays the same workload
 relationally:
 
@@ -20,11 +20,12 @@ relationally:
   arrival order (poison rows roll back alone; an intra-batch duplicate
   whose winning row is rejected replays its superseded occurrences —
   the round-8 replay fix, now under the driver hash);
-- rows_loaded / rows_rejected follow the sink's documented multirow
-  semantics: a batch dedups to its last occurrence per key, superseded
-  occurrences of a LOADED winner are credited as loaded (semantically
-  applied then overwritten), superseded occurrences of a REJECTED
-  winner replay individually and count by their own outcome.
+- rows_loaded / rows_rejected follow the sink's documented
+  single-statement semantics: a batch dedups to its last occurrence
+  per key, superseded occurrences of a LOADED winner are credited as
+  loaded (semantically applied then overwritten), superseded
+  occurrences of a REJECTED winner replay individually and count by
+  their own outcome.
 
 Determinism: the changelog is a pure function of ``row_number() OVER
 (ORDER BY o_orderkey)`` (fixture-regeneration-proof — no dependence on
@@ -587,13 +588,12 @@ def sink_phase_breakdown(
     a statement-counting DBAPI proxy — no Spark task machinery — so
     the artifact records (a) the exact DuckDB statement count the
     mod-7 bisection stress generates and (b) the pure
-    Python+DuckDB floor; the gap between that floor and the sink
-    phase is Spark task overhead, and anything ABOVE the recorded
+    Python+DuckDB floor of the production chunk writer; the gap
+    between that floor and the sink phase is Spark task overhead, and anything ABOVE the recorded
     sink phase in the suite timing is crowding, not the sink."""
     import time
 
-    from .upsert import _batch_and_upsert
-    from .sql_builder import build_upsert_sql
+    from .upsert import _batch_and_upsert, _dedup_key_indices, chunk_writer
 
     tag = hashlib.md5((sf_dir + "#phases").encode()).hexdigest()[:8]
     scratch = claim_scratch_dir("sink_phases", tag)
@@ -644,10 +644,9 @@ def sink_phase_breakdown(
 
     # driver-side consumer: identical rows + sink code, no Spark task
     # machinery, statements counted through a DBAPI proxy
-    data = [tuple(r) for r in
-            (_changelog(spark, sf_dir)
-             .coalesce(1).sortWithinPartitions("rnk").collect())]
-    cols = ["k", "rnk", "amount", "status"]
+    changelog = _changelog(spark, sf_dir).coalesce(1).sortWithinPartitions("rnk")
+    data = [tuple(r) for r in changelog.collect()]
+    cols = changelog.columns
     dbfile = os.path.join(scratch, "floor.duckdb")
     for lf in (dbfile, dbfile + ".wal"):
         if os.path.exists(lf):
@@ -663,14 +662,14 @@ def sink_phase_breakdown(
     def _counting_factory():
         return _CountingConnection(_connect(dbfile), counts)
 
-    sql = build_upsert_sql(cols, "sink_final_state", ["k"], None, DUCKDB)
-    sql_for = functools.partial(
-        build_upsert_sql, cols, "sink_final_state", ["k"], None, DUCKDB)
+    # the same per-dialect writer and dedup keys upsert_dataframe builds
+    write_chunk = chunk_writer(
+        changelog.schema, "sink_final_state", ["k"], None, DUCKDB)
     t0 = time.perf_counter()
     consumed = list(_batch_and_upsert(
-        iter(data), _counting_factory, sql, _BATCH,
-        use_savepoint=DUCKDB.supports_savepoint, sql_for=sql_for,
-        key_indices=[cols.index("k")],
+        iter(data), _counting_factory, write_chunk, _BATCH,
+        use_savepoint=DUCKDB.supports_savepoint,
+        key_indices=_dedup_key_indices(cols, ["k"], DUCKDB),
     ))
     floor = round(time.perf_counter() - t0, 3)
     os.remove(dbfile)
@@ -700,7 +699,10 @@ def sink_phase_breakdown(
         "method": (
             "phases: min over trials around the query's own code "
             "paths; floor: the identical partition consumer run "
-            "driver-side with a counting DBAPI proxy — the mod-7 "
+            "driver-side with a counting DBAPI proxy, writing each "
+            "chunk through DuckDB's production chunk writer (one "
+            "registered Arrow relation and one INSERT .. SELECT .. ON "
+            "CONFLICT per chunk) — the mod-7 "
             "poison stride makes bisection emit ~80 statements per "
             "256-row batch BY DESIGN (the stress the query exists "
             "to hash). The INVARIANT is the statement count; wall = "

@@ -18,6 +18,28 @@ signature mechanism, re-expressed for Spark:
   (:321-325);
 - per-partition stats folded on the driver (:337-357).
 
+Chunk forms. Every chunk the quarantine sends — a whole batch, a
+bisection half, a single-row retry — goes through one per-dialect
+writer ``write_chunk(cursor, chunk)`` built by :func:`chunk_writer`
+from ``Dialect.chunk_form``:
+
+- ``executemany``: one parameterized statement per row (SQLite, the
+  asyncpg personality);
+- ``values``: ONE multi-row ``INSERT .. VALUES (..), (..)`` with the
+  row params flattened (Postgres; psycopg2's ``execute_values`` at
+  :87-91);
+- ``arrow``: the chunk becomes one ``pyarrow.Table`` registered on
+  the cursor under a reserved name, written by ONE ``INSERT .. SELECT
+  .. FROM <relation> ON CONFLICT ..`` and unregistered in a
+  ``finally`` (DuckDB, where binding a 1,000-row batch's 6,000 ``?``
+  parameters cost ~10x the Arrow scan). The Arrow schema is derived
+  once on the driver from the aligned DataFrame's Spark schema, with
+  tz-naive timestamps, so stored values equal what the Row path binds.
+
+Both single-statement forms fail atomically (so bisection isolates
+poison rows exactly as executemany does) and get keyed last-wins dedup
+plus the rejected-winner replay (see :func:`_batch_and_upsert`).
+
 Differences from the reference, on purpose:
 - DBAPI-agnostic ``connection_factory`` (any picklable zero-arg
   callable) instead of hardwired psycopg2/asyncpg — the same code runs
@@ -43,13 +65,24 @@ cross it exactly once, already column-pruned and cast by
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
-from .sql_builder import Dialect, POSTGRES, build_upsert_sql
+from .sql_builder import (
+    ARROW,
+    EXECUTEMANY,
+    VALUES,
+    Dialect,
+    POSTGRES,
+    build_upsert_sql,
+    select_rows,
+)
 
 
 _MAX_ERRORS = 100  # cap captured messages so a pathological load
@@ -84,14 +117,92 @@ def savepoint_guard(cursor, name: str = "batch_sp"):
         cursor.execute(f"RELEASE SAVEPOINT {name}")
 
 
+ChunkWriter = Callable[[object, list[tuple]], None]
+
+# Reserved name the ``arrow`` form registers each chunk under; it lives
+# only for the one INSERT on the one cursor that registered it.
+_RELATION = "__upsert_chunk"
+
+
+def _write_executemany(sql: str, cursor, chunk: list[tuple]) -> None:
+    cursor.executemany(sql, chunk)
+
+
+class _ValuesWriter:
+    """ONE multi-row VALUES statement per chunk, params flattened;
+    statements are memoized per chunk size — bisection only ever
+    produces O(log2 batch_size) distinct sizes."""
+
+    def __init__(self, render: Callable[[int], str]):
+        self.render = render
+        self.sql = {1: render(1)}  # renders (and validates) on the driver
+
+    def __call__(self, cursor, chunk: list[tuple]) -> None:
+        n = len(chunk)
+        if n not in self.sql:
+            self.sql[n] = self.render(n)
+        cursor.execute(self.sql[n], tuple(p for row in chunk for p in row))
+
+
+def _write_arrow(sql: str, schema: pa.Schema, cursor, chunk: list[tuple]) -> None:
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for f, col in zip(schema, zip(*chunk))],
+        schema=schema,
+    )
+    cursor.register(_RELATION, table)
+    try:
+        cursor.execute(sql)
+    finally:
+        cursor.unregister(_RELATION)
+
+
+def chunk_writer(
+    schema: StructType,
+    table: str,
+    unique_key: list[str] | None,
+    cols_not_for_update: list[str] | None = None,
+    dialect: Dialect = POSTGRES,
+) -> ChunkWriter:
+    """The dialect's ``write_chunk(cursor, chunk)`` for rows shaped like
+    ``schema`` (one of the three chunk forms in the module docstring).
+    Built once on the driver; picklable, so it ships to executors."""
+    columns = schema.fieldNames()
+    upsert = functools.partial(
+        build_upsert_sql, columns, table, unique_key, cols_not_for_update, dialect
+    )
+    if dialect.chunk_form == ARROW:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return functools.partial(
+            _write_arrow,
+            upsert(rows=select_rows(columns, _RELATION)),
+            to_arrow_schema(schema, timestamp_utc=False),
+        )
+    if dialect.chunk_form == VALUES:
+        return _ValuesWriter(upsert)
+    return functools.partial(_write_executemany, upsert())
+
+
+def _dedup_key_indices(
+    columns: list[str], unique_key: list[str] | None, dialect: Dialect
+) -> list[int] | None:
+    """Positions of the key columns when each batch must be deduped to
+    its last occurrence per key: one single-statement ON CONFLICT
+    cannot touch a key twice (Postgres: "cannot affect row a second
+    time"; DuckDB: "can not update the same row twice"). Plain INSERT
+    (no unique_key) never conflicts; executemany applies rows in turn."""
+    if not unique_key or dialect.chunk_form == EXECUTEMANY:
+        return None
+    return [columns.index(k) for k in unique_key]
+
+
 def execute_batch_with_quarantine(
     cursor,
-    sql: str,
+    write_chunk: ChunkWriter,
     batch: list[tuple],
     error_messages: list[str],
     conn=None,
     use_savepoint: bool = True,
-    sql_for: Callable[[int], str] | None = None,
     rejected_out: list[tuple] | None = None,
 ) -> tuple[int, int]:
     """Run one batch with bisection quarantine.
@@ -109,33 +220,22 @@ def execute_batch_with_quarantine(
     rolling back to a savepoint — same quarantine result, one commit
     per surviving chunk instead of one per batch.
 
-    ``sql_for`` (multirow fast path, reference parity with psycopg2's
-    ``execute_values(.., page_size=len(batch))``): when set, each chunk
-    executes as ONE multi-row VALUES statement — ``sql_for(len(chunk))``
-    with the row params flattened — instead of ``executemany``, which
-    on real psycopg2 is one round trip PER ROW. Bisection semantics are
-    identical: the multi-row statement fails atomically, the chunk
-    splits, and single poison rows are still isolated.
+    ``write_chunk`` (:func:`chunk_writer`) sends every chunk — the
+    batch, each bisection half, each single-row retry. In the
+    single-statement forms the chunk fails atomically, splits, and
+    single poison rows are still isolated, exactly as with executemany.
     """
-
-    def _run(chunk: list[tuple]) -> None:
-        if sql_for is not None:
-            flat = tuple(p for row in chunk for p in row)
-            cursor.execute(sql_for(len(chunk)), flat)
-        else:
-            cursor.executemany(sql, chunk)
-
     loaded = rejected = dropped = 0
     worklist: list[list[tuple]] = [batch]
     while worklist:
         chunk = worklist.pop()
         if use_savepoint:
             with savepoint_guard(cursor) as captured:
-                _run(chunk)
+                write_chunk(cursor, chunk)
             err = captured[0]
         else:
             try:
-                _run(chunk)
+                write_chunk(cursor, chunk)
                 conn.commit()
                 err = None
             except Exception as exc:  # noqa: BLE001 — DBAPI errors vary
@@ -171,26 +271,23 @@ def execute_batch_with_quarantine(
 def _batch_and_upsert(
     rows: Iterable,
     connection_factory: Callable[[], object],
-    sql: str,
+    write_chunk: ChunkWriter,
     batch_size: int,
     use_savepoint: bool = True,
-    sql_for: Callable[[int], str] | None = None,
     key_indices: list[int] | None = None,
     pipeline: bool = False,
 ) -> Iterator[tuple[int, int, int, list[str], bool]]:
     """Per-partition consumer (≈ psycopg2_database_helper.py:123-187):
     lazy connect on first row, batch, transact, quarantine, early-abort
     when a full batch is rejected row-by-row. Yields ONE stats tuple
-    (seen, loaded, rejected, messages, aborted). ``sql_for`` enables
-    the multirow VALUES fast path (see execute_batch_with_quarantine);
-    rendered statements are memoized per chunk size — bisection only
-    ever produces O(log2 batch_size) distinct sizes.
+    (seen, loaded, rejected, messages, aborted). ``write_chunk`` sends
+    each chunk (see execute_batch_with_quarantine).
 
     ``key_indices`` (positions of the unique-key columns in each row
-    tuple, required when ``sql_for`` is set for an ON CONFLICT upsert):
-    a single multi-row ``INSERT .. ON CONFLICT DO UPDATE`` on real
-    PostgreSQL errors with "cannot affect row a second time" if the
-    batch holds the same key twice, so each batch is deduplicated to
+    tuple, set by :func:`_dedup_key_indices` for the single-statement
+    chunk forms): a single multi-row ``INSERT .. ON CONFLICT DO
+    UPDATE`` errors if the batch holds the same key twice (Postgres:
+    "cannot affect row a second time"), so each batch is deduplicated to
     its LAST occurrence per key before rendering — the same final state
     the sequential executemany path produces. Superseded duplicates of
     keys whose winning row LOADED count as loaded (they were
@@ -206,34 +303,26 @@ def _batch_and_upsert(
     constraint still counts as loaded here, where sequential
     executemany would have rejected it. Constraint verdicts exist per
     surviving KEY state, not per historical occurrence; a caller
-    needing per-occurrence verdicts disables the fast path (a dialect
-    without ``multirow_values``) and pays one round trip per row, like
-    the reference's asyncpg personality."""
+    needing per-occurrence verdicts uses a dialect whose chunk form is
+    ``executemany`` and pays one round trip per row, like the
+    reference's asyncpg personality."""
     conn = None
     cursor = None
     seen = loaded = rejected = truncated = 0
     messages: list[str] = []
     aborted = False
     batch: list[tuple] = []
-    if sql_for is not None:
-        _raw_sql_for, _sql_cache = sql_for, {}
-
-        def sql_for(k: int, _raw=_raw_sql_for, _cache=_sql_cache) -> str:
-            if k not in _cache:
-                _cache[k] = _raw(k)
-            return _cache[k]
 
     def flush(pending_batch: list[tuple]) -> bool:
         nonlocal conn, cursor, loaded, rejected, truncated
         if not pending_batch:
             return False
         to_send, superseded = pending_batch, 0
-        keyed = sql_for is not None and key_indices
 
         def key_of(row: tuple) -> tuple:
             return tuple(row[j] for j in key_indices)
 
-        if keyed:
+        if key_indices:
             last: dict[tuple, int] = {}
             for i, row in enumerate(pending_batch):
                 last[key_of(row)] = i
@@ -243,12 +332,11 @@ def _batch_and_upsert(
         rejected_rows: list[tuple] = []
         l, r, d = execute_batch_with_quarantine(
             cursor,
-            sql,
+            write_chunk,
             to_send,
             messages,
             conn=conn,
             use_savepoint=use_savepoint,
-            sql_for=sql_for,
             rejected_out=rejected_rows if superseded else None,
         )
         truncated += d
@@ -271,12 +359,11 @@ def _batch_and_upsert(
             for row in replay:
                 rl, rr, rd = execute_batch_with_quarantine(
                     cursor,
-                    sql,
+                    write_chunk,
                     [row],
                     messages,
                     conn=conn,
                     use_savepoint=use_savepoint,
-                    sql_for=sql_for,
                 )
                 l += rl
                 r += rr
@@ -409,30 +496,10 @@ def upsert_dataframe(
     state are identical, and the all-bad early-abort is observed one
     flush boundary later (see _batch_and_upsert).
     """
-    import functools
-
-    columns = list(df.columns)
-    sql = build_upsert_sql(columns, table, unique_key, cols_not_for_update, dialect)
-    # Multirow VALUES fast path (reference psycopg2_database_helper.py:
-    # 87-91 — execute_values with page_size=len(batch) sends one
-    # statement per batch): enabled per-dialect; others keep generic
-    # executemany like the reference's asyncpg personality.
-    sql_for = (
-        functools.partial(
-            build_upsert_sql, columns, table, unique_key, cols_not_for_update, dialect
-        )
-        if dialect.multirow_values
-        else None
+    write_chunk = chunk_writer(
+        df.schema, table, unique_key, cols_not_for_update, dialect
     )
-    # One multi-row ON CONFLICT statement cannot touch the same key
-    # twice (Postgres: "cannot affect row a second time") — flush()
-    # dedups each batch to its last occurrence per key (see
-    # _batch_and_upsert). Plain INSERT (no unique_key) never conflicts.
-    key_indices = (
-        [columns.index(k) for k in unique_key]
-        if sql_for is not None and unique_key
-        else None
-    )
+    key_indices = _dedup_key_indices(list(df.columns), unique_key, dialect)
     _register_self_by_value()
     out = _layout(df, parallelism, partition_cols)
     use_sp = dialect.supports_savepoint
@@ -440,10 +507,9 @@ def upsert_dataframe(
         lambda rows: _batch_and_upsert(
             rows,
             connection_factory,
-            sql,
+            write_chunk,
             batch_size,
             use_savepoint=use_sp,
-            sql_for=sql_for,
             key_indices=key_indices,
             pipeline=pipeline,
         )
@@ -501,6 +567,16 @@ def upsert_via_staging(
 
     staging = staging_table or f"{table.replace('.', '_')}_staging"
     cols = list(df.columns)
+    merge_rows = select_rows(cols, staging)
+    if unique_key:
+        # dedupe staged rows per key (last staged wins) before merging
+        latest = (
+            f"(SELECT {', '.join(cols)}, ROW_NUMBER() OVER (PARTITION BY "
+            f"{', '.join(unique_key)} ORDER BY {_STAGED_SEQ} DESC) AS rn "
+            f"FROM {staging}) s"
+        )
+        merge_rows = select_rows(cols, latest, where="rn = 1")
+    merge_sql = build_upsert_sql(cols, table, unique_key, rows=merge_rows)
     staged_df = df.withColumn(_STAGED_SEQ, F.monotonically_increasing_id())
 
     # 0) ensure the staging table exists (target schema + sequence col)
@@ -546,29 +622,7 @@ def upsert_via_staging(
     conn = connection_factory()
     try:
         cur = conn.cursor()
-        col_list = ", ".join(cols)
-        if unique_key:
-            key_list = ", ".join(unique_key)
-            update_cols = [c for c in cols if c not in set(unique_key)]
-            if update_cols:
-                lhs = ", ".join(update_cols)
-                rhs = ", ".join(f"EXCLUDED.{c}" for c in update_cols)
-                conflict = f" ON CONFLICT ({key_list}) DO UPDATE SET ({lhs}) = ({rhs})" \
-                    if len(update_cols) > 1 else \
-                    f" ON CONFLICT ({key_list}) DO UPDATE SET {update_cols[0]} = EXCLUDED.{update_cols[0]}"
-            else:
-                conflict = f" ON CONFLICT ({key_list}) DO NOTHING"
-            # dedupe staged rows per key (last staged wins) before merging
-            cur.execute(
-                f"INSERT INTO {table} ({col_list}) "
-                f"SELECT {col_list} FROM (SELECT {col_list}, ROW_NUMBER() OVER ("
-                f"PARTITION BY {key_list} ORDER BY {_STAGED_SEQ} DESC) AS rn "
-                f"FROM {staging}) s WHERE rn = 1{conflict}"
-            )
-        else:
-            cur.execute(
-                f"INSERT INTO {table} ({col_list}) SELECT {col_list} FROM {staging}"
-            )
+        cur.execute(merge_sql)
         cur.execute(f"DELETE FROM {staging}")
         conn.commit()
         cur.close()

@@ -279,12 +279,25 @@ def test_bisection_replays_rows_in_original_order(spark, pg):
     # poison at index 2 forces splits; key 1 appears in BOTH halves of
     # the initial chunk. Multirow dedup already collapses them, so this
     # drives the raw quarantine directly to pin the worklist order.
-    from pyspark_postgres_loader_spark.sinks.sql_builder import build_upsert_sql
+    import dataclasses
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from pyspark_postgres_loader_spark.sinks.sql_builder import EXECUTEMANY
     from pyspark_postgres_loader_spark.sinks.upsert import (
+        chunk_writer,
         execute_batch_with_quarantine,
     )
 
-    sql = build_upsert_sql(["id", "v", "n"], "ordq", ["id"], dialect=POSTGRES)
+    schema = StructType([
+        StructField("id", LongType()),
+        StructField("v", StringType()),
+        StructField("n", LongType()),
+    ])
+    write_chunk = chunk_writer(
+        schema, "ordq", ["id"],
+        dialect=dataclasses.replace(POSTGRES, chunk_form=EXECUTEMANY),
+    )
     batch = [
         (1, "first", 0),
         (2, "a", 0),
@@ -294,7 +307,7 @@ def test_bisection_replays_rows_in_original_order(spark, pg):
     ]
     msgs: list[str] = []
     loaded, rejected, _ = execute_batch_with_quarantine(
-        cur, sql, batch, msgs, conn=conn, use_savepoint=True
+        cur, write_chunk, batch, msgs, conn=conn, use_savepoint=True
     )
     conn.commit()
     assert (loaded, rejected) == (4, 1)

@@ -16,7 +16,12 @@ from pyspark_postgres_loader_spark.sinks import (
     build_upsert_sql,
     upsert_dataframe,
 )
-from pyspark_postgres_loader_spark.sinks.sql_builder import ASYNCPG, POSTGRES, SQLITE
+from pyspark_postgres_loader_spark.sinks.sql_builder import (
+    ASYNCPG,
+    POSTGRES,
+    SQLITE,
+    select_rows,
+)
 from pyspark_postgres_loader_spark.sinks.upsert import upsert_via_staging
 
 
@@ -70,6 +75,17 @@ def test_upsert_sql_asyncpg_numbered_placeholders():
 def test_upsert_sql_missing_key_col_raises():
     with pytest.raises(ValueError, match="unique key"):
         build_upsert_sql(["a"], "t", ["id"])
+
+
+def test_upsert_sql_select_row_source():
+    # the DuckDB chunk relation and the staging merge share the tail
+    sql = build_upsert_sql(
+        ["id", "a"], "t", ["id"], rows=select_rows(["id", "a"], "rel", where="true")
+    )
+    assert sql == (
+        "INSERT INTO t (id, a) SELECT id, a FROM rel WHERE true"
+        " ON CONFLICT (id) DO UPDATE SET a = EXCLUDED.a"
+    )
 
 
 def test_cols_not_for_update_excluded():
@@ -294,7 +310,7 @@ def test_empty_partitions_never_connect(spark, tmp_path):
     assert stats.rows_loaded == 1 and stats.partitions == 8
 
 
-# --- real-DuckDB quarantine path (multirow fast path + no-savepoint
+# --- real-DuckDB quarantine path (Arrow-relation chunks + no-savepoint
 # commit-per-chunk + autocommit rollback tolerance + rejected-winner
 # replay, all against an actual database file with a CHECK constraint)
 
@@ -335,7 +351,7 @@ def test_duckdb_multirow_quarantine_replay(spark, tmp_path):
 
 
 def test_duckdb_multirow_batch_bisection(spark, tmp_path):
-    """A poison row inside a multi-row VALUES statement bisects down to
+    """A poison row inside one Arrow-relation INSERT bisects down to
     the single bad row on DuckDB (no SAVEPOINT: commit-per-chunk with
     tolerated rollback-on-autocommit), loading every good row."""
     duckdb_mod = pytest.importorskip("duckdb")
