@@ -26,15 +26,14 @@ Reference: no counterpart (SURVEY.md §2l multimodal extension).
 
 from __future__ import annotations
 
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .mp3 import crc16_mp3
+from .walkbatch import decode_walk
 
 # sampling_frequency_index → Hz (13818-7 table; 13..14 reserved,
 # 15 = escape, forbidden in ADTS)
@@ -171,59 +170,30 @@ def _aac_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _aac_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _aac_key(doc_id: int) -> tuple:
+    return (doc_id % _AAC_GROUPS, doc_id % 11 == 9, doc_id % 17 == 8,
+            doc_id % 19 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _AAC_GROUPS
-        key = (g, doc_id % 11 == 9, doc_id % 17 == 8, doc_id % 19 == 5)
-        if key not in cache:
-            try:
-                profile, sr, chans, frames = decode_adts_frames(
-                    _aac_payload(doc_id)
-                )
-                total_blocks = sum(fr["n_blocks"] for fr in frames)
-                total_samples = total_blocks * _SAMPLES_PER_BLOCK
-                wsum = 0
-                for f, fr in enumerate(frames):
-                    plen = fr["length"] - (9 if fr["crc"] else 7)
-                    wsum += (f + 1) * sum(
-                        (i + 1) * ((5 * i + 13 * f + g) % 251)
-                        for i in range(plen)
-                    )
-                cache[key] = (
-                    "decoded", profile, sr, chans, len(frames),
-                    total_samples, total_samples * 1_000_000 // sr,
-                    sum(fr["length"] for fr in frames), wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "profile", "sample_rate", "channels",
-                "n_frames", "total_samples", "duration_us", "frame_bytes",
-                "payload_wsum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "profile": "int32", "sample_rate": "int32",
-                "channels": "int32", "n_frames": "int32",
-                "total_samples": "int64", "duration_us": "int64",
-                "frame_bytes": "int64", "payload_wsum": "int64",
-            }
+def _aac_facts(doc_id: int) -> tuple:
+    g = doc_id % _AAC_GROUPS
+    profile, sr, chans, frames = decode_adts_frames(
+        _aac_payload(doc_id)
+    )
+    total_blocks = sum(fr["n_blocks"] for fr in frames)
+    total_samples = total_blocks * _SAMPLES_PER_BLOCK
+    wsum = 0
+    for f, fr in enumerate(frames):
+        plen = fr["length"] - (9 if fr["crc"] else 7)
+        wsum += (f + 1) * sum(
+            (i + 1) * ((5 * i + 13 * f + g) % 251)
+            for i in range(plen)
         )
+    return (
+        "decoded", profile, sr, chans, len(frames),
+        total_samples, total_samples * 1_000_000 // sr,
+        sum(fr["length"] for fr in frames), wsum,
+    )
 
 
 def _aac_oracle() -> str:
@@ -336,11 +306,10 @@ def audio_aac_adts_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): per-payload map, ~7-9 header bytes read per
     frame — codec census at I/O cost."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _aac_batches,
-        schema=(
-            "doc_id long, status string, profile int, sample_rate int, "
-            "channels int, n_frames int, total_samples long, "
-            "duration_us long, frame_bytes long, payload_wsum long"
-        ),
+    return decode_walk(
+        d, "_aac_batches", _aac_key, _aac_facts,
+        "doc_id long, status string, profile int, sample_rate int, "
+        "channels int, n_frames int, total_samples long, duration_us long, "
+        "frame_bytes long, payload_wsum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

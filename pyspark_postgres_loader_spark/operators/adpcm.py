@@ -25,14 +25,13 @@ Reference: no counterpart (SURVEY.md §2l multimodal extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 # the standard IMA step-size table (89 entries) and index adjustments
 _STEPS = [
@@ -205,32 +204,15 @@ def _adpcm_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _adpcm_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple[int, bool], tuple] = {}
+def _adpcm_key(doc_id: int) -> tuple:
+    return (doc_id % _ADPCM_GROUPS, doc_id % 11 == 2)
 
-    def facts(doc_id: int) -> tuple:
-        key = (doc_id % _ADPCM_GROUPS, doc_id % 11 == 2)
-        if key not in cache:
-            try:
-                samples, _rate = decode_wav_ima(_adpcm_payload(doc_id))
-                ssum = sum(samples)
-                wsum = sum((i + 1) * v for i, v in enumerate(samples))
-                cache[key] = ("decoded", len(samples), ssum, wsum)
-            except Exception:  # noqa: BLE001
-                cache[key] = ("corrupt", 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out, columns=["doc_id", "status", "n_samples", "sample_sum",
-                          "wsample_sum"],
-        ).astype(
-            {"doc_id": "int64", "n_samples": "int32",
-             "sample_sum": "int64", "wsample_sum": "int64"}
-        )
+def _adpcm_facts(doc_id: int) -> tuple:
+    samples, _rate = decode_wav_ima(_adpcm_payload(doc_id))
+    ssum = sum(samples)
+    wsum = sum((i + 1) * v for i, v in enumerate(samples))
+    return ("decoded", len(samples), ssum, wsum)
 
 
 def _adpcm_oracle() -> str:
@@ -334,10 +316,8 @@ def audio_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): Arrow-batched ``mapInPandas`` map; at 4
     bits/sample this is the cheapest audio decode per payload byte."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _adpcm_batches,
-        schema=(
-            "doc_id long, status string, n_samples int, "
-            "sample_sum long, wsample_sum long"
-        ),
+    return decode_walk(
+        d, "_adpcm_batches", _adpcm_key, _adpcm_facts,
+        "doc_id long, status string, n_samples int, sample_sum long, "
+        "wsample_sum long",
     ).transform(_presentation_sort, "doc_id")

@@ -10,10 +10,11 @@ applicationId so a DataFrame never leaks across sessions (the
 driver's vanilla rehearsal and a fresh bench process get fresh ids
 and rebuild); fixture inputs never change under a live session, so
 entries cannot go stale. Entries from dead sessions are evicted on
-the next build (r10 ADVICE precedent), unpersisting their
-checkpointed blocks when the owning context is still alive
-(r15 ADVICE: eviction used to drop the dict entry but leak the
-RDD blocks of a same-JVM predecessor session).
+the next build (r10 ADVICE precedent). Eviction drops the reference
+only: ``unpersist()`` cannot free localCheckpoint blocks (they are not
+in the cacheManager; probed on PySpark 4.1.2, ``getRDDStorageInfo``
+is identical with and without the call), so the blocks are freed by
+ContextCleaner once unreferenced, or when their context stops.
 
 Build cost is recorded per substrate in ``BUILD_LOG`` (name →
 seconds, most recent build wins) so bench.py can surface substrate
@@ -41,18 +42,15 @@ def app_scoped(
     build: Callable[[], DataFrame],
 ) -> DataFrame:
     """Return the memoized eager localCheckpoint of ``build()`` for
-    ``key_tail`` under the CURRENT Spark application, evicting
-    (and unpersisting) entries left by dead sessions."""
+    ``key_tail`` under the CURRENT Spark application, evicting entries
+    left by dead sessions (their blocks go with ContextCleaner or their
+    stopped context)."""
     app_id = spark.sparkContext.applicationId
     key = (app_id,) + key_tail
     df = cache.get(key)
     if df is None:
         for stale in [k for k in cache if k[0] != app_id]:
-            old = cache.pop(stale)
-            try:  # release the checkpoint blocks if the old context
-                old.unpersist()  # is this same JVM; a stopped context
-            except Exception:  # noqa: BLE001 — already freed everything
-                pass
+            cache.pop(stale)
         t0 = time.perf_counter()
         df = build().localCheckpoint(eager=True)
         BUILD_LOG["/".join(str(p) for p in key_tail)] = round(

@@ -46,9 +46,7 @@ Message.fbs/Schema.fbs/File.fbs (public); no repo counterpart
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -56,6 +54,7 @@ from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .lz4frame import decompress_lz4_frame
 from .zstdfse import decompress_frame
+from .walkbatch import decode_walk
 
 _MAGIC = b"ARROW1"
 
@@ -453,45 +452,20 @@ def _ar_payload(doc_id: int) -> bytes:
 # ------------------------------------------------ spark + oracle
 
 
-def _ar_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _ar_key(doc_id: int) -> tuple:
+    return (doc_id % _AR_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _AR_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_arrow_ipc(_ar_payload(doc_id))
-                ids, vals = f["columns"][0], f["columns"][1]
-                cache[key] = (
-                    "decoded", f["n_batches"], f["n_rows"],
-                    sum(ids),
-                    sum(v for v in vals if v is not None),
-                    f["null_count"],
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = ("mismatch" if "mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_batches", "n_rows",
-                     "id_sum", "val_sum", "n_nulls"],
-        ).astype(
-            {"doc_id": "int64", "n_batches": "int32",
-             "n_rows": "int64", "id_sum": "int64",
-             "val_sum": "int64", "n_nulls": "int64"}
-        )
+def _ar_facts(doc_id: int) -> tuple:
+    f = walk_arrow_ipc(_ar_payload(doc_id))
+    ids, vals = f["columns"][0], f["columns"][1]
+    return (
+        "decoded", f["n_batches"], f["n_rows"],
+        sum(ids),
+        sum(v for v in vals if v is not None),
+        f["null_count"],
+    )
 
 
 def _ar_oracle() -> str:
@@ -559,10 +533,9 @@ def ingest_arrow_ipc_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning path; Arrow-batched mapInPandas, parallel across files,
     integer facts only re-entering the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _ar_batches,
-        schema=(
-            "doc_id long, status string, n_batches int, n_rows long, "
-            "id_sum long, val_sum long, n_nulls long"
-        ),
+    return decode_walk(
+        d, "_ar_batches", _ar_key, _ar_facts,
+        "doc_id long, status string, n_batches int, n_rows long, id_sum long, "
+        "val_sum long, n_nulls long",
+        value_errors=(("mismatch", "mismatch"),),
     ).transform(_presentation_sort, "doc_id")

@@ -47,9 +47,7 @@ counterpart (SURVEY.md §2l extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -65,6 +63,7 @@ from .arrowipc import (
     _schema_fields,
     _u32,
 )
+from .walkbatch import decode_walk
 
 # ------------------------------------------------ stream walk
 
@@ -240,45 +239,20 @@ def _as_payload(doc_id: int) -> bytes:
 # ------------------------------------------------ spark + oracle
 
 
-def _as_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _as_key(doc_id: int) -> tuple:
+    return (doc_id % _AS_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _AS_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_arrow_ipc_stream(_as_payload(doc_id))
-                ids, vals = f["columns"][0], f["columns"][1]
-                cache[key] = (
-                    "decoded", f["n_batches"], f["n_rows"],
-                    sum(ids),
-                    sum(v for v in vals if v is not None),
-                    f["null_count"],
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = ("mismatch" if "mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_batches", "n_rows",
-                     "id_sum", "val_sum", "n_nulls"],
-        ).astype(
-            {"doc_id": "int64", "n_batches": "int32",
-             "n_rows": "int64", "id_sum": "int64",
-             "val_sum": "int64", "n_nulls": "int64"}
-        )
+def _as_facts(doc_id: int) -> tuple:
+    f = walk_arrow_ipc_stream(_as_payload(doc_id))
+    ids, vals = f["columns"][0], f["columns"][1]
+    return (
+        "decoded", f["n_batches"], f["n_rows"],
+        sum(ids),
+        sum(v for v in vals if v is not None),
+        f["null_count"],
+    )
 
 
 def _as_oracle() -> str:
@@ -350,10 +324,9 @@ def ingest_arrow_ipc_stream_walk(
     documents via Arrow-batched mapInPandas; integer facts only
     re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _as_batches,
-        schema=(
-            "doc_id long, status string, n_batches int, n_rows long, "
-            "id_sum long, val_sum long, n_nulls long"
-        ),
+    return decode_walk(
+        d, "_as_batches", _as_key, _as_facts,
+        "doc_id long, status string, n_batches int, n_rows long, id_sum long, "
+        "val_sum long, n_nulls long",
+        value_errors=(("mismatch", "mismatch"),),
     ).transform(_presentation_sort, "doc_id")

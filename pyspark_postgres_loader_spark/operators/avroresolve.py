@@ -40,9 +40,7 @@ no repo counterpart (SURVEY.md §2l extension).
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -56,6 +54,7 @@ from .avrowalk import (
     encode_long,
     zigzag_long,
 )
+from .walkbatch import decode_walk
 
 _PRIMITIVES = {"null", "boolean", "int", "long", "float", "double",
                "bytes", "string"}
@@ -355,46 +354,21 @@ def _rs_case(doc_id: int) -> tuple[bytes, dict]:
 # ------------------------------------------------ spark + oracle
 
 
-def _rs_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _rs_key(doc_id: int) -> tuple:
+    return (doc_id % _RS_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _RS_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                blob, reader = _rs_case(doc_id)
-                f = walk_avro_resolved(blob, reader)
-                # reader order: (name bytes, val double, id long, bonus)
-                name_len = sum(len(r[0]) for r in f["records"])
-                val_sum = int(sum(r[1] for r in f["records"]))
-                id_sum = sum(r[2] for r in f["records"])
-                bonus_sum = sum(r[3] for r in f["records"])
-                cache[key] = ("decoded", len(f["records"]),
-                              id_sum, val_sum, name_len, bonus_sum)
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = ("no_default" if "no default" in str(exc)
-                          else "corrupt")
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_records", "id_sum",
-                     "val_sum", "name_len_sum", "bonus_sum"],
-        ).astype(
-            {"doc_id": "int64", "n_records": "int64", "id_sum": "int64",
-             "val_sum": "int64", "name_len_sum": "int64",
-             "bonus_sum": "int64"}
-        )
+def _rs_facts(doc_id: int) -> tuple:
+    blob, reader = _rs_case(doc_id)
+    f = walk_avro_resolved(blob, reader)
+    # reader order: (name bytes, val double, id long, bonus)
+    name_len = sum(len(r[0]) for r in f["records"])
+    val_sum = int(sum(r[1] for r in f["records"]))
+    id_sum = sum(r[2] for r in f["records"])
+    bonus_sum = sum(r[3] for r in f["records"])
+    return ("decoded", len(f["records"]),
+                  id_sum, val_sum, name_len, bonus_sum)
 
 
 def _rs_oracle() -> str:
@@ -463,10 +437,9 @@ def ingest_avro_schema_resolution(
     Arrow-batched mapInPandas; parallel across files; integer facts
     only re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _rs_batches,
-        schema=(
-            "doc_id long, status string, n_records long, id_sum long, "
-            "val_sum long, name_len_sum long, bonus_sum long"
-        ),
+    return decode_walk(
+        d, "_rs_batches", _rs_key, _rs_facts,
+        "doc_id long, status string, n_records long, id_sum long, "
+        "val_sum long, name_len_sum long, bonus_sum long",
+        value_errors=(("no default", "no_default"),),
     ).transform(_presentation_sort, "doc_id")

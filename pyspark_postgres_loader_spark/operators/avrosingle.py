@@ -49,9 +49,7 @@ from __future__ import annotations
 
 import json
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -62,6 +60,7 @@ from .avrowalk import (
     _record_fields,
     encode_long,
 )
+from .walkbatch import decode_walk
 
 _EMPTY64 = 0xC15D213AA4D7A795
 
@@ -298,42 +297,16 @@ _SO_STORE = {
     schema_fingerprint(_METRIC_SCHEMA): _METRIC_SCHEMA,
 }
 
-_SO_FACT_MEMO: dict[tuple, tuple] = {}
+def _so_key(doc_id: int) -> tuple:
+    return (doc_id % _SO_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2)
 
 
 def _so_facts(doc_id: int) -> tuple:
-    g = doc_id % _SO_GROUPS
-    key = (g, doc_id % 11 == 3, doc_id % 17 == 2)
-    if key not in _SO_FACT_MEMO:
-        try:
-            f = walk_single_objects(_so_payload(doc_id), _SO_STORE)
-            _SO_FACT_MEMO[key] = (
-                "decoded", f["n_messages"], f["n_doc"], f["n_metric"],
-                f["id_sum"], f["val_sum"], f["name_len_sum"],
-            )
-        except ValueError as exc:
-            status = ("unknown_schema" if "unknown schema" in str(exc)
-                      else "corrupt")
-            _SO_FACT_MEMO[key] = (status, 0, 0, 0, 0, 0, 0)
-        except Exception:  # noqa: BLE001 — malformed bytes quarantine
-            _SO_FACT_MEMO[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-    return _SO_FACT_MEMO[key]
-
-
-def _so_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + _so_facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_messages", "n_doc",
-                     "n_metric", "id_sum", "val_sum", "name_len_sum"],
-        ).astype({
-            "doc_id": "int64", "n_messages": "int64", "n_doc": "int64",
-            "n_metric": "int64", "id_sum": "int64", "val_sum": "int64",
-            "name_len_sum": "int64",
-        })
+    f = walk_single_objects(_so_payload(doc_id), _SO_STORE)
+    return (
+        "decoded", f["n_messages"], f["n_doc"], f["n_metric"],
+        f["id_sum"], f["val_sum"], f["name_len_sum"],
+    )
 
 
 def _so_oracle() -> str:
@@ -401,11 +374,10 @@ def ingest_avro_single_object(
     state — embarrassingly parallel; the 8-byte fingerprint lookup
     rejects foreign messages before any decode work."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _so_batches,
-        schema=(
-            "doc_id long, status string, n_messages long, n_doc long, "
-            "n_metric long, id_sum long, val_sum long, "
-            "name_len_sum long"
-        ),
+    return decode_walk(
+        d, "_so_batches", _so_key, _so_facts,
+        "doc_id long, status string, n_messages long, n_doc long, "
+        "n_metric long, id_sum long, val_sum long, name_len_sum long",
+        value_errors=(("unknown schema", "unknown_schema"),),
+        worker_memo=True,
     ).transform(_presentation_sort, "doc_id")

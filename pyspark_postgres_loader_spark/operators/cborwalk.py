@@ -31,14 +31,13 @@ Reference: RFC 8949 (public); no repo counterpart (SURVEY.md §2l).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _BREAK = object()
 
@@ -310,41 +309,18 @@ def _cb_payload(doc_id: int) -> bytes:
     return blob
 
 
-def _cb_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _cb_key(doc_id: int) -> tuple:
+    return (doc_id % _CB_GROUPS, doc_id % 11 == 5, doc_id % 17 == 9,
+            doc_id % 13 == 8, doc_id % 19 == 4)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _CB_GROUPS
-        key = (g, doc_id % 11 == 5, doc_id % 17 == 9,
-               doc_id % 13 == 8, doc_id % 19 == 4)
-        if key not in cache:
-            try:
-                f = walk_cbor(_cb_payload(doc_id))
-                cache[key] = (
-                    f["status"], f["n_items"], f["int_sum"],
-                    f["text_bytes"], f["bstr_bytes"],
-                    f["float_milli"], f["max_depth"],
-                )
-            except ValueError:
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_items", "int_sum",
-                     "text_bytes", "bstr_bytes", "float_milli",
-                     "max_depth"],
-        ).astype(
-            {"doc_id": "int64", "n_items": "int64", "int_sum": "int64",
-             "text_bytes": "int64", "bstr_bytes": "int64",
-             "float_milli": "int64", "max_depth": "int32"}
-        )
+def _cb_facts(doc_id: int) -> tuple:
+    f = walk_cbor(_cb_payload(doc_id))
+    return (
+        f["status"], f["n_items"], f["int_sum"],
+        f["text_bytes"], f["bstr_bytes"],
+        f["float_milli"], f["max_depth"],
+    )
 
 
 def _cb_oracle() -> str:
@@ -451,11 +427,8 @@ def ingest_cbor_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, integer facts only; the only shuffle is the harness
     orderBy."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _cb_batches,
-        schema=(
-            "doc_id long, status string, n_items long, int_sum long, "
-            "text_bytes long, bstr_bytes long, float_milli long, "
-            "max_depth int"
-        ),
+    return decode_walk(
+        d, "_cb_batches", _cb_key, _cb_facts,
+        "doc_id long, status string, n_items long, int_sum long, "
+        "text_bytes long, bstr_bytes long, float_milli long, max_depth int",
     ).transform(_presentation_sort, "doc_id")

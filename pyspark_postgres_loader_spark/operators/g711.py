@@ -38,7 +38,6 @@ surface (SURVEY.md §2 extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .walkbatch import decode_walk
 
 _FMT_ALAW = 6
 _FMT_MULAW = 7
@@ -180,44 +180,21 @@ def _g7_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_G7_FACT_MEMO: dict[tuple, tuple] = {}
+def _g7_key(doc_id: int) -> tuple:
+    return (doc_id % _G7_GROUPS, doc_id % 11 == 3, doc_id % 13 == 5)
 
 
-def _g7_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _G7_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _G7_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = decode_wav_g711(_g7_payload(doc_id))
-                s = f["samples"]
-                pcm_sum = int(s.sum())
-                pcm_abs = int(abs(s).sum())
-                wsum = int(
-                    ((pd.RangeIndex(len(s)).values + 1) * s).sum())
-                cache[key] = (
-                    "decoded", f["fmt"], f["rate"], f["n_samples"],
-                    pcm_sum, pcm_abs, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", "", 0, 0, 0, 0, 0)
-            except ValueError:
-                cache[key] = ("corrupt", "", 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", "", 0, 0, 0, 0, 0)
-        return cache[key]
-
-    cols = ["doc_id", "status", "fmt", "rate", "n_samples",
-            "pcm_sum", "pcm_abs", "pcm_wsum"]
-    ints = [c for c in cols if c not in ("status", "fmt")]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in ints})
+def _g7_facts(doc_id: int) -> tuple:
+    f = decode_wav_g711(_g7_payload(doc_id))
+    s = f["samples"]
+    pcm_sum = int(s.sum())
+    pcm_abs = int(abs(s).sum())
+    wsum = int(
+        ((pd.RangeIndex(len(s)).values + 1) * s).sum())
+    return (
+        "decoded", f["fmt"], f["rate"], f["n_samples"],
+        pcm_sum, pcm_abs, wsum,
+    )
 
 
 def _g7_oracle() -> str:
@@ -305,10 +282,10 @@ def audio_g711_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _g7_batches,
-        schema=("doc_id long, status string, fmt string, rate long, "
-                "n_samples long, pcm_sum long, pcm_abs long, "
-                "pcm_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_g7_batches", _g7_key, _g7_facts,
+        "doc_id long, status string, fmt string, rate long, n_samples long, "
+        "pcm_sum long, pcm_abs long, pcm_wsum long",
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

@@ -36,14 +36,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
 _FLG_RESERVED = 0xE0
@@ -212,53 +211,25 @@ def _gz_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _gz_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _gz_key(doc_id: int) -> tuple:
+    return (doc_id % _GZ_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _GZ_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                members = walk_gzip_members(_gz_payload(doc_id))
-                total = sum(len(c) for _n, c in members)
-                csum = wsum = 0
-                off = 0
-                for _name, c in members:
-                    for i, b in enumerate(c):
-                        csum += b
-                        wsum += (off + i + 1) * b
-                    off += len(c)
-                names_len = sum(len(n) for n, _c in members)
-                cache[key] = (
-                    "decoded", len(members), total, csum, wsum, names_len,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_members", "total_bytes",
-                "content_sum", "wsum", "names_len",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_members": "int32",
-                "total_bytes": "int64", "content_sum": "int64",
-                "wsum": "int64", "names_len": "int32",
-            }
-        )
+def _gz_facts(doc_id: int) -> tuple:
+    members = walk_gzip_members(_gz_payload(doc_id))
+    total = sum(len(c) for _n, c in members)
+    csum = wsum = 0
+    off = 0
+    for _name, c in members:
+        for i, b in enumerate(c):
+            csum += b
+            wsum += (off + i + 1) * b
+        off += len(c)
+    names_len = sum(len(n) for n, _c in members)
+    return (
+        "decoded", len(members), total, csum, wsum, names_len,
+    )
 
 
 def _gz_oracle() -> str:
@@ -338,10 +309,9 @@ def ingest_gzip_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): Arrow-batched mapInPandas decode map; only
     integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _gz_batches,
-        schema=(
-            "doc_id long, status string, n_members int, total_bytes long, "
-            "content_sum long, wsum long, names_len int"
-        ),
+    return decode_walk(
+        d, "_gz_batches", _gz_key, _gz_facts,
+        "doc_id long, status string, n_members int, total_bytes long, "
+        "content_sum long, wsum long, names_len int",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

@@ -35,15 +35,14 @@ spec; no repo counterpart (SURVEY.md §2l extension).
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import _compress_block, encode_long, walk_avro
+from .walkbatch import decode_walk
 
 _IC_GROUPS = 8
 
@@ -228,52 +227,20 @@ def _ic_payloads(doc_id: int) -> tuple[bytes, dict[str, bytes]]:
     return mlist, store
 
 
-def _ic_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _ic_key(doc_id: int) -> tuple:
+    return (doc_id % _IC_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5, doc_id % 19 == 7)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _IC_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2,
-               doc_id % 13 == 5, doc_id % 19 == 7)
-        if key not in cache:
-            try:
-                mlist, store = _ic_payloads(doc_id)
-                f = walk_iceberg_snapshot(mlist, store)
-                cache[key] = (
-                    "decoded", f["n_manifests"], f["n_entries"],
-                    f["live_files"], f["deleted_files"],
-                    f["live_rows"], f["live_bytes"],
-                    f["null_partitions"],
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                msg = str(exc)
-                status = (
-                    "missing" if "missing manifest" in msg
-                    else "mismatch" if "sync marker mismatch" in msg
-                    else "corrupt"
-                )
-                cache[key] = (status, 0, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_manifests", "n_entries",
-                     "live_files", "deleted_files", "live_rows",
-                     "live_bytes", "null_partitions"],
-        ).astype(
-            {"doc_id": "int64", "n_manifests": "int32",
-             "n_entries": "int64", "live_files": "int64",
-             "deleted_files": "int64", "live_rows": "int64",
-             "live_bytes": "int64", "null_partitions": "int64"}
-        )
+def _ic_facts(doc_id: int) -> tuple:
+    mlist, store = _ic_payloads(doc_id)
+    f = walk_iceberg_snapshot(mlist, store)
+    return (
+        "decoded", f["n_manifests"], f["n_entries"],
+        f["live_files"], f["deleted_files"],
+        f["live_rows"], f["live_bytes"],
+        f["null_partitions"],
+    )
 
 
 def _ic_oracle() -> str:
@@ -351,11 +318,13 @@ def iceberg_manifest_snapshot(
     metadata tree, never data files — the point of the format; the
     walk is Arrow-batched and parallel across fixtures."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _ic_batches,
-        schema=(
-            "doc_id long, status string, n_manifests int, "
-            "n_entries long, live_files long, deleted_files long, "
-            "live_rows long, live_bytes long, null_partitions long"
+    return decode_walk(
+        d, "_ic_batches", _ic_key, _ic_facts,
+        "doc_id long, status string, n_manifests int, n_entries long, "
+        "live_files long, deleted_files long, live_rows long, "
+        "live_bytes long, null_partitions long",
+        value_errors=(
+            ("missing manifest", "missing"),
+            ("sync marker mismatch", "mismatch"),
         ),
     ).transform(_presentation_sort, "doc_id")

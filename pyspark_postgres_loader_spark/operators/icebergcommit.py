@@ -45,9 +45,7 @@ repo counterpart (SURVEY.md §2l extension).
 
 from __future__ import annotations
 
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -63,6 +61,7 @@ from .iceberg import (
     _ic_store,
     walk_iceberg_snapshot,
 )
+from .walkbatch import decode_walk
 
 
 def _new_entries(g: int) -> list[tuple[int, int, int, int | None]]:
@@ -127,6 +126,8 @@ _ICC_ZERO = (0,) * 8
 
 
 def _icc_facts(doc_id: int) -> tuple:
+    # classifies its own faults: a failed commit is 'corrupt_commit',
+    # not decode_walk's 'corrupt', so this never raises
     g = doc_id % _IC_GROUPS
     corrupt = doc_id % 11 == 3
     missing = doc_id % 17 == 2 and not corrupt
@@ -173,29 +174,9 @@ def _icc_facts(doc_id: int) -> tuple:
         return ("corrupt_commit",) + _ICC_ZERO
 
 
-def _icc_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
-
-    def facts(doc_id: int) -> tuple:
-        key = (doc_id % _IC_GROUPS, doc_id % 11 == 3,
-               doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            cache[key] = _icc_facts(doc_id)
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_manifests", "n_entries",
-            "live_files", "deleted_files", "live_rows", "live_bytes",
-            "null_partitions", "eq_fold"]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {"doc_id": "int64", "n_manifests": "int32",
-             "n_entries": "int64", "live_files": "int64",
-             "deleted_files": "int64", "live_rows": "int64",
-             "live_bytes": "int64", "null_partitions": "int64",
-             "eq_fold": "int32"})
+def _icc_key(doc_id: int) -> tuple:
+    return (doc_id % _IC_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
 def _icc_oracle() -> str:
@@ -297,12 +278,9 @@ def iceberg_commit_roundtrip(
     ('unsupported'). See module docstring for the closure argument
     and scale notes."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _icc_batches,
-        schema=(
-            "doc_id long, status string, n_manifests int, "
-            "n_entries long, live_files long, deleted_files long, "
-            "live_rows long, live_bytes long, null_partitions long, "
-            "eq_fold int"
-        ),
+    return decode_walk(
+        d, "_icc_batches", _icc_key, _icc_facts,
+        "doc_id long, status string, n_manifests int, n_entries long, "
+        "live_files long, deleted_files long, live_rows long, "
+        "live_bytes long, null_partitions long, eq_fold int",
     ).transform(_presentation_sort, "doc_id")

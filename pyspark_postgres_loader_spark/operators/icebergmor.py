@@ -43,9 +43,7 @@ extension; VERDICT r12 task 3).
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -53,6 +51,7 @@ from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import encode_long, walk_avro
 from .iceberg import _avro_container, _enc_str
+from .walkbatch import decode_walk
 
 _IM_GROUPS = 8
 
@@ -390,59 +389,20 @@ def _im_del_manifest(g: int, sync: bytes, pd0_count: int) -> bytes:
     return _avro_container(_ENTRY_SCHEMA, entries, "null", sync)
 
 
-_IM_FACT_MEMO: dict[tuple, tuple] = {}
+def _im_key(doc_id: int) -> tuple:
+    return (doc_id % _IM_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5, doc_id % 19 == 7)
 
-_IM_ZERO = (0, 0, 0, 0, 0, 0, 0, 0)
 
-
-def _im_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _IM_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _IM_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2,
-               doc_id % 13 == 5, doc_id % 19 == 7)
-        if key not in cache:
-            try:
-                f = walk_iceberg_mor(*_im_payloads(doc_id))
-                cache[key] = (
-                    "decoded", f["n_data_manifests"],
-                    f["n_delete_manifests"], f["n_delete_files"],
-                    f["live_rows_pre"], f["pos_applied"],
-                    f["eq_matched"], f["overlap_both"],
-                    f["live_rows_mor"],
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _IM_ZERO
-            except ValueError as exc:
-                msg = str(exc)
-                status = (
-                    "missing" if "missing" in msg
-                    else "invalid" if "out of range" in msg
-                    else "corrupt"
-                )
-                cache[key] = (status,) + _IM_ZERO
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _IM_ZERO
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_data_manifests",
-                     "n_delete_manifests", "n_delete_files",
-                     "live_rows_pre", "pos_applied", "eq_matched",
-                     "overlap_both", "live_rows_mor"],
-        ).astype(
-            {"doc_id": "int64", "n_data_manifests": "int32",
-             "n_delete_manifests": "int32", "n_delete_files": "int32",
-             "live_rows_pre": "int64", "pos_applied": "int64",
-             "eq_matched": "int64", "overlap_both": "int64",
-             "live_rows_mor": "int64"}
-        )
+def _im_facts(doc_id: int) -> tuple:
+    f = walk_iceberg_mor(*_im_payloads(doc_id))
+    return (
+        "decoded", f["n_data_manifests"],
+        f["n_delete_manifests"], f["n_delete_files"],
+        f["live_rows_pre"], f["pos_applied"],
+        f["eq_matched"], f["overlap_both"],
+        f["live_rows_mor"],
+    )
 
 
 def _im_oracle() -> str:
@@ -517,12 +477,12 @@ def iceberg_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     kill sets become an anti-join on (file, pos) plus a broadcast of
     the equality ids — Spark-Iceberg's own physical strategy."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _im_batches,
-        schema=(
-            "doc_id long, status string, n_data_manifests int, "
-            "n_delete_manifests int, n_delete_files int, "
-            "live_rows_pre long, pos_applied long, eq_matched long, "
-            "overlap_both long, live_rows_mor long"
-        ),
+    return decode_walk(
+        d, "_im_batches", _im_key, _im_facts,
+        "doc_id long, status string, n_data_manifests int, "
+        "n_delete_manifests int, n_delete_files int, live_rows_pre long, "
+        "pos_applied long, eq_matched long, overlap_both long, "
+        "live_rows_mor long",
+        value_errors=(("missing", "missing"), ("out of range", "invalid")),
+        worker_memo=True,
     ).transform(_presentation_sort, "doc_id")

@@ -42,9 +42,7 @@ no repo counterpart (SURVEY.md §2l extension).
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -52,6 +50,7 @@ from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import encode_long, walk_avro
 from .iceberg import _avro_container, _enc_str
+from .walkbatch import decode_walk
 
 _IP_GROUPS = 8
 
@@ -216,9 +215,6 @@ def walk_iceberg_pruning(
     }
 
 
-_IP_FACT_MEMO: dict[tuple, tuple] = {}
-
-
 def _ip_payloads(doc_id: int) -> tuple[bytes, dict[str, bytes]]:
     g = doc_id % _IP_GROUPS
     corrupt = doc_id % 11 == 3
@@ -230,41 +226,18 @@ def _ip_payloads(doc_id: int) -> tuple[bytes, dict[str, bytes]]:
     return mlist, store
 
 
-def _ip_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _IP_FACT_MEMO
+def _ip_key(doc_id: int) -> tuple:
+    return (doc_id % _IP_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _IP_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2)
-        if key not in cache:
-            try:
-                lo, hi = _ip_pred(g)
-                f = walk_iceberg_pruning(*_ip_payloads(doc_id), lo, hi)
-                cache[key] = (
-                    "decoded", f["n_manifests"], f["n_pruned"],
-                    f["n_matching_files"], f["matching_rows"],
-                )
-            except ValueError as exc:
-                status = ("stale_summary" if "stale" in str(exc)
-                          else "corrupt")
-                cache[key] = (status, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_manifests", "n_pruned",
-                     "n_matching_files", "matching_rows"],
-        ).astype({
-            "doc_id": "int64", "n_manifests": "int32",
-            "n_pruned": "int32", "n_matching_files": "int64",
-            "matching_rows": "int64",
-        })
+def _ip_facts(doc_id: int) -> tuple:
+    g = doc_id % _IP_GROUPS
+    lo, hi = _ip_pred(g)
+    f = walk_iceberg_pruning(*_ip_payloads(doc_id), lo, hi)
+    return (
+        "decoded", f["n_manifests"], f["n_pruned"],
+        f["n_matching_files"], f["matching_rows"],
+    )
 
 
 def _ip_oracle() -> str:
@@ -328,10 +301,10 @@ def iceberg_partition_pruning(
     Scale notes (100 TB): summary pruning keeps planning O(matching
     data); the ground-truth pass exists only in this audit."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _ip_batches,
-        schema=(
-            "doc_id long, status string, n_manifests int, "
-            "n_pruned int, n_matching_files long, matching_rows long"
-        ),
+    return decode_walk(
+        d, "_ip_batches", _ip_key, _ip_facts,
+        "doc_id long, status string, n_manifests int, n_pruned int, "
+        "n_matching_files long, matching_rows long",
+        value_errors=(("stale", "stale_summary"),),
+        worker_memo=True,
     ).transform(_presentation_sort, "doc_id")

@@ -24,14 +24,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 # length codes 257-285 → (base, extra bits)
 _LEN_BASE = [
@@ -303,41 +302,17 @@ def walk_gzip_native(payload: bytes) -> dict:
     }
 
 
-def _ni_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _ni_key(doc_id: int) -> tuple:
+    return (doc_id % _NI_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _NI_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_gzip_native(_ni_payload(doc_id))
-                cache[key] = (
-                    "decoded", f["n_members"], f["content_len"],
-                    f["content_sum"], f["wsum"],
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_members", "content_len",
-                     "content_sum", "wsum"],
-        ).astype(
-            {"doc_id": "int64", "n_members": "int32",
-             "content_len": "int64", "content_sum": "int64",
-             "wsum": "int64"}
-        )
+def _ni_facts(doc_id: int) -> tuple:
+    f = walk_gzip_native(_ni_payload(doc_id))
+    return (
+        "decoded", f["n_members"], f["content_len"],
+        f["content_sum"], f["wsum"],
+    )
 
 
 def _ni_oracle() -> str:
@@ -407,10 +382,9 @@ def ingest_gzip_native_inflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     members inflate sequentially WITHIN a payload, corpus parallelism
     is across documents; only integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _ni_batches,
-        schema=(
-            "doc_id long, status string, n_members int, "
-            "content_len long, content_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_ni_batches", _ni_key, _ni_facts,
+        "doc_id long, status string, n_members int, content_len long, "
+        "content_sum long, wsum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

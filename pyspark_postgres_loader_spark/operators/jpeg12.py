@@ -29,9 +29,7 @@ Reference: no counterpart (SURVEY.md §2l multimodal extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -47,6 +45,7 @@ from .multimodal import (
     _huff_decode,
     _JPEG_QTABLE,
 )
+from .walkbatch import decode_walk
 
 _LEVEL = 2048  # 2^(12-1) level shift
 _MAXVAL = 4095
@@ -315,45 +314,20 @@ def _j12_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _j12_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _j12_key(doc_id: int) -> tuple:
+    return (doc_id % _J12_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2)
+
+
+def _j12_facts(doc_id: int) -> tuple:
     import numpy as np
 
-    cache: dict[tuple[int, bool, bool], tuple] = {}
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _J12_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2)
-        if key not in cache:
-            try:
-                w, h, plane = decode_jpeg12(_j12_payload(doc_id))
-                s = plane.astype(np.int64).reshape(-1)
-                weights = np.arange(1, s.size + 1, dtype=np.int64)
-                cache[key] = (
-                    "decoded", w, h, int(s.max()), int(s.sum()),
-                    int((s * weights).sum()),
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "width", "height", "max_sample",
-                "px_sum", "wpx_sum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "width": "int32", "height": "int32",
-                "max_sample": "int32", "px_sum": "int64", "wpx_sum": "int64",
-            }
-        )
+    w, h, plane = decode_jpeg12(_j12_payload(doc_id))
+    s = plane.astype(np.int64).reshape(-1)
+    weights = np.arange(1, s.size + 1, dtype=np.int64)
+    return (
+        "decoded", w, h, int(s.max()), int(s.sum()),
+        int((s * weights).sum()),
+    )
 
 
 def _j12_oracle() -> str:
@@ -417,10 +391,8 @@ def multimodal_jpeg12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): same Arrow-batched mapInPandas decode map as
     every codec query; integer facts only re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _j12_batches,
-        schema=(
-            "doc_id long, status string, width int, height int, "
-            "max_sample int, px_sum long, wpx_sum long"
-        ),
+    return decode_walk(
+        d, "_j12_batches", _j12_key, _j12_facts,
+        "doc_id long, status string, width int, height int, max_sample int, "
+        "px_sum long, wpx_sum long",
     ).transform(_presentation_sort, "doc_id")

@@ -39,13 +39,12 @@ counterpart (SURVEY.md §2 multimodal extension).
 from __future__ import annotations
 
 import struct as _struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
+from .walkbatch import decode_walk
 
 # T.81 Table D.3: (Qe, Next_Index_LPS, Next_Index_MPS, Switch_MPS)
 # per state; row 113 is the fixed-probability self-loop used for AC
@@ -669,48 +668,23 @@ def _ja_payload(doc_id: int) -> bytes:
     return payload
 
 
-_JA_FACT_MEMO: dict[tuple, tuple] = {}
+def _ja_key(doc_id: int) -> tuple:
+    return (doc_id % _JA_GROUPS, doc_id % 13 == 9, doc_id % 17 == 4)
 
 
-def _ja_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _ja_facts(doc_id: int) -> tuple:
     import numpy as np
-
     from .multimodal import real_decode_image
 
-    cache = _JA_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _JA_GROUPS
-        key = (g, doc_id % 13 == 9, doc_id % 17 == 4)
-        if key not in cache:
-            try:
-                # through the SHARED router (real_decode_image →
-                # _decode_jpeg → SOF9 branch), proving the routing
-                w, h, px = real_decode_image(_ja_payload(doc_id))
-                s = px.astype(np.int64).sum(axis=2).reshape(-1)
-                weights = np.arange(1, s.size + 1, dtype=np.int64)
-                cache[key] = (
-                    "decoded", w, h, int(s.sum()),
-                    int((s * weights).sum()),
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "width", "height",
-                     "px_sum", "wpx_sum"],
-        ).astype(
-            {"doc_id": "int64", "width": "int32", "height": "int32",
-             "px_sum": "int64", "wpx_sum": "int64"}
-        )
+    # through the SHARED router (real_decode_image →
+    # _decode_jpeg → SOF9 branch), proving the routing
+    w, h, px = real_decode_image(_ja_payload(doc_id))
+    s = px.astype(np.int64).sum(axis=2).reshape(-1)
+    weights = np.arange(1, s.size + 1, dtype=np.int64)
+    return (
+        "decoded", w, h, int(s.sum()),
+        int((s * weights).sum()),
+    )
 
 
 def _ja_oracle() -> str:
@@ -802,9 +776,10 @@ def multimodal_jpeg_arith_decode(
         (F.col("doc_id") % 13 == 9).cast("int"),
         (F.col("doc_id") % 17 == 4).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _ja_batches,
-        schema=("doc_id long, status string, width int, height int, "
-                "px_sum long, wpx_sum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_ja_batches", _ja_key, _ja_facts,
+        "doc_id long, status string, width int, height int, px_sum long, "
+        "wpx_sum long",
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

@@ -38,9 +38,7 @@ Reference: no counterpart (SURVEY.md §2l multimodal extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -53,6 +51,7 @@ from .multimodal import (
     _extend,
     _huff_decode,
 )
+from .walkbatch import decode_walk
 
 
 def _jls_huffman_spec():
@@ -285,46 +284,20 @@ def _jls_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _jls_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jls_key(doc_id: int) -> tuple:
+    return (doc_id % _JLS_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2)
+
+
+def _jls_facts(doc_id: int) -> tuple:
     import numpy as np
 
-    cache: dict[tuple[int, bool, bool], tuple] = {}
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _JLS_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2)
-        if key not in cache:
-            try:
-                w, h, sel, plane = decode_jpeg_lossless(_jls_payload(doc_id))
-                s = plane.astype(np.int64).reshape(-1)
-                weights = np.arange(1, s.size + 1, dtype=np.int64)
-                cache[key] = (
-                    "decoded", w, h, sel, int(s.max()), int(s.sum()),
-                    int((s * weights).sum()),
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "width", "height", "predictor",
-                "max_sample", "px_sum", "wpx_sum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "width": "int32", "height": "int32",
-                "predictor": "int32", "max_sample": "int32",
-                "px_sum": "int64", "wpx_sum": "int64",
-            }
-        )
+    w, h, sel, plane = decode_jpeg_lossless(_jls_payload(doc_id))
+    s = plane.astype(np.int64).reshape(-1)
+    weights = np.arange(1, s.size + 1, dtype=np.int64)
+    return (
+        "decoded", w, h, sel, int(s.max()), int(s.sum()),
+        int((s * weights).sum()),
+    )
 
 
 def _jls_oracle() -> str:
@@ -392,10 +365,8 @@ def multimodal_jpeg_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFra
     every codec query; ~60 B of integer facts per row re-enter the JVM.
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _jls_batches,
-        schema=(
-            "doc_id long, status string, width int, height int, "
-            "predictor int, max_sample int, px_sum long, wpx_sum long"
-        ),
+    return decode_walk(
+        d, "_jls_batches", _jls_key, _jls_facts,
+        "doc_id long, status string, width int, height int, predictor int, "
+        "max_sample int, px_sum long, wpx_sum long",
     ).transform(_presentation_sort, "doc_id")

@@ -643,6 +643,7 @@ from ..registry import register  # noqa: E402
 from ..tables import load_table  # noqa: E402
 from .multimodal import _YCC_BIAS, real_decode_image  # noqa: E402
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _PROG_GROUPS = 12
 
@@ -693,41 +694,19 @@ def _prog_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _prog_decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _prog_decode_key(doc_id: int) -> tuple:
+    return (doc_id % _PROG_GROUPS, doc_id % 11 == 8, doc_id % 17 == 6)
+
+
+def _prog_decode_facts(doc_id: int) -> tuple:
     import numpy as np
 
-    cache: dict[tuple[int, bool, bool], tuple] = {}
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _PROG_GROUPS
-        key = (g, doc_id % 11 == 8, doc_id % 17 == 6)
-        if key not in cache:
-            try:
-                w, h, px = real_decode_image(_prog_payload(doc_id))
-                s = px.astype(np.int64).sum(axis=2).reshape(-1)
-                weights = np.arange(1, s.size + 1, dtype=np.int64)
-                cache[key] = (
-                    "decoded", w, h, int(s.sum()), int((s * weights).sum())
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001
-                cache[key] = ("corrupt", 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "width", "height", "px_sum", "wpx_sum"],
-        ).astype(
-            {
-                "doc_id": "int64", "width": "int32", "height": "int32",
-                "px_sum": "int64", "wpx_sum": "int64",
-            }
-        )
+    w, h, px = real_decode_image(_prog_payload(doc_id))
+    s = px.astype(np.int64).sum(axis=2).reshape(-1)
+    weights = np.arange(1, s.size + 1, dtype=np.int64)
+    return (
+        "decoded", w, h, int(s.sum()), int((s * weights).sum())
+    )
 
 
 def _prog_oracle() -> str:
@@ -809,12 +788,10 @@ def multimodal_jpeg_progressive_decode(
     Scale notes (100 TB): same mapInPandas decode map; progressive is
     a corpus-COVERAGE feature — a web crawl is mostly SOF2."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _prog_decode_batches,
-        schema=(
-            "doc_id long, status string, width int, height int, "
-            "px_sum long, wpx_sum long"
-        ),
+    return decode_walk(
+        d, "_prog_decode_batches", _prog_decode_key, _prog_decode_facts,
+        "doc_id long, status string, width int, height int, px_sum long, "
+        "wpx_sum long",
     ).transform(_presentation_sort, "doc_id")
 
 

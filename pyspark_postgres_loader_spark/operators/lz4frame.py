@@ -379,46 +379,20 @@ def _lz_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _lz_batches(it):
-    import pandas as pd
+def _lz_key(doc_id: int) -> tuple:
+    return (doc_id % _LZ_GROUPS, doc_id % 2, doc_id % 11 == 3,
+            doc_id % 17 == 2, doc_id % 13 == 5)
 
-    cache: dict[tuple, tuple] = {}
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _LZ_GROUPS
-        key = (g, doc_id % 2, doc_id % 11 == 3, doc_id % 17 == 2,
-               doc_id % 13 == 5)
-        if key not in cache:
-            prefix = (8 + 4 + g) if doc_id % 2 == 1 else 0
-            try:
-                data, used = decompress_lz4_frame(_lz_payload(doc_id))
-                csum = wsum = 0
-                for i, b in enumerate(data):
-                    csum += b
-                    wsum += (i + 1) * b
-                cache[key] = ("decoded", len(data), csum, wsum, prefix)
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "content_len", "content_sum",
-                     "wsum", "prefix_len"],
-        ).astype(
-            {"doc_id": "int64", "content_len": "int64",
-             "content_sum": "int64", "wsum": "int64",
-             "prefix_len": "int32"}
-        )
+def _lz_facts(doc_id: int) -> tuple:
+    g = doc_id % _LZ_GROUPS
+    prefix = (8 + 4 + g) if doc_id % 2 == 1 else 0
+    data, used = decompress_lz4_frame(_lz_payload(doc_id))
+    csum = wsum = 0
+    for i, b in enumerate(data):
+        csum += b
+        wsum += (i + 1) * b
+    return ("decoded", len(data), csum, wsum, prefix)
 
 
 def _lz_oracle() -> str:
@@ -463,6 +437,7 @@ def _lz_oracle() -> str:
 
 def _register_query() -> None:
     from ..registry import register
+    from .walkbatch import decode_walk
     from ..tables import load_table
     from ..functions.planctl import presentation_sort as _presentation_sort
 
@@ -483,12 +458,11 @@ def _register_query() -> None:
         blocks chain sequentially WITHIN a frame, corpus parallelism
         is across documents; only integer facts re-enter the JVM."""
         d = load_table(spark, sf_dir, "documents").select("doc_id")
-        return d.mapInPandas(
-            _lz_batches,
-            schema=(
-                "doc_id long, status string, content_len long, "
-                "content_sum long, wsum long, prefix_len int"
-            ),
+        return decode_walk(
+            d, "_lz_batches", _lz_key, _lz_facts,
+            "doc_id long, status string, content_len long, content_sum long, "
+            "wsum long, prefix_len int",
+            value_errors=(("CRC", "crc_error"),),
         ).transform(_presentation_sort, "doc_id")
 
 

@@ -27,14 +27,13 @@ Reference: no counterpart (SURVEY.md §2l multimodal extension).
 
 from __future__ import annotations
 
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 # bitrate tables, kbps, index 1..14 (index 0 = free format, 15 = bad)
 _BR_V1_L1 = [32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448]
@@ -270,60 +269,31 @@ def _mp3_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _mp3_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _mp3_key(doc_id: int) -> tuple:
+    return (doc_id % _MP3_GROUPS, doc_id % 11 == 6, doc_id % 17 == 4,
+            doc_id % 19 == 7)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _MP3_GROUPS
-        key = (g, doc_id % 11 == 6, doc_id % 17 == 4, doc_id % 19 == 7)
-        if key not in cache:
-            try:
-                version, layer, sr, frames = decode_mp3_frames(
-                    _mp3_payload(doc_id)
-                )
-                spf = _samples_per_frame(version, layer)
-                total_samples = spf * len(frames)
-                wsum = 0
-                for f, fr in enumerate(frames):
-                    plen = fr["length"] - 4 - (2 if fr["crc"] else 0)
-                    wsum += (f + 1) * sum(
-                        (i + 1) * ((7 * i + 11 * f + g) % 251)
-                        for i in range(plen)
-                    )
-                cache[key] = (
-                    "decoded", version, layer, sr, len(frames),
-                    total_samples, total_samples * 1_000_000 // sr,
-                    sum(fr["bitrate_kbps"] for fr in frames),
-                    sum(fr["length"] for fr in frames), wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", "", 0, 0, 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, "", 0, 0, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", "", 0, 0, 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "version", "layer", "sample_rate",
-                "n_frames", "total_samples", "duration_us",
-                "bitrate_sum_kbps", "frame_bytes", "payload_wsum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "layer": "int32", "sample_rate": "int32",
-                "n_frames": "int32", "total_samples": "int64",
-                "duration_us": "int64", "bitrate_sum_kbps": "int64",
-                "frame_bytes": "int64", "payload_wsum": "int64",
-            }
+def _mp3_facts(doc_id: int) -> tuple:
+    g = doc_id % _MP3_GROUPS
+    version, layer, sr, frames = decode_mp3_frames(
+        _mp3_payload(doc_id)
+    )
+    spf = _samples_per_frame(version, layer)
+    total_samples = spf * len(frames)
+    wsum = 0
+    for f, fr in enumerate(frames):
+        plen = fr["length"] - 4 - (2 if fr["crc"] else 0)
+        wsum += (f + 1) * sum(
+            (i + 1) * ((7 * i + 11 * f + g) % 251)
+            for i in range(plen)
         )
+    return (
+        "decoded", version, layer, sr, len(frames),
+        total_samples, total_samples * 1_000_000 // sr,
+        sum(fr["bitrate_kbps"] for fr in frames),
+        sum(fr["length"] for fr in frames), wsum,
+    )
 
 
 def _mp3_oracle() -> str:
@@ -478,12 +448,10 @@ def audio_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and SKIPS payload bytes (the fixture's wsum reads them only to pin
     the length arithmetic), so corpus-census cost is I/O-bound."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _mp3_batches,
-        schema=(
-            "doc_id long, status string, version string, layer int, "
-            "sample_rate int, n_frames int, total_samples long, "
-            "duration_us long, bitrate_sum_kbps long, frame_bytes long, "
-            "payload_wsum long"
-        ),
+    return decode_walk(
+        d, "_mp3_batches", _mp3_key, _mp3_facts,
+        "doc_id long, status string, version string, layer int, "
+        "sample_rate int, n_frames int, total_samples long, duration_us long, "
+        "bitrate_sum_kbps long, frame_bytes long, payload_wsum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 
 def real_decode_image(payload: bytes):
@@ -2023,7 +2024,7 @@ def _codec_decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     Group-deterministic fixture → each distinct (parity, group,
     corrupt) payload is decoded once per partition and memoized (see
-    ``_jpeg_decode_batches`` for the rationale)."""
+    ``walkbatch`` for the rationale)."""
     import numpy as np
 
     cache: dict[tuple[int, int, bool], tuple] = {}
@@ -2173,47 +2174,17 @@ def _jpeg_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _jpeg_decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: fabricate → REAL baseline-JPEG decode
-    (huffman + dequant + IDCT) → integer facts, same shape as
-    ``_codec_decode_batches``.
+def _jpeg_decode_key(doc_id: int) -> tuple:
+    return (doc_id % _JPEG_GROUPS, doc_id % 13 == 9)
 
-    The fixture is group-deterministic (payload is a pure function of
-    ``doc_id % _JPEG_GROUPS`` and the corrupt flag), so each distinct
-    payload is encoded+decoded ONCE per partition and memoized — the
-    pure-Python huffman bit loop costs ~1-2 ms per payload, and paying
-    it 5000× for 24 distinct payloads verified nothing extra. A real
-    corpus has per-document payloads and pays per-document decode; the
-    Arrow-batch plumbing and quarantine routing here are identical."""
+
+def _jpeg_decode_facts(doc_id: int) -> tuple:
     import numpy as np
 
-    cache: dict[tuple[int, bool], tuple] = {}
-
-    def facts(doc_id: int) -> tuple:
-        key = (doc_id % _JPEG_GROUPS, doc_id % 13 == 9)
-        if key not in cache:
-            try:
-                w, h, px = real_decode_image(_jpeg_payload(doc_id))
-                s = px.astype(np.int64).sum(axis=2).reshape(-1)
-                weights = np.arange(1, s.size + 1, dtype=np.int64)
-                cache[key] = ("decoded", w, h, int(s.sum()), int((s * weights).sum()))
-            except Exception:  # noqa: BLE001 — any decode failure quarantines
-                cache[key] = ("corrupt", 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "width", "height", "px_sum", "wpx_sum"],
-        ).astype(
-            {
-                "doc_id": "int64", "width": "int32", "height": "int32",
-                "px_sum": "int64", "wpx_sum": "int64",
-            }
-        )
+    w, h, px = real_decode_image(_jpeg_payload(doc_id))
+    s = px.astype(np.int64).sum(axis=2).reshape(-1)
+    weights = np.arange(1, s.size + 1, dtype=np.int64)
+    return ("decoded", w, h, int(s.sum()), int((s * weights).sum()))
 
 
 def _jpeg_oracle() -> str:
@@ -2293,12 +2264,10 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched ``mapInPandas``, embarrassingly parallel, ~40 bytes/row of
     integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _jpeg_decode_batches,
-        schema=(
-            "doc_id long, status string, width int, height int, "
-            "px_sum long, wpx_sum long"
-        ),
+    return decode_walk(
+        d, "_jpeg_decode_batches", _jpeg_decode_key, _jpeg_decode_facts,
+        "doc_id long, status string, width int, height int, px_sum long, "
+        "wpx_sum long",
     ).transform(_presentation_sort, "doc_id")
 
 
@@ -2398,7 +2367,7 @@ def _jpeg420_decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     with typed failure routing: ValueError → 'corrupt',
     NotImplementedError → 'unsupported' (the quarantine distinction the
     plain decode queries collapse). Group-deterministic payloads are
-    memoized per partition, same rationale as ``_jpeg_decode_batches``."""
+    memoized per partition, same rationale as in ``walkbatch``."""
     import numpy as np
 
     cache: dict[tuple[int, bool, bool], tuple] = {}

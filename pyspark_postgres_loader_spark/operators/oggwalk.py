@@ -44,14 +44,13 @@ Reference: no counterpart (SURVEY.md §2l multimodal/ingest extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _CAPTURE = b"OggS"
 _F_CONT, _F_BOS, _F_EOS = 0x01, 0x02, 0x04
@@ -255,51 +254,18 @@ def _ogg_payload(doc_id: int) -> bytes:
     return bytes(stream)
 
 
-def _ogg_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _ogg_key(doc_id: int) -> tuple:
+    return (doc_id % _OGG_GROUPS, doc_id % 2, doc_id % 11 == 3,
+            doc_id % 17 == 2, doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _OGG_GROUPS
-        key = (
-            g, doc_id % 2, doc_id % 11 == 3, doc_id % 17 == 2,
-            doc_id % 13 == 5,
-        )
-        if key not in cache:
-            try:
-                f = walk_ogg_pages(_ogg_payload(doc_id))
-                cache[key] = (
-                    "decoded", f["n_pages"], f["n_packets"],
-                    f["payload_bytes"], f["content_sum"], f["wsum"],
-                    f["last_granule"], f["junk_skipped"],
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_pages", "n_packets",
-                "payload_bytes", "content_sum", "wsum", "last_granule",
-                "junk_skipped",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_pages": "int32",
-                "n_packets": "int32", "payload_bytes": "int64",
-                "content_sum": "int64", "wsum": "int64",
-                "last_granule": "int64", "junk_skipped": "int32",
-            }
-        )
+def _ogg_facts(doc_id: int) -> tuple:
+    f = walk_ogg_pages(_ogg_payload(doc_id))
+    return (
+        "decoded", f["n_pages"], f["n_packets"],
+        f["payload_bytes"], f["content_sum"], f["wsum"],
+        f["last_granule"], f["junk_skipped"],
+    )
 
 
 def _ogg_oracle() -> str:
@@ -378,11 +344,10 @@ def audio_ogg_page_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): Arrow-batched mapInPandas decode map; only
     integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _ogg_batches,
-        schema=(
-            "doc_id long, status string, n_pages int, n_packets int, "
-            "payload_bytes long, content_sum long, wsum long, "
-            "last_granule long, junk_skipped int"
-        ),
+    return decode_walk(
+        d, "_ogg_batches", _ogg_key, _ogg_facts,
+        "doc_id long, status string, n_pages int, n_packets int, "
+        "payload_bytes long, content_sum long, wsum long, last_granule long, "
+        "junk_skipped int",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

@@ -51,9 +51,7 @@ no repo counterpart (SURVEY.md §2l extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,6 +62,7 @@ from .inflate import inflate_raw
 from .lz4frame import lz4_decompress_block
 from .snappy import snappy_decompress_block
 from .zstdfse import decompress_frame
+from .walkbatch import decode_walk
 
 # ------------------------------------------------ protobuf wire reader
 
@@ -1148,41 +1147,15 @@ def _orc_payload(doc_id: int) -> bytes:
 # ------------------------------------------------ spark + oracle
 
 
-def _orc_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _orc_key(doc_id: int) -> tuple:
+    return (doc_id % _ORC_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _ORC_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_orc(_orc_payload(doc_id))
-                sums = [sum(c) for c in f["columns"]]
-                cache[key] = ("decoded", f["n_rows"], *sums)
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = ("mismatch"
-                          if "row count mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_rows", "a_sum", "b_sum",
-                     "c_sum", "d_sum", "e_sum"],
-        ).astype(
-            {"doc_id": "int64", "n_rows": "int64", "a_sum": "int64",
-             "b_sum": "int64", "c_sum": "int64", "d_sum": "int64",
-             "e_sum": "int64"}
-        )
+def _orc_facts(doc_id: int) -> tuple:
+    f = walk_orc(_orc_payload(doc_id))
+    sums = [sum(c) for c in f["columns"]]
+    return ("decoded", f["n_rows"], *sums)
 
 
 def _orc_oracle() -> str:
@@ -1253,12 +1226,11 @@ def ingest_orc_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stripe-split planning path; Arrow-batched mapInPandas, parallel
     across files, ~60 B of integer facts per file re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _orc_batches,
-        schema=(
-            "doc_id long, status string, n_rows long, a_sum long, "
-            "b_sum long, c_sum long, d_sum long, e_sum long"
-        ),
+    return decode_walk(
+        d, "_orc_batches", _orc_key, _orc_facts,
+        "doc_id long, status string, n_rows long, a_sum long, b_sum long, "
+        "c_sum long, d_sum long, e_sum long",
+        value_errors=(("row count mismatch", "mismatch"),),
     ).transform(_presentation_sort, "doc_id")
 
 
@@ -1308,48 +1280,21 @@ def _on_payload(doc_id: int) -> bytes:
     return blob
 
 
-_ON_FACT_MEMO: dict[tuple, tuple] = {}
+def _on_key(doc_id: int) -> tuple:
+    return (doc_id % _ON_GROUPS, doc_id % 11 == 3)
 
 
-def _on_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _ON_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _ON_GROUPS
-        key = (g, doc_id % 11 == 3)
-        if key not in cache:
-            try:
-                f = walk_orc(_on_payload(doc_id))
-                v, u, w = f["columns"]
-                cache[key] = (
-                    "decoded", f["n_rows"],
-                    sum(1 for x in v if x is not None),
-                    sum(x for x in v if x is not None),
-                    sum(1 for x in u if x is not None),
-                    sum(x for x in u if x is not None),
-                    sum(1 for x in w if x is not None),
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except ValueError:
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_rows", "v_nonnull",
-                     "v_sum", "u_nonnull", "u_sum", "w_nonnull"],
-        ).astype({
-            "doc_id": "int64", "n_rows": "int64", "v_nonnull": "int64",
-            "v_sum": "int64", "u_nonnull": "int64", "u_sum": "int64",
-            "w_nonnull": "int64",
-        })
+def _on_facts(doc_id: int) -> tuple:
+    f = walk_orc(_on_payload(doc_id))
+    v, u, w = f["columns"]
+    return (
+        "decoded", f["n_rows"],
+        sum(1 for x in v if x is not None),
+        sum(x for x in v if x is not None),
+        sum(1 for x in u if x is not None),
+        sum(x for x in u if x is not None),
+        sum(1 for x in w if x is not None),
+    )
 
 
 def _on_oracle() -> str:
@@ -1415,12 +1360,11 @@ def ingest_orc_nullable_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     column's storage near zero, and a reader without it cannot open
     most production ORC files. Per-file map-side decode, memoized."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _on_batches,
-        schema=(
-            "doc_id long, status string, n_rows long, v_nonnull long, "
-            "v_sum long, u_nonnull long, u_sum long, w_nonnull long"
-        ),
+    return decode_walk(
+        d, "_on_batches", _on_key, _on_facts,
+        "doc_id long, status string, n_rows long, v_nonnull long, v_sum long, "
+        "u_nonnull long, u_sum long, w_nonnull long",
+        worker_memo=True,
     ).transform(_presentation_sort, "doc_id")
 
 
@@ -1514,74 +1458,44 @@ def _os_payload(doc_id: int) -> bytes:
     return _retail(data, patched, kind, ps_fields, footer_start)
 
 
-_OS_ZERO = (0,) * 13
+def _os_key(doc_id: int) -> tuple:
+    return (doc_id % _OS_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-# worker-process-scope decode memo (avrowalk r12/r13 lesson: a
-# function-local cache rebuilds per partition iterator AND per pass)
-_OS_FACT_MEMO: dict[tuple, tuple] = {}
-
-
-def _os_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _OS_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _OS_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_orc(_os_payload(doc_id))
-                kcol, sdict, suniq, snull = f["columns"]
-                defects = sum(1 for i, v in enumerate(kcol) if v != i)
-                sdict_tag = sdict_w = 0
-                for i, s in enumerate(sdict):
-                    tag = int(s[1:])
-                    sdict_tag += tag
-                    sdict_w += (i + 1) * tag
-                ulen = ua = uaw = 0
-                for i, s in enumerate(suniq):
-                    ulen += len(s)
-                    gg, a, ii = s[1:].split("_")
-                    ua += int(a)
-                    uaw += (i + 1) * int(a)
-                    defects += (int(ii) != i) + (int(gg) != g)
-                nn = ntag = nw = 0
-                for i, s in enumerate(snull):
-                    if s is None:
-                        continue
-                    tag = int(s[1:])
-                    nn += 1
-                    ntag += tag
-                    nw += (i + 1) * tag
-                cache[key] = (
-                    "decoded", f["n_rows"],
-                    sum(1 for e in f["encodings"] if e == [_ENC_DICT_V2]),
-                    sum(1 for e in f["encodings"]
-                        if e == [_ENC_DIRECT_V2]),
-                    sdict_tag, sdict_w, ulen, ua, uaw, defects,
-                    nn, ntag, nw,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _OS_ZERO[1:]
-            except ValueError as exc:
-                status = ("mismatch"
-                          if "row count mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status,) + _OS_ZERO[1:]
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _OS_ZERO[1:]
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "dict_cols", "direct_cols",
-            "sdict_tagsum", "sdict_wsum", "suniq_len", "suniq_asum",
-            "suniq_awsum", "order_defects", "snull_nonnull",
-            "snull_tagsum", "snull_wsum"]
-    for pdf in it:
-        if pdf.empty:
+def _os_facts(doc_id: int) -> tuple:
+    g = doc_id % _OS_GROUPS
+    f = walk_orc(_os_payload(doc_id))
+    kcol, sdict, suniq, snull = f["columns"]
+    defects = sum(1 for i, v in enumerate(kcol) if v != i)
+    sdict_tag = sdict_w = 0
+    for i, s in enumerate(sdict):
+        tag = int(s[1:])
+        sdict_tag += tag
+        sdict_w += (i + 1) * tag
+    ulen = ua = uaw = 0
+    for i, s in enumerate(suniq):
+        ulen += len(s)
+        gg, a, ii = s[1:].split("_")
+        ua += int(a)
+        uaw += (i + 1) * int(a)
+        defects += (int(ii) != i) + (int(gg) != g)
+    nn = ntag = nw = 0
+    for i, s in enumerate(snull):
+        if s is None:
             continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        tag = int(s[1:])
+        nn += 1
+        ntag += tag
+        nw += (i + 1) * tag
+    return (
+        "decoded", f["n_rows"],
+        sum(1 for e in f["encodings"] if e == [_ENC_DICT_V2]),
+        sum(1 for e in f["encodings"]
+            if e == [_ENC_DIRECT_V2]),
+        sdict_tag, sdict_w, ulen, ua, uaw, defects,
+        nn, ntag, nw,
+    )
 
 
 def _os_oracle() -> str:
@@ -1689,15 +1603,15 @@ def ingest_orc_string_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _os_batches,
-        schema=(
-            "doc_id long, status string, n_rows long, dict_cols long, "
-            "direct_cols long, sdict_tagsum long, sdict_wsum long, "
-            "suniq_len long, suniq_asum long, suniq_awsum long, "
-            "order_defects long, snull_nonnull long, "
-            "snull_tagsum long, snull_wsum long"
-        ),
+    out = decode_walk(
+        d.repartition(32, combo), "_os_batches", _os_key, _os_facts,
+        "doc_id long, status string, n_rows long, dict_cols long, "
+        "direct_cols long, sdict_tagsum long, sdict_wsum long, "
+        "suniq_len long, suniq_asum long, suniq_awsum long, "
+        "order_defects long, snull_nonnull long, snull_tagsum long, "
+        "snull_wsum long",
+        value_errors=(("row count mismatch", "mismatch"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")
 
@@ -1801,61 +1715,34 @@ def _ot_payload(doc_id: int) -> bytes:
     return _retail(data, patched, kind, ps_fields, footer_start)
 
 
-_OT_ZERO = (0,) * 11
+def _ot_key(doc_id: int) -> tuple:
+    return (doc_id % _OT_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-_OT_FACT_MEMO: dict[tuple, tuple] = {}
 
-
-def _ot_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _OT_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _OT_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_orc(_ot_payload(doc_id))
-                ts, d, dec = f["columns"]
-                sec_sum = nano_sum = ts_w = 0
-                for i, v in enumerate(ts):
-                    sec = v // 10**9 - _OT_EP
-                    sec_sum += sec
-                    nano_sum += v % 10**9
-                    ts_w += (i + 1) * (sec % 100003)
-                d_nn = d_sum = d_w = 0
-                for i, v in enumerate(d):
-                    if v is None:
-                        continue
-                    d_nn += 1
-                    d_sum += v
-                    d_w += (i + 1) * v
-                dec_sum = sum(dec)
-                dec_neg = sum(1 for v in dec if v < 0)
-                cache[key] = (
-                    "decoded", f["n_rows"], sec_sum, nano_sum, ts_w,
-                    d_nn, d_sum, d_w, dec_sum, dec_neg,
-                    sum((i + 1) * v for i, v in enumerate(dec)),
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _OT_ZERO[1:]
-            except ValueError as exc:
-                status = ("mismatch"
-                          if "row count mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status,) + _OT_ZERO[1:]
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _OT_ZERO[1:]
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "ts_sec_sum", "ts_nano_sum",
-            "ts_wsum", "d_nonnull", "d_sum", "d_wsum", "dec_sum",
-            "dec_neg", "dec_wsum"]
-    for pdf in it:
-        if pdf.empty:
+def _ot_facts(doc_id: int) -> tuple:
+    f = walk_orc(_ot_payload(doc_id))
+    ts, d, dec = f["columns"]
+    sec_sum = nano_sum = ts_w = 0
+    for i, v in enumerate(ts):
+        sec = v // 10**9 - _OT_EP
+        sec_sum += sec
+        nano_sum += v % 10**9
+        ts_w += (i + 1) * (sec % 100003)
+    d_nn = d_sum = d_w = 0
+    for i, v in enumerate(d):
+        if v is None:
             continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        d_nn += 1
+        d_sum += v
+        d_w += (i + 1) * v
+    dec_sum = sum(dec)
+    dec_neg = sum(1 for v in dec if v < 0)
+    return (
+        "decoded", f["n_rows"], sec_sum, nano_sum, ts_w,
+        d_nn, d_sum, d_w, dec_sum, dec_neg,
+        sum((i + 1) * v for i, v in enumerate(dec)),
+    )
 
 
 def _ot_oracle() -> str:
@@ -1954,12 +1841,13 @@ def ingest_orc_temporal_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _ot_batches,
-        schema=("doc_id long, status string, n_rows long, "
-                "ts_sec_sum long, ts_nano_sum long, ts_wsum long, "
-                "d_nonnull long, d_sum long, d_wsum long, "
-                "dec_sum long, dec_neg long, dec_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_ot_batches", _ot_key, _ot_facts,
+        "doc_id long, status string, n_rows long, ts_sec_sum long, "
+        "ts_nano_sum long, ts_wsum long, d_nonnull long, d_sum long, "
+        "d_wsum long, dec_sum long, dec_neg long, dec_wsum long",
+        value_errors=(("row count mismatch", "mismatch"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")
 
@@ -2050,62 +1938,35 @@ def _ol_payload(doc_id: int) -> bytes:
     return _retail(data, patched, kind, ps_fields, footer_start)
 
 
-_OL_ZERO = (0,) * 8
+def _ol_key(doc_id: int) -> tuple:
+    return (doc_id % _OL_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-_OL_FACT_MEMO: dict[tuple, tuple] = {}
 
-
-def _ol_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _OL_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _OL_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_orc(_ol_payload(doc_id))
-                kcol, emb = f["columns"]
-                defects = sum(1 for i, v in enumerate(kcol) if v != i)
-                n_null = n_empty = n_nullel = n_vals = ssum = wsum = 0
-                for i, row in enumerate(emb):
-                    if row is None:
-                        n_null += 1
-                        continue
-                    if row == []:
-                        n_empty += 1
-                        continue
-                    for j, v in enumerate(row):
-                        if v is None:
-                            n_nullel += 1
-                        else:
-                            s = int(round(v * 64))
-                            n_vals += 1
-                            ssum += s
-                            wsum += (i + 1) * (j + 1) * s
-                cache[key] = (
-                    "decoded", f["n_rows"], n_null, n_empty, n_nullel,
-                    n_vals, ssum, wsum, defects,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _OL_ZERO
-            except ValueError as exc:
-                status = ("mismatch"
-                          if "row count mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status,) + _OL_ZERO
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _OL_ZERO
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "n_null_lists",
-            "n_empty_lists", "n_null_elems", "n_values", "sum_scaled",
-            "wsum_scaled", "order_defects"]
-    for pdf in it:
-        if pdf.empty:
+def _ol_facts(doc_id: int) -> tuple:
+    f = walk_orc(_ol_payload(doc_id))
+    kcol, emb = f["columns"]
+    defects = sum(1 for i, v in enumerate(kcol) if v != i)
+    n_null = n_empty = n_nullel = n_vals = ssum = wsum = 0
+    for i, row in enumerate(emb):
+        if row is None:
+            n_null += 1
             continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        if row == []:
+            n_empty += 1
+            continue
+        for j, v in enumerate(row):
+            if v is None:
+                n_nullel += 1
+            else:
+                s = int(round(v * 64))
+                n_vals += 1
+                ssum += s
+                wsum += (i + 1) * (j + 1) * s
+    return (
+        "decoded", f["n_rows"], n_null, n_empty, n_nullel,
+        n_vals, ssum, wsum, defects,
+    )
 
 
 def _ol_oracle() -> str:
@@ -2208,12 +2069,13 @@ def ingest_orc_list_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _ol_batches,
-        schema=("doc_id long, status string, n_rows long, "
-                "n_null_lists long, n_empty_lists long, "
-                "n_null_elems long, n_values long, sum_scaled long, "
-                "wsum_scaled long, order_defects long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_ol_batches", _ol_key, _ol_facts,
+        "doc_id long, status string, n_rows long, n_null_lists long, "
+        "n_empty_lists long, n_null_elems long, n_values long, "
+        "sum_scaled long, wsum_scaled long, order_defects long",
+        value_errors=(("row count mismatch", "mismatch"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")
 
@@ -2306,65 +2168,38 @@ def _om_payload(doc_id: int) -> bytes:
     return _retail(data, patched, kind, ps_fields, footer_start)
 
 
-_OM_ZERO = (0,) * 8
+def _om_key(doc_id: int) -> tuple:
+    return (doc_id % _OM_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-_OM_FACT_MEMO: dict[tuple, tuple] = {}
 
-
-def _om_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _OM_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _OM_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_orc(_om_payload(doc_id))
-                kcol, maps = f["columns"]
-                if any(v != i for i, v in enumerate(kcol)):
-                    raise ValueError("orc map fixture key disorder")
-                n_null = n_empty = n_nullv = n_vals = 0
-                key_wsum = val_sum = val_wsum = 0
-                for i, row in enumerate(maps):
-                    if row is None:
-                        n_null += 1
-                        continue
-                    if row == []:
-                        n_empty += 1
-                        continue
-                    for j, (mk, mv) in enumerate(row):
-                        kd = int(mk[1:])
-                        key_wsum += (i + 1) * (j + 1) * kd
-                        if mv is None:
-                            n_nullv += 1
-                        else:
-                            n_vals += 1
-                            val_sum += mv
-                            val_wsum += (i + 1) * (j + 1) * mv
-                cache[key] = (
-                    "decoded", f["n_rows"], n_null, n_empty, n_nullv,
-                    n_vals, key_wsum, val_sum, val_wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _OM_ZERO
-            except ValueError as exc:
-                status = ("mismatch"
-                          if "row count mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status,) + _OM_ZERO
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _OM_ZERO
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "n_null_maps",
-            "n_empty_maps", "n_null_vals", "n_values", "key_wsum",
-            "val_sum", "val_wsum"]
-    for pdf in it:
-        if pdf.empty:
+def _om_facts(doc_id: int) -> tuple:
+    f = walk_orc(_om_payload(doc_id))
+    kcol, maps = f["columns"]
+    if any(v != i for i, v in enumerate(kcol)):
+        raise ValueError("orc map fixture key disorder")
+    n_null = n_empty = n_nullv = n_vals = 0
+    key_wsum = val_sum = val_wsum = 0
+    for i, row in enumerate(maps):
+        if row is None:
+            n_null += 1
             continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        if row == []:
+            n_empty += 1
+            continue
+        for j, (mk, mv) in enumerate(row):
+            kd = int(mk[1:])
+            key_wsum += (i + 1) * (j + 1) * kd
+            if mv is None:
+                n_nullv += 1
+            else:
+                n_vals += 1
+                val_sum += mv
+                val_wsum += (i + 1) * (j + 1) * mv
+    return (
+        "decoded", f["n_rows"], n_null, n_empty, n_nullv,
+        n_vals, key_wsum, val_sum, val_wsum,
+    )
 
 
 def _om_oracle() -> str:
@@ -2468,12 +2303,13 @@ def ingest_orc_map_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _om_batches,
-        schema=("doc_id long, status string, n_rows long, "
-                "n_null_maps long, n_empty_maps long, "
-                "n_null_vals long, n_values long, key_wsum long, "
-                "val_sum long, val_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_om_batches", _om_key, _om_facts,
+        "doc_id long, status string, n_rows long, n_null_maps long, "
+        "n_empty_maps long, n_null_vals long, n_values long, key_wsum long, "
+        "val_sum long, val_wsum long",
+        value_errors=(("row count mismatch", "mismatch"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")
 
@@ -2563,65 +2399,38 @@ def _ost_payload(doc_id: int) -> bytes:
     return _retail(data, patched, kind, ps_fields, footer_start)
 
 
-_OST_ZERO = (0,) * 8
+def _ost_key(doc_id: int) -> tuple:
+    return (doc_id % _OST_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-_OST_FACT_MEMO: dict[tuple, tuple] = {}
 
-
-def _ost_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _OST_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _OST_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_orc(_ost_payload(doc_id))
-                kcol, sts = f["columns"]
-                if any(v != i for i, v in enumerate(kcol)):
-                    raise ValueError("orc struct fixture key disorder")
-                n_null_st = n_null_a = n_null_s = 0
-                a_sum = b_sum = s_wsum = wsum = 0
-                for i, st in enumerate(sts):
-                    if st is None:
-                        n_null_st += 1
-                        continue
-                    a, b, s = st
-                    bs = int(round(b * 64))
-                    b_sum += bs
-                    if a is None:
-                        n_null_a += 1
-                    else:
-                        a_sum += a
-                    if s is None:
-                        n_null_s += 1
-                    else:
-                        s_wsum += (i + 1) * int(s[1:])
-                    wsum += (i + 1) * (bs + (0 if a is None else a))
-                cache[key] = (
-                    "decoded", f["n_rows"], n_null_st, n_null_a,
-                    a_sum, b_sum, n_null_s, s_wsum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _OST_ZERO
-            except ValueError as exc:
-                status = ("mismatch"
-                          if "row count mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status,) + _OST_ZERO
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _OST_ZERO
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "n_null_structs",
-            "n_null_a", "a_sum", "b_scaled_sum", "n_null_s",
-            "s_suffix_wsum", "wsum"]
-    for pdf in it:
-        if pdf.empty:
+def _ost_facts(doc_id: int) -> tuple:
+    f = walk_orc(_ost_payload(doc_id))
+    kcol, sts = f["columns"]
+    if any(v != i for i, v in enumerate(kcol)):
+        raise ValueError("orc struct fixture key disorder")
+    n_null_st = n_null_a = n_null_s = 0
+    a_sum = b_sum = s_wsum = wsum = 0
+    for i, st in enumerate(sts):
+        if st is None:
+            n_null_st += 1
             continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        a, b, s = st
+        bs = int(round(b * 64))
+        b_sum += bs
+        if a is None:
+            n_null_a += 1
+        else:
+            a_sum += a
+        if s is None:
+            n_null_s += 1
+        else:
+            s_wsum += (i + 1) * int(s[1:])
+        wsum += (i + 1) * (bs + (0 if a is None else a))
+    return (
+        "decoded", f["n_rows"], n_null_st, n_null_a,
+        a_sum, b_sum, n_null_s, s_wsum, wsum,
+    )
 
 
 def _ost_oracle() -> str:
@@ -2713,12 +2522,13 @@ def ingest_orc_struct_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _ost_batches,
-        schema=("doc_id long, status string, n_rows long, "
-                "n_null_structs long, n_null_a long, a_sum long, "
-                "b_scaled_sum long, n_null_s long, "
-                "s_suffix_wsum long, wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_ost_batches", _ost_key, _ost_facts,
+        "doc_id long, status string, n_rows long, n_null_structs long, "
+        "n_null_a long, a_sum long, b_scaled_sum long, n_null_s long, "
+        "s_suffix_wsum long, wsum long",
+        value_errors=(("row count mismatch", "mismatch"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")
 
@@ -2817,62 +2627,36 @@ def _ou_payload(doc_id: int) -> bytes:
     return _retail(data, patched, kind, ps_fields, footer_start)
 
 
-_OU_ZERO = (0,) * 8
+def _ou_key(doc_id: int) -> tuple:
+    return (doc_id % _OU_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-_OU_FACT_MEMO: dict[tuple, tuple] = {}
 
-
-def _ou_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _OU_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _OU_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_orc(_ou_payload(doc_id))
-                kcol, us = f["columns"]
-                if any(v != i for i, v in enumerate(kcol)):
-                    raise ValueError("orc union fixture key disorder")
-                n_v0 = n_v0_null = n_v1 = n_v1_null = 0
-                v0_sum = v0_wsum = s_wsum = 0
-                for i, (tg, v) in enumerate(us):
-                    if tg == 0:
-                        n_v0 += 1
-                        if v is None:
-                            n_v0_null += 1
-                        else:
-                            v0_sum += v
-                            v0_wsum += (i + 1) * v
-                    else:
-                        n_v1 += 1
-                        if v is None:
-                            n_v1_null += 1
-                        else:
-                            s_wsum += (i + 1) * int(v[1:])
-                cache[key] = (
-                    "decoded", f["n_rows"], n_v0, n_v0_null, v0_sum,
-                    v0_wsum, n_v1, n_v1_null, s_wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _OU_ZERO
-            except ValueError as exc:
-                status = ("mismatch"
-                          if "row count mismatch" in str(exc)
-                          else "corrupt")
-                cache[key] = (status,) + _OU_ZERO
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _OU_ZERO
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "n_v0", "n_v0_null",
-            "v0_sum", "v0_wsum", "n_v1", "n_v1_null", "s_wsum"]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+def _ou_facts(doc_id: int) -> tuple:
+    f = walk_orc(_ou_payload(doc_id))
+    kcol, us = f["columns"]
+    if any(v != i for i, v in enumerate(kcol)):
+        raise ValueError("orc union fixture key disorder")
+    n_v0 = n_v0_null = n_v1 = n_v1_null = 0
+    v0_sum = v0_wsum = s_wsum = 0
+    for i, (tg, v) in enumerate(us):
+        if tg == 0:
+            n_v0 += 1
+            if v is None:
+                n_v0_null += 1
+            else:
+                v0_sum += v
+                v0_wsum += (i + 1) * v
+        else:
+            n_v1 += 1
+            if v is None:
+                n_v1_null += 1
+            else:
+                s_wsum += (i + 1) * int(v[1:])
+    return (
+        "decoded", f["n_rows"], n_v0, n_v0_null, v0_sum,
+        v0_wsum, n_v1, n_v1_null, s_wsum,
+    )
 
 
 def _ou_oracle() -> str:
@@ -2960,10 +2744,11 @@ def ingest_orc_union_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _ou_batches,
-        schema=("doc_id long, status string, n_rows long, n_v0 long, "
-                "n_v0_null long, v0_sum long, v0_wsum long, "
-                "n_v1 long, n_v1_null long, s_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_ou_batches", _ou_key, _ou_facts,
+        "doc_id long, status string, n_rows long, n_v0 long, n_v0_null long, "
+        "v0_sum long, v0_wsum long, n_v1 long, n_v1_null long, s_wsum long",
+        value_errors=(("row count mismatch", "mismatch"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

@@ -31,9 +31,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +43,7 @@ from .parquetwalk import (
     _TReader,
     first_page_body_span,
 )
+from .walkbatch import decode_walk
 
 _PAGE_DATA_V2 = 3
 _ENC_BSS = 9
@@ -274,61 +273,38 @@ def _bs_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_BS_FACT_MEMO: dict[tuple, tuple] = {}
+def _bs_key(doc_id: int) -> tuple:
+    return (doc_id % _BS_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _bs_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _BS_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _BS_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_parquet_bss(_bs_payload(doc_id))
-                fs = f["columns"]["f"]
-                ds = f["columns"]["d"]
-                hs = f["columns"]["h"]
-                f_sum = f_wsum = d_sum = d_wsum = 0
-                h_sum = h_wsum = 0
-                n_null_d = 0
-                for i, v in enumerate(fs):
-                    s = int(round(v * 64))
-                    f_sum += s
-                    f_wsum += (i + 1) * s
-                for i, v in enumerate(ds):
-                    if v is None:
-                        n_null_d += 1
-                        continue
-                    s = int(round(v * 64))
-                    d_sum += s
-                    d_wsum += (i + 1) * s
-                for i, v in enumerate(hs):
-                    s = int(round(v * 256))
-                    h_sum += s
-                    h_wsum += (i + 1) * s
-                cache[key] = (
-                    "decoded", f["num_rows"], f["n_pages"], f_sum,
-                    f_wsum, n_null_d, d_sum, d_wsum, h_sum, h_wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + (0,) * 9
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status,) + (0,) * 9
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + (0,) * 9
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "n_pages", "f_sum",
-            "f_wsum", "n_null_d", "d_sum", "d_wsum", "h_sum",
-            "h_wsum"]
-    for pdf in it:
-        if pdf.empty:
+def _bs_facts(doc_id: int) -> tuple:
+    f = walk_parquet_bss(_bs_payload(doc_id))
+    fs = f["columns"]["f"]
+    ds = f["columns"]["d"]
+    hs = f["columns"]["h"]
+    f_sum = f_wsum = d_sum = d_wsum = 0
+    h_sum = h_wsum = 0
+    n_null_d = 0
+    for i, v in enumerate(fs):
+        s = int(round(v * 64))
+        f_sum += s
+        f_wsum += (i + 1) * s
+    for i, v in enumerate(ds):
+        if v is None:
+            n_null_d += 1
             continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        s = int(round(v * 64))
+        d_sum += s
+        d_wsum += (i + 1) * s
+    for i, v in enumerate(hs):
+        s = int(round(v * 256))
+        h_sum += s
+        h_wsum += (i + 1) * s
+    return (
+        "decoded", f["num_rows"], f["n_pages"], f_sum,
+        f_wsum, n_null_d, d_sum, d_wsum, h_sum, h_wsum,
+    )
 
 
 def _bs_oracle() -> str:
@@ -411,11 +387,12 @@ def ingest_parquet_bss_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _bs_batches,
-        schema=("doc_id long, status string, n_rows long, "
-                "n_pages long, f_sum long, f_wsum long, "
-                "n_null_d long, d_sum long, d_wsum long, "
-                "h_sum long, h_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_bs_batches", _bs_key, _bs_facts,
+        "doc_id long, status string, n_rows long, n_pages long, f_sum long, "
+        "f_wsum long, n_null_d long, d_sum long, d_wsum long, h_sum long, "
+        "h_wsum long",
+        value_errors=(("CRC", "crc_error"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

@@ -34,14 +34,13 @@ repo counterpart (SURVEY.md §2l extension).
 
 from __future__ import annotations
 
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from .parquetwalk import first_page_body_span, walk_parquet
+from .walkbatch import decode_walk
 
 # ------------------------------------------------------------ zstd
 
@@ -119,46 +118,21 @@ def _pz_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_PZ_CACHE: dict[tuple, tuple] = {}
+def _pz_key(doc_id: int) -> tuple:
+    return (doc_id % _PZ_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _pz_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _PZ_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in _PZ_CACHE:
-            try:
-                f = walk_parquet(_pz_payload(doc_id))
-                vals = f["values"]
-                vsum = sum(vals)
-                wsum = sum(((i + 1) * v) % _PZ_MOD
-                           for i, v in enumerate(vals))
-                _PZ_CACHE[key] = (
-                    "decoded", f["n_row_groups"], f["n_pages"],
-                    len(vals), vsum, wsum,
-                )
-            except NotImplementedError:
-                _PZ_CACHE[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                _PZ_CACHE[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                _PZ_CACHE[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return _PZ_CACHE[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_row_groups", "n_pages",
-                     "n_values", "value_sum", "wsum"],
-        ).astype(
-            {"doc_id": "int64", "n_row_groups": "int32",
-             "n_pages": "int32", "n_values": "int64",
-             "value_sum": "int64", "wsum": "int64"}
-        )
+def _pz_facts(doc_id: int) -> tuple:
+    f = walk_parquet(_pz_payload(doc_id))
+    vals = f["values"]
+    vsum = sum(vals)
+    wsum = sum(((i + 1) * v) % _PZ_MOD
+               for i, v in enumerate(vals))
+    return (
+        "decoded", f["n_row_groups"], f["n_pages"],
+        len(vals), vsum, wsum,
+    )
 
 
 def _pz_oracle() -> str:
@@ -233,12 +207,12 @@ def ingest_parquet_zstd_pages(
     nested/v2/page-index/dictionary walks inherit zstd for free."""
     d = (load_table(spark, sf_dir, "documents")
          .select("doc_id").repartition(32, "doc_id"))
-    out = d.mapInPandas(
-        _pz_batches,
-        schema=(
-            "doc_id long, status string, n_row_groups int, n_pages int, "
-            "n_values long, value_sum long, wsum long"
-        ),
+    out = decode_walk(
+        d, "_pz_batches", _pz_key, _pz_facts,
+        "doc_id long, status string, n_row_groups int, n_pages int, "
+        "n_values long, value_sum long, wsum long",
+        value_errors=(("CRC", "crc_error"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")
 
@@ -301,46 +275,21 @@ def _pl_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_PL_CACHE: dict[tuple, tuple] = {}
+def _pl_key(doc_id: int) -> tuple:
+    return (doc_id % _PL_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _pl_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _PL_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in _PL_CACHE:
-            try:
-                f = walk_parquet(_pl_payload(doc_id))
-                vals = f["values"]
-                vsum = sum(vals)
-                wsum = sum(((i + 1) * v) % _PL_MOD
-                           for i, v in enumerate(vals))
-                _PL_CACHE[key] = (
-                    "decoded", f["n_row_groups"], f["n_pages"],
-                    len(vals), vsum, wsum,
-                )
-            except NotImplementedError:
-                _PL_CACHE[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                _PL_CACHE[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                _PL_CACHE[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return _PL_CACHE[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_row_groups", "n_pages",
-                     "n_values", "value_sum", "wsum"],
-        ).astype(
-            {"doc_id": "int64", "n_row_groups": "int32",
-             "n_pages": "int32", "n_values": "int64",
-             "value_sum": "int64", "wsum": "int64"}
-        )
+def _pl_facts(doc_id: int) -> tuple:
+    f = walk_parquet(_pl_payload(doc_id))
+    vals = f["values"]
+    vsum = sum(vals)
+    wsum = sum(((i + 1) * v) % _PL_MOD
+               for i, v in enumerate(vals))
+    return (
+        "decoded", f["n_row_groups"], f["n_pages"],
+        len(vals), vsum, wsum,
+    )
 
 
 def _pl_oracle() -> str:
@@ -410,11 +359,11 @@ def ingest_parquet_lz4_pages(
     ingest actually tunes toward."""
     d = (load_table(spark, sf_dir, "documents")
          .select("doc_id").repartition(32, "doc_id"))
-    out = d.mapInPandas(
-        _pl_batches,
-        schema=(
-            "doc_id long, status string, n_row_groups int, n_pages int, "
-            "n_values long, value_sum long, wsum long"
-        ),
+    out = decode_walk(
+        d, "_pl_batches", _pl_key, _pl_facts,
+        "doc_id long, status string, n_row_groups int, n_pages int, "
+        "n_values long, value_sum long, wsum long",
+        value_errors=(("CRC", "crc_error"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

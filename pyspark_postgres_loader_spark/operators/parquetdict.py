@@ -50,9 +50,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -67,6 +65,7 @@ from .parquetwalk import (
     _TReader,
     first_page_body_span,
 )
+from .walkbatch import decode_walk
 
 _PD_GROUPS = 10
 _PD_ROWGROUP = 512
@@ -276,11 +275,6 @@ def _walk_pd(data: bytes) -> dict:
 
 # ------------------------------------------------ spark + oracle
 
-_PDQ_FACT_MEMO: dict[tuple, tuple] = {}
-
-_PDQ_ZERO = (0,) * 9
-
-
 def _pdq_payload(doc_id: int) -> bytes:
     g = doc_id % _PD_GROUPS
     corrupt = doc_id % 11 == 3
@@ -304,51 +298,22 @@ def _pdq_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
+def _pdq_key(doc_id: int) -> tuple:
+    return (doc_id % _PD_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5, doc_id % 19 == 7)
+
+
 def _pdq_facts(doc_id: int) -> tuple:
-    g = doc_id % _PD_GROUPS
-    key = (g, doc_id % 11 == 3, doc_id % 17 == 2,
-           doc_id % 13 == 5, doc_id % 19 == 7)
-    if key not in _PDQ_FACT_MEMO:
-        try:
-            f = walk_parquet_dictionary(_pdq_payload(doc_id))
-            _PDQ_FACT_MEMO[key] = (
-                "decoded", f["num_rows"],
-                sum(f["columns"]["v"]),
-                sum(int(s[1:]) for s in
-                    (b.decode() for b in f["columns"]["s"])),
-                sum(f["dict_entries"]["v"]),
-                sum(int(b.decode()[1:]) for b in f["dict_entries"]["s"]),
-                f["n_dict_pages"], f["n_rle_pages"],
-                f["n_plain_pages"], f["used_fallback"],
-            )
-        except NotImplementedError:
-            _PDQ_FACT_MEMO[key] = ("unsupported",) + _PDQ_ZERO
-        except ValueError as exc:
-            status = "crc_error" if "CRC" in str(exc) else "corrupt"
-            _PDQ_FACT_MEMO[key] = (status,) + _PDQ_ZERO
-        except Exception:  # noqa: BLE001 — malformed bytes quarantine
-            _PDQ_FACT_MEMO[key] = ("corrupt",) + _PDQ_ZERO
-    return _PDQ_FACT_MEMO[key]
-
-
-def _pdq_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + _pdq_facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_values", "value_sum",
-                     "str_int_sum", "dict_int_sum", "dict_str_sum",
-                     "n_dict_pages", "n_rle_pages", "n_plain_pages",
-                     "used_fallback"],
-        ).astype({
-            "doc_id": "int64", "n_values": "int64",
-            "value_sum": "int64", "str_int_sum": "int64",
-            "dict_int_sum": "int64", "dict_str_sum": "int64",
-            "n_dict_pages": "int32", "n_rle_pages": "int32",
-            "n_plain_pages": "int32", "used_fallback": "int32",
-        })
+    f = walk_parquet_dictionary(_pdq_payload(doc_id))
+    return (
+        "decoded", f["num_rows"],
+        sum(f["columns"]["v"]),
+        sum(int(s[1:]) for s in (b.decode() for b in f["columns"]["s"])),
+        sum(f["dict_entries"]["v"]),
+        sum(int(b.decode()[1:]) for b in f["dict_entries"]["s"]),
+        f["n_dict_pages"], f["n_rle_pages"],
+        f["n_plain_pages"], f["used_fallback"],
+    )
 
 
 def _pdq_oracle() -> str:
@@ -445,12 +410,12 @@ def ingest_parquet_dictionary_walk(
     Scale notes (100 TB): see module docstring — this is the encoding
     every real table uses; per-file map-side decode, memoized."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _pdq_batches,
-        schema=(
-            "doc_id long, status string, n_values long, "
-            "value_sum long, str_int_sum long, dict_int_sum long, "
-            "dict_str_sum long, n_dict_pages int, n_rle_pages int, "
-            "n_plain_pages int, used_fallback int"
-        ),
+    return decode_walk(
+        d, "_pdq_batches", _pdq_key, _pdq_facts,
+        "doc_id long, status string, n_values long, value_sum long, "
+        "str_int_sum long, dict_int_sum long, dict_str_sum long, "
+        "n_dict_pages int, n_rle_pages int, n_plain_pages int, "
+        "used_fallback int",
+        value_errors=(("CRC", "crc_error"),),
+        worker_memo=True,
     ).transform(_presentation_sort, "doc_id")

@@ -33,15 +33,14 @@ repo counterpart (SURVEY.md §2l).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .parquetwalk import _decompress, _read_rle_levels, _TReader
+from .walkbatch import decode_walk
 
 _PAGE_DATA = 0
 _ENC_PLAIN = 0
@@ -236,45 +235,23 @@ def _pi_payload(doc_id: int) -> bytes:
     return _pi_bytes(g)
 
 
-def _pi_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _pi_key(doc_id: int) -> tuple:
+    return (doc_id % _PI_GROUPS, doc_id % 11 == 6, doc_id % 17 == 3,
+            doc_id % 13 == 9)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _PI_GROUPS
-        key = (g, doc_id % 11 == 6, doc_id % 17 == 3, doc_id % 13 == 9)
-        if key not in cache:
-            try:
-                f = walk_parquet_page_index(_pi_payload(doc_id))
-                if not f["found_index"]:
-                    cache[key] = ("no_index", 0, 0, 0, 0, 0, 0)
-                elif (f["offsets_agree"] != f["n_pages"]
-                      or f["minmax_agree"] != f["n_pages"]):
-                    cache[key] = ("mismatch", 0, 0, 0, 0, 0, 0)
-                else:
-                    cache[key] = (
-                        "indexed", f["n_chunks"], f["n_pages"],
-                        f["first_row_sum"], f["sum_page_min"],
-                        f["sum_page_max"], f["value_sum"],
-                    )
-            except ValueError:
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_chunks", "n_pages",
-                     "first_row_sum", "sum_page_min", "sum_page_max",
-                     "value_sum"],
-        ).astype(
-            {"doc_id": "int64", "n_chunks": "int32", "n_pages": "int32",
-             "first_row_sum": "int64", "sum_page_min": "int64",
-             "sum_page_max": "int64", "value_sum": "int64"}
+def _pi_facts(doc_id: int) -> tuple:
+    f = walk_parquet_page_index(_pi_payload(doc_id))
+    if not f["found_index"]:
+        return ("no_index", 0, 0, 0, 0, 0, 0)
+    elif (f["offsets_agree"] != f["n_pages"]
+          or f["minmax_agree"] != f["n_pages"]):
+        return ("mismatch", 0, 0, 0, 0, 0, 0)
+    else:
+        return (
+            "indexed", f["n_chunks"], f["n_pages"],
+            f["first_row_sum"], f["sum_page_min"],
+            f["sum_page_max"], f["value_sum"],
         )
 
 
@@ -352,11 +329,9 @@ def ingest_parquet_page_index_walk(spark: SparkSession, sf_dir: str) -> DataFram
     regardless of data volume; the audit is Arrow-batched
     mapInPandas, per-document CPU, integer facts only."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _pi_batches,
-        schema=(
-            "doc_id long, status string, n_chunks int, n_pages int, "
-            "first_row_sum long, sum_page_min long, sum_page_max long, "
-            "value_sum long"
-        ),
+    return decode_walk(
+        d, "_pi_batches", _pi_key, _pi_facts,
+        "doc_id long, status string, n_chunks int, n_pages int, "
+        "first_row_sum long, sum_page_min long, sum_page_max long, "
+        "value_sum long",
     ).transform(_presentation_sort, "doc_id")

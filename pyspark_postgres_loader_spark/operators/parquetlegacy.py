@@ -45,9 +45,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,6 +57,7 @@ from .parquetwalk import (
     _TReader,
     first_page_body_span,
 )
+from .walkbatch import decode_walk
 
 _PAGE_DATA_V1 = 0
 _ENC_PLAIN = 0
@@ -294,62 +293,39 @@ def _lg_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_LG_FACT_MEMO: dict[tuple, tuple] = {}
+def _lg_key(doc_id: int) -> tuple:
+    return (doc_id % _LG_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _lg_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _LG_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _LG_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_parquet_legacy(_lg_payload(doc_id))
-                ts = f["columns"]["ts"]
-                dec = f["columns"]["dec"]
-                d18 = f["columns"]["d18"]
-                bs = f["columns"]["b"]
-                ts_dsum = ts_wsum = 0
-                days = set()
-                for i, us in enumerate(ts):
-                    d = us - _LG_BASE_US
-                    ts_dsum += d
-                    ts_wsum += (i + 1) * d
-                    days.add(us // _US_PER_DAY)
-                dec_sum = dec_wsum = n_null_dec = 0
-                for i, u in enumerate(dec):
-                    if u is None:
-                        n_null_dec += 1
-                        continue
-                    dec_sum += u
-                    dec_wsum += (i + 1) * u
-                d18_wsum = sum((i + 1) * u for i, u in enumerate(d18))
-                n_true = sum(bs)
-                b_wsum = sum((i + 1) * v for i, v in enumerate(bs))
-                cache[key] = (
-                    "decoded", f["num_rows"], f["n_pages"], len(days),
-                    ts_dsum, ts_wsum, dec_sum, dec_wsum, n_null_dec,
-                    d18_wsum, n_true, b_wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + (0,) * 11
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status,) + (0,) * 11
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + (0,) * 11
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "n_pages", "n_days",
-            "ts_dsum", "ts_wsum", "dec_sum", "dec_wsum", "n_null_dec",
-            "d18_wsum", "n_true", "b_wsum"]
-    for pdf in it:
-        if pdf.empty:
+def _lg_facts(doc_id: int) -> tuple:
+    f = walk_parquet_legacy(_lg_payload(doc_id))
+    ts = f["columns"]["ts"]
+    dec = f["columns"]["dec"]
+    d18 = f["columns"]["d18"]
+    bs = f["columns"]["b"]
+    ts_dsum = ts_wsum = 0
+    days = set()
+    for i, us in enumerate(ts):
+        d = us - _LG_BASE_US
+        ts_dsum += d
+        ts_wsum += (i + 1) * d
+        days.add(us // _US_PER_DAY)
+    dec_sum = dec_wsum = n_null_dec = 0
+    for i, u in enumerate(dec):
+        if u is None:
+            n_null_dec += 1
             continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        dec_sum += u
+        dec_wsum += (i + 1) * u
+    d18_wsum = sum((i + 1) * u for i, u in enumerate(d18))
+    n_true = sum(bs)
+    b_wsum = sum((i + 1) * v for i, v in enumerate(bs))
+    return (
+        "decoded", f["num_rows"], f["n_pages"], len(days),
+        ts_dsum, ts_wsum, dec_sum, dec_wsum, n_null_dec,
+        d18_wsum, n_true, b_wsum,
+    )
 
 
 def _lg_oracle() -> str:
@@ -443,12 +419,12 @@ def ingest_parquet_legacy_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _lg_batches,
-        schema=("doc_id long, status string, n_rows long, "
-                "n_pages long, n_days long, ts_dsum long, "
-                "ts_wsum long, dec_sum long, dec_wsum long, "
-                "n_null_dec long, d18_wsum long, n_true long, "
-                "b_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_lg_batches", _lg_key, _lg_facts,
+        "doc_id long, status string, n_rows long, n_pages long, n_days long, "
+        "ts_dsum long, ts_wsum long, dec_sum long, dec_wsum long, "
+        "n_null_dec long, d18_wsum long, n_true long, b_wsum long",
+        value_errors=(("CRC", "crc_error"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

@@ -74,6 +74,7 @@ from .parquetwalk import (
     _parse_level_runs,
     _read_rle_levels,
 )
+from .walkbatch import decode_walk
 
 _CONV_LIST = 3
 # INT32 / INT64 / FLOAT / DOUBLE (fixed-width); BYTE_ARRAY is
@@ -501,69 +502,34 @@ def _pn_payload(doc_id: int) -> bytes:
 
 # ------------------------------------------------ spark + oracle
 
-_PN_ZERO = (0,) * 9
 
-# worker-process-scope decode memo (avrowalk r12/r13 lesson: a
-# function-local cache rebuilds per partition iterator AND per pass;
-# the payload decode is deterministic per (group, variant) so the
-# memo is safe for the worker's lifetime)
-_PN_FACT_MEMO: dict[tuple, tuple] = {}
+def _pn_key(doc_id: int) -> tuple:
+    return (doc_id % _PN_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _pn_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _PN_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _PN_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_parquet_nested(_pn_payload(doc_id))
-                emb = f["columns"]["emb.list.element"]
-                n_null = sum(1 for r in emb if r is None)
-                n_empty = sum(1 for r in emb if r == [])
-                n_nullel = n_vals = ssum = wsum = 0
-                for i, row in enumerate(emb):
-                    if not row:
-                        continue
-                    for j, v in enumerate(row):
-                        if v is None:
-                            n_nullel += 1
-                        else:
-                            s = int(round(v * 64))
-                            n_vals += 1
-                            ssum += s
-                            wsum += (i + 1) * (j + 1) * s
-                cache[key] = (
-                    "decoded", f["num_rows"], f["n_row_groups"],
-                    f["n_pages"], n_null, n_empty, n_nullel,
-                    n_vals, ssum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + _PN_ZERO
-            except ValueError as exc:
-                msg = str(exc)
-                status = ("crc_error" if "CRC" in msg
-                          else "bad_levels" if "level" in msg
-                          else "corrupt")
-                cache[key] = (status,) + _PN_ZERO
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + _PN_ZERO
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_rows", "n_row_groups", "n_pages",
-            "n_null_lists", "n_empty_lists", "n_null_elems",
-            "n_values", "sum_scaled", "wsum_scaled"]
-    for pdf in it:
-        if pdf.empty:
+def _pn_facts(doc_id: int) -> tuple:
+    f = walk_parquet_nested(_pn_payload(doc_id))
+    emb = f["columns"]["emb.list.element"]
+    n_null = sum(1 for r in emb if r is None)
+    n_empty = sum(1 for r in emb if r == [])
+    n_nullel = n_vals = ssum = wsum = 0
+    for i, row in enumerate(emb):
+        if not row:
             continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {"doc_id": "int64", "n_rows": "int64",
-             "n_row_groups": "int32", "n_pages": "int32",
-             "n_null_lists": "int64", "n_empty_lists": "int64",
-             "n_null_elems": "int64", "n_values": "int64",
-             "sum_scaled": "int64", "wsum_scaled": "int64"})
+        for j, v in enumerate(row):
+            if v is None:
+                n_nullel += 1
+            else:
+                s = int(round(v * 64))
+                n_vals += 1
+                ssum += s
+                wsum += (i + 1) * (j + 1) * s
+    return (
+        "decoded", f["num_rows"], f["n_row_groups"],
+        f["n_pages"], n_null, n_empty, n_nullel,
+        n_vals, ssum, wsum,
+    )
 
 
 def _pn_oracle() -> str:
@@ -672,14 +638,13 @@ def ingest_parquet_nested_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _pn_batches,
-        schema=(
-            "doc_id long, status string, n_rows long, "
-            "n_row_groups int, n_pages int, n_null_lists long, "
-            "n_empty_lists long, n_null_elems long, n_values long, "
-            "sum_scaled long, wsum_scaled long"
-        ),
+    out = decode_walk(
+        d.repartition(32, combo), "_pn_batches", _pn_key, _pn_facts,
+        "doc_id long, status string, n_rows long, n_row_groups int, "
+        "n_pages int, n_null_lists long, n_empty_lists long, "
+        "n_null_elems long, n_values long, sum_scaled long, wsum_scaled long",
+        value_errors=(("CRC", "crc_error"), ("level", "bad_levels")),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")
 

@@ -37,15 +37,14 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .parquetwalk import _decompress, _parse_level_runs, _TReader
+from .walkbatch import decode_walk
 
 # parquet physical types / encodings (parquet.thrift, public)
 _PT_INT64 = 2
@@ -380,47 +379,23 @@ def _v2_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _v2_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _v2_key(doc_id: int) -> tuple:
+    return (doc_id % _V2_GROUPS, doc_id % 11 == 4, doc_id % 17 == 6,
+            doc_id % 13 == 7)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _V2_GROUPS
-        key = (g, doc_id % 11 == 4, doc_id % 17 == 6, doc_id % 13 == 7)
-        if key not in cache:
-            try:
-                f = walk_parquet_v2(_v2_payload(doc_id))
-                ints = f["ints"]
-                # decoded strings carry their design word — parse it
-                # back so the oracle checks CONTENT, not just counts
-                str_sum = sum(int(s[3:]) for s in f["strs"])
-                cache[key] = (
-                    "decoded", f["n_row_groups"], f["n_pages"],
-                    len(ints), sum(ints),
-                    sum((i + 1) * v for i, v in enumerate(ints)),
-                    str_sum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_row_groups", "n_pages",
-                     "n_values", "value_sum", "wsum", "str_sum"],
-        ).astype(
-            {"doc_id": "int64", "n_row_groups": "int32",
-             "n_pages": "int32", "n_values": "int64",
-             "value_sum": "int64", "wsum": "int64", "str_sum": "int64"}
-        )
+def _v2_facts(doc_id: int) -> tuple:
+    f = walk_parquet_v2(_v2_payload(doc_id))
+    ints = f["ints"]
+    # decoded strings carry their design word — parse it
+    # back so the oracle checks CONTENT, not just counts
+    str_sum = sum(int(s[3:]) for s in f["strs"])
+    return (
+        "decoded", f["n_row_groups"], f["n_pages"],
+        len(ints), sum(ints),
+        sum((i + 1) * v for i, v in enumerate(ints)),
+        str_sum,
+    )
 
 
 def _v2_oracle() -> str:
@@ -491,12 +466,11 @@ def ingest_parquet_v2_delta_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode, ~60 B of integer facts per row re-enter the JVM; the only
     shuffle is the harness orderBy."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _v2_batches,
-        schema=(
-            "doc_id long, status string, n_row_groups int, n_pages int, "
-            "n_values long, value_sum long, wsum long, str_sum long"
-        ),
+    return decode_walk(
+        d, "_v2_batches", _v2_key, _v2_facts,
+        "doc_id long, status string, n_row_groups int, n_pages int, "
+        "n_values long, value_sum long, wsum long, str_sum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")
 
 
@@ -558,47 +532,25 @@ def _dl_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_DL_FACT_MEMO: dict[tuple, tuple] = {}
+def _dl_key(doc_id: int) -> tuple:
+    return (doc_id % _DL_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _dl_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _DL_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _DL_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_parquet_v2(_dl_payload(doc_id))
-                ss = [s.decode() for s in f["strs"]]
-                n = len(ss)
-                suf_sum = suf_wsum = blen_sum = 0
-                for i, s in enumerate(ss):
-                    sx = int(s.split("_", 1)[1])
-                    suf_sum += sx
-                    suf_wsum += (i + 1) * sx
-                    blen_sum += len(s)
-                cache[key] = (
-                    "decoded", n, f["n_pages"], suf_sum, suf_wsum,
-                    blen_sum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_values", "n_pages", "suf_sum",
-            "suf_wsum", "blen_sum"]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+def _dl_facts(doc_id: int) -> tuple:
+    f = walk_parquet_v2(_dl_payload(doc_id))
+    ss = [s.decode() for s in f["strs"]]
+    n = len(ss)
+    suf_sum = suf_wsum = blen_sum = 0
+    for i, s in enumerate(ss):
+        sx = int(s.split("_", 1)[1])
+        suf_sum += sx
+        suf_wsum += (i + 1) * sx
+        blen_sum += len(s)
+    return (
+        "decoded", n, f["n_pages"], suf_sum, suf_wsum,
+        blen_sum,
+    )
 
 
 def _dl_oracle() -> str:
@@ -660,10 +612,11 @@ def ingest_parquet_dlba_walk(
     memo shape as the sibling walks."""
     d = (load_table(spark, sf_dir, "documents")
          .select("doc_id").repartition(32, "doc_id"))
-    out = d.mapInPandas(
-        _dl_batches,
-        schema=("doc_id long, status string, n_values long, "
-                "n_pages long, suf_sum long, suf_wsum long, "
-                "blen_sum long"),
+    out = decode_walk(
+        d, "_dl_batches", _dl_key, _dl_facts,
+        "doc_id long, status string, n_values long, n_pages long, "
+        "suf_sum long, suf_wsum long, blen_sum long",
+        value_errors=(("CRC", "crc_error"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

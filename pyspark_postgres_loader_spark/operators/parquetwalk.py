@@ -34,9 +34,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -46,6 +44,7 @@ from .inflate import inflate_raw
 from .lz4frame import lz4_decompress_block
 from .snappy import snappy_decompress_block
 from .zstdfse import decompress_frame
+from .walkbatch import decode_walk
 
 # ------------------------------------------------ thrift compact
 
@@ -552,44 +551,20 @@ def _pq_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _pq_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _pq_key(doc_id: int) -> tuple:
+    return (doc_id % _PQ_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _PQ_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_parquet(_pq_payload(doc_id))
-                vals = f["values"]
-                vsum = sum(vals)
-                wsum = sum((i + 1) * v for i, v in enumerate(vals))
-                cache[key] = (
-                    "decoded", f["n_row_groups"], f["n_pages"],
-                    len(vals), vsum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_row_groups", "n_pages",
-                     "n_values", "value_sum", "wsum"],
-        ).astype(
-            {"doc_id": "int64", "n_row_groups": "int32",
-             "n_pages": "int32", "n_values": "int64",
-             "value_sum": "int64", "wsum": "int64"}
-        )
+def _pq_facts(doc_id: int) -> tuple:
+    f = walk_parquet(_pq_payload(doc_id))
+    vals = f["values"]
+    vsum = sum(vals)
+    wsum = sum((i + 1) * v for i, v in enumerate(vals))
+    return (
+        "decoded", f["n_row_groups"], f["n_pages"],
+        len(vals), vsum, wsum,
+    )
 
 
 def _pq_oracle() -> str:
@@ -657,10 +632,9 @@ def ingest_parquet_native_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk is exactly how real readers prune row groups/pages; only
     integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _pq_batches,
-        schema=(
-            "doc_id long, status string, n_row_groups int, n_pages int, "
-            "n_values long, value_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_pq_batches", _pq_key, _pq_facts,
+        "doc_id long, status string, n_row_groups int, n_pages int, "
+        "n_values long, value_sum long, wsum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

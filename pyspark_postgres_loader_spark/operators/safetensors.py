@@ -44,14 +44,13 @@ from __future__ import annotations
 
 import json
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _MAX_HEADER = 100_000_000  # the spec's header cap
 
@@ -224,49 +223,25 @@ def _st_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _st_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _st_key(doc_id: int) -> tuple:
+    return (doc_id % _ST_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _ST_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_safetensors(_st_payload(doc_id))
-                t = f["tensors"]
-                i_sum = (
-                    sum(t["weights.w0"]["values"])
-                    + sum(t["weights.w1"]["values"])
-                    + sum(t["tokens.mask"]["values"])
-                )
-                f_sum = sum(int(v) for v in t["emb.scale"]["values"])
-                n_elems = sum(len(e["values"]) for e in t.values())
-                cache[key] = (
-                    "decoded", len(t), n_elems, f["n_meta"],
-                    i_sum, f_sum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = ("mismatch" if "tile" in str(exc) else "corrupt")
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_tensors", "n_elems",
-                     "n_meta", "i_sum", "f_sum"],
-        ).astype(
-            {"doc_id": "int64", "n_tensors": "int32",
-             "n_elems": "int64", "n_meta": "int32",
-             "i_sum": "int64", "f_sum": "int64"}
-        )
+def _st_facts(doc_id: int) -> tuple:
+    f = walk_safetensors(_st_payload(doc_id))
+    t = f["tensors"]
+    i_sum = (
+        sum(t["weights.w0"]["values"])
+        + sum(t["weights.w1"]["values"])
+        + sum(t["tokens.mask"]["values"])
+    )
+    f_sum = sum(int(v) for v in t["emb.scale"]["values"])
+    n_elems = sum(len(e["values"]) for e in t.values())
+    return (
+        "decoded", len(t), n_elems, f["n_meta"],
+        i_sum, f_sum,
+    )
 
 
 def _st_oracle() -> str:
@@ -345,10 +320,9 @@ def ingest_safetensors_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): header-first is the format's own lazy-load
     path; Arrow-batched mapInPandas, integer facts only."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _st_batches,
-        schema=(
-            "doc_id long, status string, n_tensors int, n_elems long, "
-            "n_meta int, i_sum long, f_sum long"
-        ),
+    return decode_walk(
+        d, "_st_batches", _st_key, _st_facts,
+        "doc_id long, status string, n_tensors int, n_elems long, n_meta int, "
+        "i_sum long, f_sum long",
+        value_errors=(("tile", "mismatch"),),
     ).transform(_presentation_sort, "doc_id")

@@ -228,44 +228,17 @@ def _sn_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _sn_batches(it):
-    import pandas as pd
+def _sn_key(doc_id: int) -> tuple:
+    return (doc_id % _SN_GROUPS, doc_id % 2, doc_id % 11 == 3,
+            doc_id % 17 == 2, doc_id % 13 == 5)
 
-    cache: dict[tuple, tuple] = {}
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _SN_GROUPS
-        key = (g, doc_id % 2, doc_id % 11 == 3, doc_id % 17 == 2,
-               doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_snappy_frame(_sn_payload(doc_id))
-                cache[key] = (
-                    "decoded", f["n_chunks"], f["n_compressed"],
-                    f["content_len"], f["content_sum"], f["wsum"],
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_chunks", "n_compressed",
-                     "content_len", "content_sum", "wsum"],
-        ).astype(
-            {"doc_id": "int64", "n_chunks": "int32",
-             "n_compressed": "int32", "content_len": "int64",
-             "content_sum": "int64", "wsum": "int64"}
-        )
+def _sn_facts(doc_id: int) -> tuple:
+    f = walk_snappy_frame(_sn_payload(doc_id))
+    return (
+        "decoded", f["n_chunks"], f["n_compressed"],
+        f["content_len"], f["content_sum"], f["wsum"],
+    )
 
 
 def _sn_oracle() -> str:
@@ -326,6 +299,7 @@ def _sn_oracle() -> str:
 
 def _register_query() -> None:
     from ..registry import register
+    from .walkbatch import decode_walk
     from ..tables import load_table
     from ..functions.planctl import presentation_sort as _presentation_sort
 
@@ -348,13 +322,11 @@ def _register_query() -> None:
         chunks chain sequentially WITHIN a stream, corpus parallelism
         is across documents; only integer facts re-enter the JVM."""
         d = load_table(spark, sf_dir, "documents").select("doc_id")
-        return d.mapInPandas(
-            _sn_batches,
-            schema=(
-                "doc_id long, status string, n_chunks int, "
-                "n_compressed int, content_len long, content_sum long, "
-                "wsum long"
-            ),
+        return decode_walk(
+            d, "_sn_batches", _sn_key, _sn_facts,
+            "doc_id long, status string, n_chunks int, n_compressed int, "
+            "content_len long, content_sum long, wsum long",
+            value_errors=(("CRC", "crc_error"),),
         ).transform(_presentation_sort, "doc_id")
 
 

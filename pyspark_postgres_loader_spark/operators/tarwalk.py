@@ -38,14 +38,13 @@ Reference: no counterpart (SURVEY.md §2l multimodal/ingest extension).
 
 from __future__ import annotations
 
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _BLK = 512
 
@@ -254,53 +253,25 @@ def _tar_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _tar_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _tar_key(doc_id: int) -> tuple:
+    return (doc_id % _TAR_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _TAR_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                members = walk_tar_members(_tar_payload(doc_id))
-                samples = {n.rsplit(".", 1)[0] for n, _c, _t in members}
-                csum = wsum = off = 0
-                for _n, c, _t in members:
-                    for i, b in enumerate(c):
-                        csum += b
-                        wsum += (off + i + 1) * b
-                    off += len(c)
-                names_len = sum(len(n) for n, _c, _t in members)
-                cache[key] = (
-                    "decoded", len(members), len(samples), off, csum, wsum,
-                    names_len,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CHECKSUM" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_members", "n_samples", "total_bytes",
-                "content_sum", "wsum", "names_len",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_members": "int32", "n_samples": "int32",
-                "total_bytes": "int64", "content_sum": "int64",
-                "wsum": "int64", "names_len": "int32",
-            }
-        )
+def _tar_facts(doc_id: int) -> tuple:
+    members = walk_tar_members(_tar_payload(doc_id))
+    samples = {n.rsplit(".", 1)[0] for n, _c, _t in members}
+    csum = wsum = off = 0
+    for _n, c, _t in members:
+        for i, b in enumerate(c):
+            csum += b
+            wsum += (off + i + 1) * b
+        off += len(c)
+    names_len = sum(len(n) for n, _c, _t in members)
+    return (
+        "decoded", len(members), len(samples), off, csum, wsum,
+        names_len,
+    )
 
 
 def _tar_oracle() -> str:
@@ -392,12 +363,11 @@ def ingest_tar_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer facts re-enter the JVM; shard-level parallelism is the
     WebDataset design this walk serves."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _tar_batches,
-        schema=(
-            "doc_id long, status string, n_members int, n_samples int, "
-            "total_bytes long, content_sum long, wsum long, names_len int"
-        ),
+    return decode_walk(
+        d, "_tar_batches", _tar_key, _tar_facts,
+        "doc_id long, status string, n_members int, n_samples int, "
+        "total_bytes long, content_sum long, wsum long, names_len int",
+        value_errors=(("CHECKSUM", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")
 
 
@@ -516,55 +486,25 @@ def _tp_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _tp_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _tp_key(doc_id: int) -> tuple:
+    return (doc_id % _TP_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5, doc_id % 19 == 7)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _TP_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2,
-               doc_id % 13 == 5, doc_id % 19 == 7)
-        if key not in cache:
-            try:
-                members = walk_tar_members(_tp_payload(doc_id))
-                csum = wsum = off = 0
-                for _n, c, _t in members:
-                    for i, b in enumerate(c):
-                        csum += b
-                        wsum += (off + i + 1) * b
-                    off += len(c)
-                cache[key] = (
-                    "decoded", len(members),
-                    sum(1 for n, _c, _t in members if len(n) > 100),
-                    sum(len(n) for n, _c, _t in members),
-                    off, csum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CHECKSUM" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_members", "n_long_names",
-                "names_len", "total_bytes", "content_sum", "wsum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_members": "int32",
-                "n_long_names": "int32", "names_len": "int64",
-                "total_bytes": "int64", "content_sum": "int64",
-                "wsum": "int64",
-            }
-        )
+def _tp_facts(doc_id: int) -> tuple:
+    members = walk_tar_members(_tp_payload(doc_id))
+    csum = wsum = off = 0
+    for _n, c, _t in members:
+        for i, b in enumerate(c):
+            csum += b
+            wsum += (off + i + 1) * b
+        off += len(c)
+    return (
+        "decoded", len(members),
+        sum(1 for n, _c, _t in members if len(n) > 100),
+        sum(len(n) for n, _c, _t in members),
+        off, csum, wsum,
+    )
 
 
 def _tp_oracle() -> str:
@@ -649,11 +589,9 @@ def ingest_tar_pax_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest_tar_member_walk; sequential within a shard by design
     (WebDataset), parallel across shards."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _tp_batches,
-        schema=(
-            "doc_id long, status string, n_members int, "
-            "n_long_names int, names_len long, total_bytes long, "
-            "content_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_tp_batches", _tp_key, _tp_facts,
+        "doc_id long, status string, n_members int, n_long_names int, "
+        "names_len long, total_bytes long, content_sum long, wsum long",
+        value_errors=(("CHECKSUM", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

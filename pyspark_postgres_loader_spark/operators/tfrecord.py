@@ -34,14 +34,13 @@ Reference: no counterpart (SURVEY.md §2l multimodal/ingest extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _POLY = 0x82F63B78  # CRC-32C reflected
 _MASK_DELTA = 0xA282EAD8
@@ -131,46 +130,19 @@ def _tfr_payload(doc_id: int) -> bytes:
     return stream
 
 
-def _tfr_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _tfr_key(doc_id: int) -> tuple:
+    return (doc_id % _TFR_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _TFR_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2)
-        if key not in cache:
-            try:
-                records = walk_tfrecords(_tfr_payload(doc_id))
-                csum = wsum = off = 0
-                for p in records:
-                    for i, b in enumerate(p):
-                        csum += b
-                        wsum += (off + i + 1) * b
-                    off += len(p)
-                cache[key] = ("decoded", len(records), off, csum, wsum)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_records", "total_bytes",
-                "content_sum", "wsum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_records": "int32",
-                "total_bytes": "int64", "content_sum": "int64",
-                "wsum": "int64",
-            }
-        )
+def _tfr_facts(doc_id: int) -> tuple:
+    records = walk_tfrecords(_tfr_payload(doc_id))
+    csum = wsum = off = 0
+    for p in records:
+        for i, b in enumerate(p):
+            csum += b
+            wsum += (off + i + 1) * b
+        off += len(p)
+    return ("decoded", len(records), off, csum, wsum)
 
 
 def _tfr_oracle() -> str:
@@ -235,10 +207,9 @@ def ingest_tfrecord_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential within a shard by the format's design, parallel across
     shards — exactly TensorFlow's own reader model."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _tfr_batches,
-        schema=(
-            "doc_id long, status string, n_records int, total_bytes long, "
-            "content_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_tfr_batches", _tfr_key, _tfr_facts,
+        "doc_id long, status string, n_records int, total_bytes long, "
+        "content_sum long, wsum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

@@ -38,14 +38,13 @@ Reference: no counterpart (SURVEY.md §2l multimodal extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _II, _MM = b"II", b"MM"
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}  # BYTE ASCII SHORT LONG RATIONAL
@@ -518,50 +517,24 @@ def _tiff_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _tiff_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _tiff_key(doc_id: int) -> tuple:
+    return (doc_id % _TIFF_GROUPS, doc_id % 11 == 3, doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _TIFF_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                w, h, be, n_strips, rows = decode_tiff_grey(
-                    _tiff_payload(doc_id)
-                )
-                csum = wsum = 0
-                pos = 0
-                for row in rows:
-                    for b in row:
-                        pos += 1
-                        csum += b
-                        wsum += pos * b
-                cache[key] = (
-                    "decoded", w, h, int(be), n_strips, csum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "width", "height", "big_endian",
-                "n_strips", "px_sum", "wpx_sum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "width": "int32", "height": "int32",
-                "big_endian": "int32", "n_strips": "int32",
-                "px_sum": "int64", "wpx_sum": "int64",
-            }
-        )
+def _tiff_facts(doc_id: int) -> tuple:
+    w, h, be, n_strips, rows = decode_tiff_grey(
+        _tiff_payload(doc_id)
+    )
+    csum = wsum = 0
+    pos = 0
+    for row in rows:
+        for b in row:
+            pos += 1
+            csum += b
+            wsum += pos * b
+    return (
+        "decoded", w, h, int(be), n_strips, csum, wsum,
+    )
 
 
 def _tiff_oracle() -> str:
@@ -626,12 +599,10 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): same Arrow-batched mapInPandas decode map as
     every codec query; integer facts only re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _tiff_batches,
-        schema=(
-            "doc_id long, status string, width int, height int, "
-            "big_endian int, n_strips int, px_sum long, wpx_sum long"
-        ),
+    return decode_walk(
+        d, "_tiff_batches", _tiff_key, _tiff_facts,
+        "doc_id long, status string, width int, height int, big_endian int, "
+        "n_strips int, px_sum long, wpx_sum long",
     ).transform(_presentation_sort, "doc_id")
 
 
@@ -680,52 +651,26 @@ def _tl_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _tl_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _tl_key(doc_id: int) -> tuple:
+    return (doc_id % _TL_GROUPS, doc_id % 11 == 3, doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _TL_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                w, h, be, n_chunks, rows = decode_tiff_grey(
-                    _tl_payload(doc_id)
-                )
-                csum = wsum = 0
-                pos = 0
-                for row in rows:
-                    for b in row:
-                        pos += 1
-                        csum += b
-                        wsum += pos * b
-                cache[key] = (
-                    "decoded", w, h, int(be), int(g % 2 == 0),
-                    n_chunks, csum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "width", "height", "big_endian",
-                "tiled", "n_chunks", "px_sum", "wpx_sum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "width": "int32", "height": "int32",
-                "big_endian": "int32", "tiled": "int32",
-                "n_chunks": "int32", "px_sum": "int64",
-                "wpx_sum": "int64",
-            }
-        )
+def _tl_facts(doc_id: int) -> tuple:
+    g = doc_id % _TL_GROUPS
+    w, h, be, n_chunks, rows = decode_tiff_grey(
+        _tl_payload(doc_id)
+    )
+    csum = wsum = 0
+    pos = 0
+    for row in rows:
+        for b in row:
+            pos += 1
+            csum += b
+            wsum += pos * b
+    return (
+        "decoded", w, h, int(be), int(g % 2 == 0),
+        n_chunks, csum, wsum,
+    )
 
 
 def _tl_oracle() -> str:
@@ -795,11 +740,8 @@ def multimodal_tiff_lzw_tiled_decode(
     Scale notes (100 TB): the standard Arrow-batched mapInPandas
     decode map; integer facts only re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _tl_batches,
-        schema=(
-            "doc_id long, status string, width int, height int, "
-            "big_endian int, tiled int, n_chunks int, px_sum long, "
-            "wpx_sum long"
-        ),
+    return decode_walk(
+        d, "_tl_batches", _tl_key, _tl_facts,
+        "doc_id long, status string, width int, height int, big_endian int, "
+        "tiled int, n_chunks int, px_sum long, wpx_sum long",
     ).transform(_presentation_sort, "doc_id")

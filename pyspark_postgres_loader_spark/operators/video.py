@@ -37,6 +37,7 @@ from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
 from .multimodal import _decode_jpeg, build_jpeg_grey
+from .walkbatch import decode_walk
 
 
 def build_avi_mjpeg(frames: list[bytes], w: int, h: int, fps: int = 25) -> bytes:
@@ -176,53 +177,25 @@ def _video_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _video_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: fabricate → demux → per-frame native JPEG
-    decode → stride sample → integer facts. Typed routing as usual:
-    NotImplementedError → 'unsupported', anything else → 'corrupt'."""
+def _video_key(doc_id: int) -> tuple:
+    return (doc_id % _VID_GROUPS, doc_id % 13 == 8, doc_id % 19 == 2)
+
+
+def _video_facts(doc_id: int) -> tuple:
     import numpy as np
 
-    cache: dict[tuple[int, bool, bool], tuple] = {}
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _VID_GROUPS
-        key = (g, doc_id % 13 == 8, doc_id % 19 == 2)
-        if key not in cache:
-            stride = 1 + g % 2
-            try:
-                w, h, frames = decode_avi_mjpeg(_video_payload(doc_id))
-                sampled = list(range(0, len(frames), stride))
-                px = wpx = 0
-                for f in sampled:
-                    s = int(frames[f].astype(np.int64).sum())
-                    px += s
-                    wpx += (f + 1) * s
-                cache[key] = (
-                    "decoded", w, h, len(frames), len(sampled), px, wpx
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "width", "height", "n_frames",
-                "n_sampled", "px_sum", "wpx_sum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "width": "int32", "height": "int32",
-                "n_frames": "int32", "n_sampled": "int32",
-                "px_sum": "int64", "wpx_sum": "int64",
-            }
-        )
+    g = doc_id % _VID_GROUPS
+    stride = 1 + g % 2
+    w, h, frames = decode_avi_mjpeg(_video_payload(doc_id))
+    sampled = list(range(0, len(frames), stride))
+    px = wpx = 0
+    for f in sampled:
+        s = int(frames[f].astype(np.int64).sum())
+        px += s
+        wpx += (f + 1) * s
+    return (
+        "decoded", w, h, len(frames), len(sampled), px, wpx
+    )
 
 
 def _video_oracle() -> str:
@@ -300,12 +273,10 @@ def multimodal_video_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     query; video payloads dominate corpus bytes but only ~50 bytes of
     facts per row re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _video_batches,
-        schema=(
-            "doc_id long, status string, width int, height int, "
-            "n_frames int, n_sampled int, px_sum long, wpx_sum long"
-        ),
+    return decode_walk(
+        d, "_video_batches", _video_key, _video_facts,
+        "doc_id long, status string, width int, height int, n_frames int, "
+        "n_sampled int, px_sum long, wpx_sum long",
     ).transform(_presentation_sort, "doc_id")
 
 

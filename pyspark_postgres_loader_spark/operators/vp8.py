@@ -65,14 +65,13 @@ from __future__ import annotations
 
 import base64
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .walkbatch import decode_walk
 
 # ---------------------------------------------------------------- tables
 # Extracted byte-exact from the system libwebp (see module docstring);
@@ -1170,48 +1169,25 @@ def _v8_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_V8_FACT_MEMO: dict[tuple, tuple] = {}
+def _v8_key(doc_id: int) -> tuple:
+    return (doc_id % _V8_GROUPS, doc_id % 11 == 3, doc_id % 13 == 5)
 
 
-def _v8_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _V8_FACT_MEMO
+def _v8_facts(doc_id: int) -> tuple:
+    import numpy as np
 
-    def facts(doc_id: int) -> tuple:
-        import numpy as np
-
-        g = doc_id % _V8_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = decode_vp8(_v8_payload(doc_id))
-                Y, U, V = f["y"], f["u"], f["v"]
-                iy = np.arange(Y.size, dtype=np.int64) + 1
-                iu = np.arange(U.size, dtype=np.int64) + 1
-                cache[key] = (
-                    "decoded", f["width"], f["height"],
-                    f["filter_level"], int(f["seg_enabled"]),
-                    int(Y.sum()), int(U.sum()), int(V.sum()),
-                    int((Y.flatten().astype(np.int64) * iy).sum()),
-                    int((U.flatten().astype(np.int64) * iu).sum())
-                    + 2 * int((V.flatten().astype(np.int64) * iu).sum()),
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + (0,) * 9
-            except ValueError:
-                cache[key] = ("corrupt",) + (0,) * 9
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + (0,) * 9
-        return cache[key]
-
-    cols = ["doc_id", "status", "width", "height", "filter_level",
-            "seg_enabled", "y_sum", "u_sum", "v_sum", "y_wsum",
-            "uv_wsum"]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        rows = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(rows, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+    f = decode_vp8(_v8_payload(doc_id))
+    Y, U, V = f["y"], f["u"], f["v"]
+    iy = np.arange(Y.size, dtype=np.int64) + 1
+    iu = np.arange(U.size, dtype=np.int64) + 1
+    return (
+        "decoded", f["width"], f["height"],
+        f["filter_level"], int(f["seg_enabled"]),
+        int(Y.sum()), int(U.sum()), int(V.sum()),
+        int((Y.flatten().astype(np.int64) * iy).sum()),
+        int((U.flatten().astype(np.int64) * iu).sum())
+        + 2 * int((V.flatten().astype(np.int64) * iu).sum()),
+    )
 
 
 def _v8_oracle() -> str:
@@ -1273,10 +1249,11 @@ def multimodal_webp_lossy_decode(
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _v8_batches,
-        schema=("doc_id long, status string, width long, height long, "
-                "filter_level long, seg_enabled long, y_sum long, "
-                "u_sum long, v_sum long, y_wsum long, uv_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_v8_batches", _v8_key, _v8_facts,
+        "doc_id long, status string, width long, height long, "
+        "filter_level long, seg_enabled long, y_sum long, u_sum long, "
+        "v_sum long, y_wsum long, uv_wsum long",
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

@@ -35,14 +35,13 @@ from __future__ import annotations
 
 import base64
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _CRLF = b"\r\n"
 
@@ -174,51 +173,23 @@ def _warc_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _warc_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _warc_key(doc_id: int) -> tuple:
+    return (doc_id % _WARC_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _WARC_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                records = walk_warc_records(_warc_payload(doc_id))
-                csum = wsum = off = 0
-                for _t, block in records:
-                    for i, b in enumerate(block):
-                        csum += b
-                        wsum += (off + i + 1) * b
-                    off += len(block)
-                n_resp = sum(1 for t, _b in records if t == "response")
-                cache[key] = (
-                    "decoded", len(records), n_resp, off, csum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "DIGEST" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_records", "n_responses",
-                "total_bytes", "content_sum", "wsum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_records": "int32",
-                "n_responses": "int32", "total_bytes": "int64",
-                "content_sum": "int64", "wsum": "int64",
-            }
-        )
+def _warc_facts(doc_id: int) -> tuple:
+    records = walk_warc_records(_warc_payload(doc_id))
+    csum = wsum = off = 0
+    for _t, block in records:
+        for i, b in enumerate(block):
+            csum += b
+            wsum += (off + i + 1) * b
+        off += len(block)
+    n_resp = sum(1 for t, _b in records if t == "response")
+    return (
+        "decoded", len(records), n_resp, off, csum, wsum,
+    )
 
 
 def _warc_oracle() -> str:
@@ -298,10 +269,9 @@ def ingest_warc_record_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential within a WARC file by design, parallel across the
     crawl's file set — the Common Crawl layout itself."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _warc_batches,
-        schema=(
-            "doc_id long, status string, n_records int, n_responses int, "
-            "total_bytes long, content_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_warc_batches", _warc_key, _warc_facts,
+        "doc_id long, status string, n_records int, n_responses int, "
+        "total_bytes long, content_sum long, wsum long",
+        value_errors=(("DIGEST", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

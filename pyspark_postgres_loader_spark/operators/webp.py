@@ -44,14 +44,13 @@ reference repo has no image surface (SURVEY.md §2 extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .walkbatch import decode_walk
 
 # ------------------------------------------------------------- bits
 
@@ -939,51 +938,30 @@ def _wl_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_WL_FACT_MEMO: dict[tuple, tuple] = {}
+def _wl_key(doc_id: int) -> tuple:
+    fam = doc_id % 5
+    g = doc_id % _WL_GROUPS if fam < 2 else 0
+    return (fam, g, doc_id % 11 == 3, doc_id % 13 == 5)
 
 
-def _wl_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _WL_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        fam = doc_id % 5
-        g = doc_id % _WL_GROUPS if fam < 2 else 0
-        key = (fam, g, doc_id % 11 == 3, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = decode_vp8l(_wl_payload(doc_id))
-                r_sum = g_sum = b_sum = a_sum = pos_wsum = 0
-                for i, p in enumerate(f["pixels"]):
-                    r = (p >> 16) & 0xFF
-                    gg = (p >> 8) & 0xFF
-                    b = p & 0xFF
-                    a = (p >> 24) & 0xFF
-                    r_sum += r
-                    g_sum += gg
-                    b_sum += b
-                    a_sum += a
-                    pos_wsum += (i + 1) * (r + 2 * gg + 3 * b + a)
-                cache[key] = (
-                    "decoded", f["width"], f["height"],
-                    f["width"] * f["height"], r_sum, g_sum, b_sum,
-                    a_sum, pos_wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + (0,) * 8
-            except ValueError:
-                cache[key] = ("corrupt",) + (0,) * 8
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + (0,) * 8
-        return cache[key]
-
-    cols = ["doc_id", "status", "width", "height", "n_pix", "r_sum",
-            "g_sum", "b_sum", "a_sum", "pos_wsum"]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+def _wl_facts(doc_id: int) -> tuple:
+    f = decode_vp8l(_wl_payload(doc_id))
+    r_sum = g_sum = b_sum = a_sum = pos_wsum = 0
+    for i, p in enumerate(f["pixels"]):
+        r = (p >> 16) & 0xFF
+        gg = (p >> 8) & 0xFF
+        b = p & 0xFF
+        a = (p >> 24) & 0xFF
+        r_sum += r
+        g_sum += gg
+        b_sum += b
+        a_sum += a
+        pos_wsum += (i + 1) * (r + 2 * gg + 3 * b + a)
+    return (
+        "decoded", f["width"], f["height"],
+        f["width"] * f["height"], r_sum, g_sum, b_sum,
+        a_sum, pos_wsum,
+    )
 
 
 def _wl_oracle() -> str:
@@ -1097,10 +1075,10 @@ def multimodal_webp_lossless_decode(
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _wl_batches,
-        schema=("doc_id long, status string, width long, height long, "
-                "n_pix long, r_sum long, g_sum long, b_sum long, "
-                "a_sum long, pos_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_wl_batches", _wl_key, _wl_facts,
+        "doc_id long, status string, width long, height long, n_pix long, "
+        "r_sum long, g_sum long, b_sum long, a_sum long, pos_wsum long",
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

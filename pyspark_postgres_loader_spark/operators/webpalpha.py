@@ -41,9 +41,7 @@ from __future__ import annotations
 
 import base64
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,6 +49,7 @@ from ..registry import register
 from ..tables import load_table
 from .vp8 import _V8_FACTS, _V8_GOLDEN_B64, decode_vp8
 from .webp import decode_vp8l_alpha, encode_vp8l_lossless
+from .walkbatch import decode_walk
 
 _F_ALPHA = 0x10
 _F_ANIM = 0x02
@@ -357,43 +356,21 @@ def _wx_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_WX_FACT_MEMO: dict[tuple, tuple] = {}
+def _wx_key(doc_id: int) -> tuple:
+    return (doc_id % _WX_GROUPS, doc_id % 11 == 3, doc_id % 13 == 5)
 
 
-def _wx_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _WX_FACT_MEMO
+def _wx_facts(doc_id: int) -> tuple:
+    import numpy as np
 
-    def facts(doc_id: int) -> tuple:
-        import numpy as np
-
-        g = doc_id % _WX_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_webp_alpha(_wx_payload(doc_id))
-                a = np.asarray(f["alpha"], dtype=np.int64)
-                ia = np.arange(a.size, dtype=np.int64) + 1
-                cache[key] = (
-                    "decoded", f["width"], f["height"], f["filter"],
-                    f["compression"], int(a.sum()),
-                    int((a * ia).sum()), int(f["y"].sum()),
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + (0,) * 7
-            except ValueError:
-                cache[key] = ("corrupt",) + (0,) * 7
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + (0,) * 7
-        return cache[key]
-
-    cols = ["doc_id", "status", "width", "height", "filter_method",
-            "compression", "a_sum", "a_wsum", "y_sum"]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        rows = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(rows, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+    f = walk_webp_alpha(_wx_payload(doc_id))
+    a = np.asarray(f["alpha"], dtype=np.int64)
+    ia = np.arange(a.size, dtype=np.int64) + 1
+    return (
+        "decoded", f["width"], f["height"], f["filter"],
+        f["compression"], int(a.sum()),
+        int((a * ia).sum()), int(f["y"].sum()),
+    )
 
 
 def _wx_oracle() -> str:
@@ -450,10 +427,11 @@ def multimodal_webp_alpha_decode(
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _wx_batches,
-        schema=("doc_id long, status string, width long, height long, "
-                "filter_method long, compression long, a_sum long, "
-                "a_wsum long, y_sum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_wx_batches", _wx_key, _wx_facts,
+        "doc_id long, status string, width long, height long, "
+        "filter_method long, compression long, a_sum long, a_wsum long, "
+        "y_sum long",
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

@@ -44,9 +44,7 @@ has no image surface (SURVEY.md §2 extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,6 +52,7 @@ from ..registry import register
 from ..tables import load_table
 from .vp8 import _V8_FACTS, _V8_GOLDEN_B64, decode_vp8
 from .webp import decode_vp8l, encode_vp8l_lossless
+from .walkbatch import decode_walk
 
 _F_ANIM = 0x02
 
@@ -272,57 +271,35 @@ def _wa_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_WA_FACT_MEMO: dict[tuple, tuple] = {}
+def _wa_key(doc_id: int) -> tuple:
+    return (doc_id % _WA_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _wa_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _WA_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _WA_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_webp_anim(_wa_payload(doc_id))
-                dur_sum = 0
-                pix_wsum = 0
-                off_sum = 0
-                for fi, fr in enumerate(f["frames"]):
-                    dur_sum += fr["duration"]
-                    off_sum += fr["x"] + 10 * fr["y"]
-                    if fr["kind"] == "vp8":
-                        Y, U, V = fr["pixels"]
-                        pix_wsum += (fi + 1) * (
-                            int(Y.sum()) + 2 * int(U.sum())
-                            + 3 * int(V.sum()))
-                        continue
-                    for i, p in enumerate(fr["pixels"]):
-                        r = (p >> 16) & 0xFF
-                        gg = (p >> 8) & 0xFF
-                        b = p & 0xFF
-                        pix_wsum += (fi + 1) * (i + 1) * (r + 2 * gg + 3 * b)
-                cache[key] = (
-                    "decoded", len(f["frames"]), f["canvas_w"],
-                    f["canvas_h"], f["loop_count"], dur_sum, off_sum,
-                    pix_wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported",) + (0,) * 7
-            except ValueError as exc:
-                status = "mismatch" if "DIMS" in str(exc) else "corrupt"
-                cache[key] = (status,) + (0,) * 7
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + (0,) * 7
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_frames", "canvas_w", "canvas_h",
-            "loop_count", "dur_sum", "off_sum", "pix_wsum"]
-    for pdf in it:
-        if pdf.empty:
+def _wa_facts(doc_id: int) -> tuple:
+    f = walk_webp_anim(_wa_payload(doc_id))
+    dur_sum = 0
+    pix_wsum = 0
+    off_sum = 0
+    for fi, fr in enumerate(f["frames"]):
+        dur_sum += fr["duration"]
+        off_sum += fr["x"] + 10 * fr["y"]
+        if fr["kind"] == "vp8":
+            Y, U, V = fr["pixels"]
+            pix_wsum += (fi + 1) * (
+                int(Y.sum()) + 2 * int(U.sum())
+                + 3 * int(V.sum()))
             continue
-        out = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(out, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+        for i, p in enumerate(fr["pixels"]):
+            r = (p >> 16) & 0xFF
+            gg = (p >> 8) & 0xFF
+            b = p & 0xFF
+            pix_wsum += (fi + 1) * (i + 1) * (r + 2 * gg + 3 * b)
+    return (
+        "decoded", len(f["frames"]), f["canvas_w"],
+        f["canvas_h"], f["loop_count"], dur_sum, off_sum,
+        pix_wsum,
+    )
 
 
 def _wa_oracle() -> str:
@@ -426,10 +403,12 @@ def multimodal_webp_anim_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _wa_batches,
-        schema=("doc_id long, status string, n_frames long, "
-                "canvas_w long, canvas_h long, loop_count long, "
-                "dur_sum long, off_sum long, pix_wsum long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_wa_batches", _wa_key, _wa_facts,
+        "doc_id long, status string, n_frames long, canvas_w long, "
+        "canvas_h long, loop_count long, dur_sum long, off_sum long, "
+        "pix_wsum long",
+        value_errors=(("DIMS", "mismatch"),),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

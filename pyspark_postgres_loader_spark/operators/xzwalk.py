@@ -33,14 +33,13 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _M32 = 0xFFFFFFFF
 
@@ -636,45 +635,21 @@ def _xz_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _xz_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _xz_key(doc_id: int) -> tuple:
+    return (doc_id % _XZ_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _XZ_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                data, st = decompress_xz(_xz_payload(doc_id))
-                csum = wsum = 0
-                for i, b in enumerate(data):
-                    csum += b
-                    wsum += (i + 1) * b
-                cache[key] = (
-                    "decoded", st["n_blocks"], st["check"], len(data),
-                    csum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, "", 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, "", 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, "", 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "n_blocks", "check_kind",
-                     "content_len", "content_sum", "wsum"],
-        ).astype(
-            {"doc_id": "int64", "n_blocks": "int32",
-             "content_len": "int64", "content_sum": "int64",
-             "wsum": "int64"}
-        )
+def _xz_facts(doc_id: int) -> tuple:
+    data, st = decompress_xz(_xz_payload(doc_id))
+    csum = wsum = 0
+    for i, b in enumerate(data):
+        csum += b
+        wsum += (i + 1) * b
+    return (
+        "decoded", st["n_blocks"], st["check"], len(data),
+        csum, wsum,
+    )
 
 
 def _xz_oracle() -> str:
@@ -742,10 +717,9 @@ def ingest_xz_lzma2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks chain sequentially WITHIN a stream, corpus parallelism is
     across documents; only integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _xz_batches,
-        schema=(
-            "doc_id long, status string, n_blocks int, check_kind string, "
-            "content_len long, content_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_xz_batches", _xz_key, _xz_facts,
+        "doc_id long, status string, n_blocks int, check_kind string, "
+        "content_len long, content_sum long, wsum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

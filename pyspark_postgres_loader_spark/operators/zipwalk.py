@@ -42,14 +42,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _LFH_SIG = b"PK\x03\x04"
 _CDE_SIG = b"PK\x01\x02"
@@ -247,67 +246,29 @@ def _zip_payload(doc_id: int) -> bytes:
     return bytes(payload)
 
 
-def _zip_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _zip_key(doc_id: int) -> tuple:
+    return (doc_id % _ZIP_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5, doc_id % 19 == 7)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _ZIP_GROUPS
-        key = (
-            g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5,
-            doc_id % 19 == 7,
-        )
-        if key not in cache:
-            try:
-                members = walk_zip_members(_zip_payload(doc_id))
-                total = sum(len(c) for _n, c, _m in members)
-                csum = wsum = 0
-                off = 0
-                for _name, c, _method in members:
-                    for i, b in enumerate(c):
-                        csum += b
-                        wsum += (off + i + 1) * b
-                    off += len(c)
-                names_len = sum(len(n) for n, _c, _m in members)
-                n_deflate = sum(
-                    1 for _n, _c, m in members if m == _METHOD_DEFLATE
-                )
-                cache[key] = (
-                    "decoded", len(members), total, csum, wsum,
-                    names_len, n_deflate,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                msg = str(exc)
-                if "CRC" in msg:
-                    status = "crc_error"
-                elif "MISMATCH" in msg:
-                    status = "mismatch"
-                else:
-                    status = "corrupt"
-                cache[key] = (status, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_entries", "total_bytes",
-                "content_sum", "wsum", "names_len", "n_deflate",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_entries": "int32",
-                "total_bytes": "int64", "content_sum": "int64",
-                "wsum": "int64", "names_len": "int32",
-                "n_deflate": "int32",
-            }
-        )
+def _zip_facts(doc_id: int) -> tuple:
+    members = walk_zip_members(_zip_payload(doc_id))
+    total = sum(len(c) for _n, c, _m in members)
+    csum = wsum = 0
+    off = 0
+    for _name, c, _method in members:
+        for i, b in enumerate(c):
+            csum += b
+            wsum += (off + i + 1) * b
+        off += len(c)
+    names_len = sum(len(n) for n, _c, _m in members)
+    n_deflate = sum(
+        1 for _n, _c, m in members if m == _METHOD_DEFLATE
+    )
+    return (
+        "decoded", len(members), total, csum, wsum,
+        names_len, n_deflate,
+    )
 
 
 def _zip_oracle() -> str:
@@ -389,10 +350,9 @@ def ingest_zip_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): Arrow-batched mapInPandas decode map; only
     integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _zip_batches,
-        schema=(
-            "doc_id long, status string, n_entries int, total_bytes long, "
-            "content_sum long, wsum long, names_len int, n_deflate int"
-        ),
+    return decode_walk(
+        d, "_zip_batches", _zip_key, _zip_facts,
+        "doc_id long, status string, n_entries int, total_bytes long, "
+        "content_sum long, wsum long, names_len int, n_deflate int",
+        value_errors=(("CRC", "crc_error"), ("MISMATCH", "mismatch")),
     ).transform(_presentation_sort, "doc_id")

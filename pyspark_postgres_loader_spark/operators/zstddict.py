@@ -44,9 +44,7 @@ from __future__ import annotations
 import base64
 import struct
 from dataclasses import dataclass
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
@@ -65,6 +63,7 @@ from .zstdfse import (
     huf_build,
     huf_read_weights,
 )
+from .walkbatch import decode_walk
 
 _DICT_MAGIC = 0xEC30A437
 
@@ -171,6 +170,11 @@ def _zd_dict() -> ZstdDict:
     return parse_zstd_dictionary(base64.b64decode("".join(_ZD_DICT_B64)))
 
 
+# parsed once per process (~1.4 ms, as much as a decode); decoding only
+# reads it
+_ZD_WALK_DICT = _zd_dict()
+
+
 def _zd_payload(doc_id: int) -> bytes:
     g = doc_id % _ZD_GROUPS
     blob = bytearray(base64.b64decode("".join(_ZD_GOLDEN_B64[g])))
@@ -189,44 +193,18 @@ def _zd_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _zd_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
-    zdict = _zd_dict()
+def _zd_key(doc_id: int) -> tuple:
+    return (doc_id % _ZD_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _ZD_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                data, used = decompress_frame(
-                    _zd_payload(doc_id), None, zdict
-                )
-                csum = wsum = 0
-                for i, b in enumerate(data):
-                    csum += b
-                    wsum += (i + 1) * b
-                cache[key] = ("decoded", len(data), csum, wsum)
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "content_len", "content_sum",
-                     "wsum"],
-        ).astype(
-            {"doc_id": "int64", "content_len": "int64",
-             "content_sum": "int64", "wsum": "int64"}
-        )
+def _zd_facts(doc_id: int) -> tuple:
+    data, used = decompress_frame(_zd_payload(doc_id), None, _ZD_WALK_DICT)
+    csum = wsum = 0
+    for i, b in enumerate(data):
+        csum += b
+        wsum += (i + 1) * b
+    return ("decoded", len(data), csum, wsum)
 
 
 def _zd_oracle() -> str:
@@ -284,10 +262,9 @@ def ingest_zstd_dict_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact of the small-document regime; per-doc CPU decode, zero
     data shuffles, Arrow-batched mapInPandas."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _zd_batches,
-        schema=(
-            "doc_id long, status string, content_len long, "
-            "content_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_zd_batches", _zd_key, _zd_facts,
+        "doc_id long, status string, content_len long, content_sum long, "
+        "wsum long",
+        value_errors=(("CRC", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

@@ -805,43 +805,18 @@ def _zf_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-def _zf_batches(it):
-    import pandas as pd
+def _zf_key(doc_id: int) -> tuple:
+    return (doc_id % _ZF_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    cache: dict[tuple, tuple] = {}
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _ZF_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                data, used = decompress_frame(_zf_payload(doc_id))
-                csum = wsum = 0
-                for i, b in enumerate(data):
-                    csum += b
-                    wsum += (i + 1) * b
-                cache[key] = ("decoded", len(data), csum, wsum)
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0)
-            except ValueError as exc:
-                status = "crc_error" if "CRC" in str(exc) else "corrupt"
-                cache[key] = (status, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0)
-        return cache[key]
-
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=["doc_id", "status", "content_len", "content_sum",
-                     "wsum"],
-        ).astype(
-            {"doc_id": "int64", "content_len": "int64",
-              "content_sum": "int64", "wsum": "int64"}
-        )
+def _zf_facts(doc_id: int) -> tuple:
+    data, used = decompress_frame(_zf_payload(doc_id))
+    csum = wsum = 0
+    for i, b in enumerate(data):
+        csum += b
+        wsum += (i + 1) * b
+    return ("decoded", len(data), csum, wsum)
 
 
 def _zf_oracle() -> str:
@@ -885,6 +860,7 @@ def _zf_oracle() -> str:
 
 def _register_query() -> None:
     from ..registry import register
+    from .walkbatch import decode_walk
     from ..tables import load_table
     from ..functions.planctl import presentation_sort as _presentation_sort
 
@@ -907,12 +883,11 @@ def _register_query() -> None:
         window dependency), corpus parallelism is across documents;
         only integer facts re-enter the JVM."""
         d = load_table(spark, sf_dir, "documents").select("doc_id")
-        return d.mapInPandas(
-            _zf_batches,
-            schema=(
-                "doc_id long, status string, content_len long, "
-                "content_sum long, wsum long"
-            ),
+        return decode_walk(
+            d, "_zf_batches", _zf_key, _zf_facts,
+            "doc_id long, status string, content_len long, content_sum long, "
+            "wsum long",
+            value_errors=(("CRC", "crc_error"),),
         ).transform(_presentation_sort, "doc_id")
 
 

@@ -48,9 +48,7 @@ repo has no compression surface (SURVEY.md §2l extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,6 +56,7 @@ from ..registry import register
 from ..tables import load_table
 from .zstdfse import decompress_frame
 from .zstdwalk import build_zstd_frame, xxh64
+from .walkbatch import decode_walk
 
 _SEEK_SKIP_MAGIC = 0x184D2A5E
 _SEEK_FOOTER_MAGIC = 0x8F92EAB1
@@ -227,46 +226,23 @@ def _sk_payload(doc_id: int) -> bytes:
     return bytes(blob)
 
 
-_SK_FACT_MEMO: dict[tuple, tuple] = {}
+def _sk_key(doc_id: int) -> tuple:
+    return (doc_id % _SK_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
 
-def _sk_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache = _SK_FACT_MEMO
-
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _SK_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                f = walk_zstd_seekable(_sk_payload(doc_id))
-                b_sum = b_wsum = 0
-                for fi, c in enumerate(f["chunks"]):
-                    for i, b in enumerate(c):
-                        b_sum += b
-                        b_wsum += (fi + 1) * (i + 1) * b
-                cache[key] = (
-                    "decoded", f["n_frames"], int(f["has_checksum"]),
-                    f["total_decompressed"], b_sum, b_wsum,
-                    f["probe_frame"], f["probe_byte"],
-                )
-            except ValueError as exc:
-                s = str(exc)
-                status = ("crc_error" if "CHECKSUM" in s
-                          else "mismatch" if "DSIZE" in s else "corrupt")
-                cache[key] = (status,) + (0,) * 7
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt",) + (0,) * 7
-        return cache[key]
-
-    cols = ["doc_id", "status", "n_frames", "has_checksum",
-            "total_decompressed", "b_sum", "b_wsum", "probe_frame",
-            "probe_byte"]
-    for pdf in it:
-        if pdf.empty:
-            continue
-        rows = [(int(x),) + facts(int(x)) for x in pdf["doc_id"]]
-        yield pd.DataFrame(rows, columns=cols).astype(
-            {c: "int64" for c in cols if c != "status"})
+def _sk_facts(doc_id: int) -> tuple:
+    f = walk_zstd_seekable(_sk_payload(doc_id))
+    b_sum = b_wsum = 0
+    for fi, c in enumerate(f["chunks"]):
+        for i, b in enumerate(c):
+            b_sum += b
+            b_wsum += (fi + 1) * (i + 1) * b
+    return (
+        "decoded", f["n_frames"], int(f["has_checksum"]),
+        f["total_decompressed"], b_sum, b_wsum,
+        f["probe_frame"], f["probe_byte"],
+    )
 
 
 def _sk_oracle() -> str:
@@ -377,11 +353,12 @@ def ingest_zstd_seekable_walk(
         (F.col("doc_id") % 13 == 5).cast("int"),
         (F.col("doc_id") % 2).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
-        _sk_batches,
-        schema=("doc_id long, status string, n_frames long, "
-                "has_checksum long, total_decompressed long, "
-                "b_sum long, b_wsum long, probe_frame long, "
-                "probe_byte long"),
+    out = decode_walk(
+        d.repartition(32, combo), "_sk_batches", _sk_key, _sk_facts,
+        "doc_id long, status string, n_frames long, has_checksum long, "
+        "total_decompressed long, b_sum long, b_wsum long, probe_frame long, "
+        "probe_byte long",
+        value_errors=(("CHECKSUM", "crc_error"), ("DSIZE", "mismatch")),
+        worker_memo=True,
     )
     return out.repartition(1).sortWithinPartitions("doc_id")

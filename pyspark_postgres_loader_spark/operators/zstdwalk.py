@@ -32,14 +32,13 @@ Reference: no counterpart (SURVEY.md §2l multimodal/ingest extension).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .walkbatch import decode_walk
 
 _MAGIC = 0xFD2FB528
 _SKIP_MAGIC_BASE = 0x184D2A50  # low nibble 0..15 all skippable
@@ -295,52 +294,22 @@ def _zs_payload(doc_id: int) -> bytes:
     return payload
 
 
-def _zs_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cache: dict[tuple, tuple] = {}
+def _zs_key(doc_id: int) -> tuple:
+    return (doc_id % _ZS_GROUPS, doc_id % 11 == 3, doc_id % 17 == 2,
+            doc_id % 13 == 5)
 
-    def facts(doc_id: int) -> tuple:
-        g = doc_id % _ZS_GROUPS
-        key = (g, doc_id % 11 == 3, doc_id % 17 == 2, doc_id % 13 == 5)
-        if key not in cache:
-            try:
-                n_frames, n_skip, blocks = walk_zstd_frames(_zs_payload(doc_id))
-                csum = wsum = off = 0
-                for body in blocks:
-                    for i, b in enumerate(body):
-                        csum += b
-                        wsum += (off + i + 1) * b
-                    off += len(body)
-                cache[key] = (
-                    "decoded", n_frames, n_skip, len(blocks), off, csum, wsum,
-                )
-            except NotImplementedError:
-                cache[key] = ("unsupported", 0, 0, 0, 0, 0, 0)
-            except ValueError as exc:
-                status = (
-                    "crc_error" if "CHECKSUM" in str(exc) else "corrupt"
-                )
-                cache[key] = (status, 0, 0, 0, 0, 0, 0)
-            except Exception:  # noqa: BLE001 — malformed bytes quarantine
-                cache[key] = ("corrupt", 0, 0, 0, 0, 0, 0)
-        return cache[key]
 
-    for pdf in it:
-        if pdf.empty:
-            continue
-        out = [(int(d),) + facts(int(d)) for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id", "status", "n_frames", "n_skippable", "n_blocks",
-                "total_bytes", "content_sum", "wsum",
-            ],
-        ).astype(
-            {
-                "doc_id": "int64", "n_frames": "int32", "n_skippable": "int32",
-                "n_blocks": "int32", "total_bytes": "int64",
-                "content_sum": "int64", "wsum": "int64",
-            }
-        )
+def _zs_facts(doc_id: int) -> tuple:
+    n_frames, n_skip, blocks = walk_zstd_frames(_zs_payload(doc_id))
+    csum = wsum = off = 0
+    for body in blocks:
+        for i, b in enumerate(body):
+            csum += b
+            wsum += (off + i + 1) * b
+        off += len(body)
+    return (
+        "decoded", n_frames, n_skip, len(blocks), off, csum, wsum,
+    )
 
 
 def _zs_oracle() -> str:
@@ -430,10 +399,9 @@ def ingest_zstd_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): Arrow-batched mapInPandas decode map; only
     integer facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    return d.mapInPandas(
-        _zs_batches,
-        schema=(
-            "doc_id long, status string, n_frames int, n_skippable int, "
-            "n_blocks int, total_bytes long, content_sum long, wsum long"
-        ),
+    return decode_walk(
+        d, "_zs_batches", _zs_key, _zs_facts,
+        "doc_id long, status string, n_frames int, n_skippable int, "
+        "n_blocks int, total_bytes long, content_sum long, wsum long",
+        value_errors=(("CHECKSUM", "crc_error"),),
     ).transform(_presentation_sort, "doc_id")

@@ -96,28 +96,15 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     track KEY CARDINALITY and load, not core count. We scope a smaller
     value to the stream's lifetime and restore the session conf after.
     """
-    import os
     import time as _time
 
     spark = stream_df.sparkSession
-    n_state = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", _STATE_PARTITIONS)
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     name = "s" + uuid.uuid4().hex[:12]
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-    # state-store backend, env-parameterized for A/B and deployment
-    # tuning (results are backend-independent; semantics unchanged).
-    # r16 A/B at sf0.1, whole family fresh-JVM min-of-3: HDFS-backed
-    # (default) 24.1 s vs RocksDB 28.7 s — at fixture state sizes the
-    # JNI/per-instance overhead dominates, so the default stays; at
-    # production state sizes (GB per store) RocksDB wins, hence the
-    # knob rather than a hardcode. State-partition count A/B'd the
-    # same way: 8 (default) 24.1 s, 4 → 24.5 s, 2 → 25.4 s — commits
-    # are parallel across stores, so fewer stores saves nothing.
-    provider = os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER")
-    if provider:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", provider
-        )
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
+    # NOTE r16 A/B, whole stream family at sf0.1, fresh-JVM min-of-3: HDFS
+    # state store (default) 24.1 s vs RocksDB 28.7 s; 8 state partitions
+    # 24.1 s vs 4 → 24.5 s, 2 → 25.4 s. Defaults kept.
     try:
         t0 = _time.perf_counter()
         q = (

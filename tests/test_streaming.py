@@ -96,3 +96,34 @@ def test_stream_ohlc_equals_batch_resample(spark):
     }
     # the streaming tumbling-window aggregation IS the batch resample
     assert stream == batch
+
+
+def test_stream_run_ignores_retired_env_knobs_and_leaks_no_conf(
+    spark, sf_dir, monkeypatch
+):
+    """The state-store provider and state-partition count are fixed, not
+    environment-tuned: with the retired variables set, running a stream
+    query leaves the session's provider and shuffle width untouched."""
+    from pyspark_postgres_loader_spark.streaming.windows import (
+        stream_tumbling_hourly,
+    )
+
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    before = (spark.conf.get(provider_key, None),
+              spark.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setenv(
+        "SPARK_GRAFT_STREAM_STATE_PROVIDER",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
+    try:
+        assert stream_tumbling_hourly(spark, sf_dir).count() > 0
+        after = (spark.conf.get(provider_key, None),
+                 spark.conf.get("spark.sql.shuffle.partitions"))
+        assert after == before
+    finally:  # keep a leak from spilling into later tests
+        if before[0] is None:
+            spark.conf.unset(provider_key)
+        else:
+            spark.conf.set(provider_key, before[0])

@@ -9,19 +9,25 @@ anti-pattern signals per query (guide §1.1/§7.2):
 - FileScan count and whether any scan carries PushedFilters,
 - WholeStageCodegen span count.
 
-Writes one plan file per query to ``plans/r15/audit/<name>.txt`` and a
-ranked JSON summary to ``plans/r15/audit_summary.json`` (joined with
-the latest BENCH_HISTORY timings so hot+suspicious queries sort first).
+Writes one plan file per query to ``<out>/<name>.txt`` and a JSON
+summary to ``<out>/summary.json`` (joined with the latest BENCH_HISTORY
+timings so hot+suspicious queries sort first). ``--out`` defaults to a
+fresh temporary directory, printed at the end; audits are regenerated
+on demand, not committed.
 
-Run from the repo root:  python tools/audit_plans.py [sf_dir]
+Run from the repo root:
+
+    python tools/audit_plans.py [sf_dir] [--out DIR]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
 import sys
+import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -56,10 +62,13 @@ def main() -> None:
     from pyspark_postgres_loader_spark import registry
     from pyspark_postgres_loader_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
-    out_dir = os.path.join(ROOT, "plans", "r15", "audit")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default=os.environ.get(
+        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--out", help="output directory (default: a new temp dir)")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
+    out_dir = args.out or tempfile.mkdtemp(prefix="plan-audit-")
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark(app_name="plan-audit")
@@ -98,10 +107,11 @@ def main() -> None:
               f"bep={row['batch_eval_python']} cart={row['cartesian']} "
               f"build={row['build_sec']}s", flush=True)
 
-    with open(os.path.join(ROOT, "plans", "r15", "audit_summary.json"), "w") as f:
+    with open(os.path.join(out_dir, "summary.json"), "w") as f:
         json.dump({"sf_dir": sf_dir, "wall_sec": round(time.time() - t_all, 1),
                    "queries": summary}, f, indent=1, sort_keys=True)
-    print(f"audited {len(summary)} queries in {round(time.time()-t_all,1)}s")
+    print(f"audited {len(summary)} queries in {round(time.time()-t_all,1)}s "
+          f"-> {out_dir}")
     spark.stop()
 
 
