@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
+from .byteprim import zigzag_long
 from .bzip2 import decompress_bz2
 from .inflate import inflate_raw
 from .snappy import snappy_decompress_block
@@ -62,23 +63,6 @@ from .walkbatch import decode_walk
 _AVRO_MAGIC = b"Obj\x01"
 
 # ------------------------------------------------ primitive coding
-
-
-def zigzag_long(data: bytes, pos: int) -> tuple[int, int]:
-    """Read one Avro long (zigzag varint) → (value, new position)."""
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("avro varint truncated")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        shift += 7
-        if not b & 0x80:
-            return (out >> 1) ^ -(out & 1), pos
-        if shift > 70:
-            raise ValueError("avro varint too long")
 
 
 def encode_long(v: int) -> bytes:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .byteprim import crc16_8005
 
 
 class FlacCrcError(ValueError):
@@ -59,17 +60,6 @@ def _crc8(data: bytes) -> int:
         crc ^= b
         for _ in range(8):
             crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16(data: bytes) -> int:
-    """CRC-16, polynomial x^16 + x^15 + x^2 + 1 (0x8005), init 0 — the
-    FLAC whole-frame CRC."""
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005) & 0xFFFF if crc & 0x8000 else (crc << 1) & 0xFFFF
     return crc
 
 
@@ -324,7 +314,7 @@ def build_flac(
                         wasted=wasted)
     w.pad()
     frame = bytes(header) + bytes(w.out)
-    frame += struct.pack(">H", _crc16(frame))
+    frame += struct.pack(">H", crc16_8005(frame, 0))
 
     # ---- stream header
     out = bytearray(b"fLaC")
@@ -465,7 +455,7 @@ def _decode_frame(payload: bytes, pos: int, nch: int, bps: int):
     end = r.aligned_pos()
     if end + 2 > len(payload):
         raise ValueError("truncated FLAC frame CRC")
-    if _crc16(payload[start:end]) != int.from_bytes(payload[end : end + 2], "big"):
+    if crc16_8005(payload[start:end], 0) != int.from_bytes(payload[end : end + 2], "big"):
         raise FlacCrcError("FLAC frame CRC-16 mismatch")
     end += 2
 

@@ -312,18 +312,27 @@ def graph_triangle_count_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
     # different columns, so no two subtrees canonicalized equal and
     # exchange reuse never fired) and shuffled the incidence list
     # twice more for the join. Pair generation per customer needs only
-    # that customer's supplier set, so collect it ONCE per c (the
-    # degree cap is size(set) — same ≤ {d} filter), and emit the
+    # that customer's supplier set, so collect it ONCE per c and emit the
     # ordered pairs with a codegen combinations expression instead of
     # a join: one execution of base, one exchange on c, no self-join
     # shuffle, fan-out bounded by the same deg² cap (guide §2.4).
     # A/B at sf0.1 (isolated min-of-3): r15 join shape 2.92 s → 2.12 s
     # (and the first attempt WITHOUT the explicit repartition below
     # measured 5.65 s — see the AQE-coalescing note).
+    # The degree cap runs as a count aggregate + semi join BEFORE the
+    # sets are built, so a hub customer never fills a collect_set
+    # aggregation buffer (base is distinct: count(*) = set size). Both
+    # consumers share base's exchange (ReusedExchange).
+    # NOTE (4 vCPUs, sf0.1): the pre-filter costs 4.93 s → 6.13 s
+    # (isolated min-of-3, median of 5 pairs); in one JVM the edge
+    # pipeline goes 4.71 → 5.14 s, and a window count (5.31 s), a
+    # broadcast hint (5.52 s) or hash-partitioning base on c first
+    # (5.04 s) win nothing. Kept anyway: it is a memory bound.
+    small = base.groupBy("c").count().filter(F.col("count") <= _TRI_MAX_DEG)
     ss = (
-        base.groupBy("c")
+        base.join(small, "c", "left_semi")
+        .groupBy("c")
         .agg(F.sort_array(F.collect_set("s")).alias("ss"))
-        .filter(F.size("ss") <= _TRI_MAX_DEG)
         # explicit round-robin spread before the deg²-fan-out explode:
         # the per-customer supplier sets are tiny, so AQE's partition
         # coalescing otherwise folds the groupBy exchange to ONE

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .byteprim import crc16_8005
 from .walkbatch import decode_walk
 
 # bitrate tables, kbps, index 1..14 (index 0 = free format, 15 = bad)
@@ -93,12 +94,7 @@ def _sideinfo_len(version: str, mono: bool) -> int:
 def crc16_mp3(data: bytes) -> int:
     """CRC-16 with the ANSI polynomial 0x8005 (MSB-first), init 0xFFFF
     — the MP3 protection checksum (ISO 11172-3 §2.4.3.1)."""
-    crc = 0xFFFF
-    for byte in data:
-        crc ^= byte << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x8005 if crc & 0x8000 else crc << 1) & 0xFFFF
-    return crc
+    return crc16_8005(data, 0xFFFF)
 
 
 def _skip_id3v2(payload: bytes) -> int:

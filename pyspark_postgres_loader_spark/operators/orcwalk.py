@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .byteprim import uleb128, unzigzag
 from .inflate import inflate_raw
 from .lz4frame import lz4_decompress_block
 from .snappy import snappy_decompress_block
@@ -67,22 +68,6 @@ from .walkbatch import decode_walk
 # ------------------------------------------------ protobuf wire reader
 
 
-def _pb_varint(b: bytes, p: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if p >= len(b):
-            raise ValueError("orc protobuf varint truncated")
-        x = b[p]
-        p += 1
-        out |= (x & 0x7F) << shift
-        shift += 7
-        if not x & 0x80:
-            return out, p
-        if shift > 70:
-            raise ValueError("orc protobuf varint too long")
-
-
 def _pb_fields(b: bytes) -> list[tuple[int, int | bytes]]:
     """Decode one protobuf message → [(field number, value)] where a
     varint field yields int and a length-delimited field yields bytes.
@@ -90,15 +75,15 @@ def _pb_fields(b: bytes) -> list[tuple[int, int | bytes]]:
     p = 0
     out: list[tuple[int, int | bytes]] = []
     while p < len(b):
-        tag, p = _pb_varint(b, p)
+        tag, p = uleb128(b, p)
         fld, wire = tag >> 3, tag & 7
         if fld == 0:
             raise ValueError("orc protobuf field number 0")
         if wire == 0:
-            v, p = _pb_varint(b, p)
+            v, p = uleb128(b, p)
             out.append((fld, v))
         elif wire == 2:
-            n, p = _pb_varint(b, p)
+            n, p = uleb128(b, p)
             if n < 0 or p + n > len(b):
                 raise ValueError("orc protobuf length field truncated")
             out.append((fld, b[p : p + n]))
@@ -143,10 +128,6 @@ def _pb_encode_varint(v: int) -> bytes:
         else:
             out.append(b)
             return bytes(out)
-
-
-def _zz(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
 
 
 # ------------------------------------------------ chunked compression
@@ -268,7 +249,7 @@ def rlev2_decode(b: bytes, signed: bool = True) -> list[int]:
                 raise ValueError("orc short-repeat run truncated")
             v = int.from_bytes(b[p + 1 : p + 1 + wbytes], "big")
             if signed:
-                v = _zz(v)
+                v = unzigzag(v)
             vals.extend([v] * count)
             p += 1 + wbytes
         elif enc == 1:  # DIRECT
@@ -280,7 +261,7 @@ def rlev2_decode(b: bytes, signed: bool = True) -> list[int]:
             lits = [br.read(w) for _ in range(length)]
             p = br.align()
             if signed:
-                vals.extend(_zz(v) for v in lits)
+                vals.extend(unzigzag(v) for v in lits)
             else:
                 vals.extend(lits)
         elif enc == 3:  # DELTA
@@ -290,10 +271,10 @@ def rlev2_decode(b: bytes, signed: bool = True) -> list[int]:
                 raise ValueError("orc delta run header truncated")
             length = ((first & 1) << 8 | b[p + 1]) + 1
             p += 2
-            base, p = _pb_varint(b, p)
-            base = _zz(base) if signed else base
-            db_u, p = _pb_varint(b, p)
-            db = _zz(db_u)
+            base, p = uleb128(b, p)
+            base = unzigzag(base) if signed else base
+            db_u, p = uleb128(b, p)
+            db = unzigzag(db_u)
             run = [base]
             if length > 1:
                 prev = base + db
@@ -386,7 +367,7 @@ def _subtype_ids(t: dict) -> list[int]:
         else:
             x, p = 0, 0
             while p < len(v):
-                x, p = _pb_varint(v, p)
+                x, p = uleb128(v, p)
                 out.append(x)
     return out
 
@@ -1029,7 +1010,7 @@ def _walk_orc(data: bytes) -> dict:
             dec_min, dec_max = min(non_null), max(non_null)
             dec_sum = sum(non_null)
             for fld, dec in ((1, dec_min), (2, dec_max), (3, dec_sum)):
-                if fld in ig and _zz(ig[fld][0]) != dec:
+                if fld in ig and unzigzag(ig[fld][0]) != dec:
                     raise ValueError("orc footer statistics mismatch")
         strs = cs.get(4, [None])[0]
         if strs is not None and tk == _TYPE_STRING:
@@ -1040,7 +1021,7 @@ def _walk_orc(data: bytes) -> dict:
             for fld, dec in ((1, min(enc_nn)), (2, max(enc_nn))):
                 if fld in sg and sg[fld][0] != dec:
                     raise ValueError("orc footer statistics mismatch")
-            if 3 in sg and _zz(sg[3][0]) != sum(len(b) for b in enc_nn):
+            if 3 in sg and unzigzag(sg[3][0]) != sum(len(b) for b in enc_nn):
                 raise ValueError("orc footer statistics mismatch")
     return {
         "compression": _KIND_NAMES.get(kind, str(kind)),

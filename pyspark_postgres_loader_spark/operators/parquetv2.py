@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .byteprim import uleb128, zigzag_long
 from .parquetwalk import _decompress, _parse_level_runs, _TReader
 from .walkbatch import decode_walk
 
@@ -53,27 +54,6 @@ _ENC_DELTA_BINARY_PACKED = 5
 _ENC_DELTA_LENGTH_BYTE_ARRAY = 6
 _ENC_DELTA_BYTE_ARRAY = 7
 _PAGE_DATA_V2 = 3
-
-
-def _uleb(raw: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(raw):
-            raise ValueError("delta varint truncated")
-        b = raw[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        shift += 7
-        if not b & 0x80:
-            return out, pos
-        if shift > 70:
-            raise ValueError("delta varint too long")
-
-
-def _zigzag(raw: bytes, pos: int) -> tuple[int, int]:
-    v, pos = _uleb(raw, pos)
-    return (v >> 1) ^ -(v & 1), pos
 
 
 def delta_binary_packed(
@@ -93,9 +73,9 @@ def delta_binary_packed(
     allocation loop rather than a typed error (the bzip2 zero-run
     lesson). Callers always know the expected count — the page header
     or the outer byte-array run supplies it."""
-    block, pos = _uleb(raw, pos)
-    nmini, pos = _uleb(raw, pos)
-    total, pos = _uleb(raw, pos)
+    block, pos = uleb128(raw, pos)
+    nmini, pos = uleb128(raw, pos)
+    total, pos = uleb128(raw, pos)
     if nmini == 0 or block % nmini or (block // nmini) % 8:
         raise ValueError("bad delta-binary-packed geometry")
     if max_total is not None and total > max_total:
@@ -103,11 +83,11 @@ def delta_binary_packed(
     vpm = block // nmini
     if total == 0:
         return [], pos
-    first, pos = _zigzag(raw, pos)
+    first, pos = zigzag_long(raw, pos)
     out = [first]
     prev = first
     while len(out) < total:
-        min_delta, pos = _zigzag(raw, pos)
+        min_delta, pos = zigzag_long(raw, pos)
         widths = raw[pos : pos + nmini]
         if len(widths) != nmini:
             raise ValueError("truncated miniblock width bytes")

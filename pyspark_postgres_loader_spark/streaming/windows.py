@@ -122,10 +122,15 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
             # dict-likes in PySpark 4 — .get() reads them directly
             progress = list(q.recentProgress or [])
             dur = [p.get("durationMs", {}) for p in progress]
+            # recentProgress keeps at most numRecentProgressUpdates - 1
+            # records (the oldest are dropped), so once it is full the
+            # sums below may cover only the last batches
+            cap = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
             rec = {
                 "sink": name,
                 "output_mode": output_mode,
                 "n_batches": len(progress),
+                "progress_truncated": len(progress) >= cap - 1,
                 "start_sec": round(t_start - t0, 3),
                 "await_sec": round(t_done - t_start, 3),
                 "trigger_execution_ms": sum(

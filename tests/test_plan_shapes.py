@@ -255,3 +255,30 @@ def test_triangle_census_materializes_edge_set_once(spark):
     assert "TakeOrderedAndProject" not in plan
     assert "SortMergeJoin" not in plan
     assert "ExistingRDD" in plan
+
+
+def test_triangle_degree_cap_runs_before_collect_set(spark, monkeypatch):
+    """graph_triangle_count_suppliers: hub customers are dropped by a
+    count aggregate + semi join BELOW the collect_set aggregate, so a
+    hub's supplier set is never built. The edge pipeline's plan is only
+    visible before its ``localCheckpoint``, so the test captures it
+    there."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from pyspark_postgres_loader_spark.operators.graph import _TRI_MAX_DEG
+
+    plans = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", spy)
+    _plan(spark, "graph_triangle_count_suppliers")
+    (plan,) = plans
+    build = plan.index("partial_collect_set")
+    semi = plan.index("LeftSemi", build)
+    cap = plan.index(f"<= {_TRI_MAX_DEG})", semi)
+    assert "functions=[count(1)]" in plan[cap:], plan[:3000]
+    assert "Filter (size(" not in plan, plan[:3000]

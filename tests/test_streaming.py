@@ -127,3 +127,38 @@ def test_stream_run_ignores_retired_env_knobs_and_leaks_no_conf(
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, before[0])
+
+
+def test_phase_log_flags_truncated_progress(spark, tmp_path):
+    """``recentProgress`` keeps at most ``numRecentProgressUpdates - 1``
+    records, so a stream with more batches than that gets a PHASE_LOG
+    record summed over its last batches only; the record says so."""
+    from pyspark_postgres_loader_spark.streaming import windows
+
+    for i in range(3):
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.parquet(
+            str(tmp_path / "src" / f"p{i}")
+        )
+
+    def run():
+        stream = (
+            spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(tmp_path / "src" / "*"))
+        )
+        mark = len(windows.PHASE_LOG)
+        assert windows._run_to_memory(stream, "append").count() == 30
+        (rec,) = windows.PHASE_LOG[mark:]
+        return rec["n_batches"], rec["progress_truncated"]
+
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    assert run() == (3, False)
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "3")  # Spark then keeps 2 progress records
+    try:
+        assert run() == (2, True)
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
