@@ -1,6 +1,12 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
+
+One protocol for every query: an untimed warmup pass over the suite,
+then three timed passes in name order; each query's recorded time is
+its minimum. The ``stream_*`` family gets the same warm pass and
+min-of-3 in its own fresh JVM (``bench.py --isolated``). The bench
+writes nothing but ``BENCH_DETAIL.json``.
 
 Each query is materialized through the ``noop`` sink so the full plan
 executes (a bare ``count()`` would let Catalyst prune projection-only
@@ -22,219 +28,13 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
 
 from pyspark_postgres_loader_spark import registry
 from pyspark_postgres_loader_spark.session import get_spark
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q4_order_priority_exists",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customer",
-    "q10_returned_item_revenue",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q13_customer_order_distribution",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "q19_disjunctive_predicates",
-    "q20_heavy_widget_suppliers",
-    "q22_idle_rich_customers",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_late_priority_counts",
-    "q16_supplier_part_counts",
-    "q21_waiting_supplier",
-    "scd2_user_state_intervals",
-    "sessionize_events_30m",
-    "text_length_histogram",
-    "embedding_norm_stats",
-    "pysource_synthetic_events",
-    "udtf_bigram_topk",
-    "cogroup_user_activity_profile",
-    "join_semi_big_orders",
-    "join_asof_latest_order",
-    "join_range_price_band",
-    "join_skew_salted_orders",
-    "agg_cube_flag_status",
-    "agg_stats_moments",
-    "scalar_higher_order_array",
-    "window_top3_orders_per_customer",
-    "window_running_customer_spend",
-    "window_range_frame_spend",
-    "topk_orders_by_price",
-    "json_props_by_event_type",
-    "json_map_explode",
-    "agg_unpivot_metrics",
-    "dedup_exact_fingerprint",
-    "dedup_latest_event_per_user_type",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "dedup_connected_components",
-    "agg_percentiles_by_status",
-    "pipeline_clean_corpus",
-    "pipeline_training_mix",
-    "dedup_lsh_bucket_stats",
-    "text_pii_redact",
-    "text_chunk_windows",
-    "pack_token_budget_bins",
-    "contamination_ngram_overlap",
-    "embedding_quantize_int8",
-    "mix_domain_weights",
-    "dedup_hyperplane_lsh",
-    "pipeline_filter_funnel",
-    "dedup_incremental_ingest",
-    "layout_zorder_stats",
-    "text_repetition_filter",
-    "split_train_val_test",
-    "search_bm25_topk",
-    "rollup_time_multigrain",
-    "funnel_view_click_purchase",
-    "cohort_weekly_retention",
-    "cdc_apply_changelog",
-    "path_top_transitions",
-    "ann_int8_rerank_topk",
-    "anomaly_zscore_users",
-    "json_variant_nested",
-    "pandas_udf_nfc_norm",
-    "agg_corr_qty_price",
-    "ingest_corrupt_json_quarantine",
-    "embedding_label_centroids",
-    "rollup_incremental_merge",
-    "timeseries_forward_fill",
-    "fuzzy_name_pairs",
-    "sample_quota_per_lang",
-    "window_share_of_total",
-    "timeseries_time_weighted_avg",
-    "xml_roundtrip_extract",
-    "multimodal_byte_histogram_arrow",
-    "text_word_count_topk",
-    "text_token_stats",
-    "text_quality_score",
-    "text_lang_id",
-    "sim_cosine_pairs",
-    "ann_bruteforce_topk",
-    "ann_ivf_topk",
-    "sim_label_envelope",
-    "multimodal_decode_meta",
-    "multimodal_audio_features",
-    "multimodal_decode_quarantine",
-    "stream_tumbling_hourly",
-    "stream_sliding_2h_1h",
-    "stream_session_windows",
-    "stream_stateful_user_stats",
-    "stream_static_enrich",
-    "stream_stream_interval_join",
-    "stream_stream_outer_attrib",
-    "stream_chained_window_rollup",
-    "stream_session_dynamic_gap",
-]
-
-
-# Stable-query fast path (r11 verdict watch item: suite wall grows
-# with the registry). A query whose ENVIRONMENT-NORMALIZED cost was
-# flat within ±10% across the last 3 recorded rounds is timed ONCE;
-# only new/changed/outlier queries get the full 3-pass min.
-# Normalization: each historical round's per-query seconds are divided
-# by that round's median over the common query set — r10's documented
-# global environment drift moved every absolute number ~10% while
-# relative (query vs suite) cost stayed flat, and relative cost is the
-# plan-health signal this history exists to watch. Safety valve: a
-# stable query whose single timing exceeds _FASTPATH_PROMOTE x its
-# latest recorded value is PROMOTED back to the full 3-pass this run
-# and listed in BENCH_DETAIL, so outliers keep min-of-3 attribution.
-_HISTORY_FILE = "BENCH_HISTORY.json"
-_FASTPATH_FLAT = 1.10
-_FASTPATH_PROMOTE = 1.5
-_FASTPATH_MIN_ROUNDS = 3
-
-
-def _load_history() -> dict[str, dict]:
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        _HISTORY_FILE)
-    try:
-        with open(path) as f:
-            return json.load(f)["rounds"]
-    except Exception:  # noqa: BLE001 — no/corrupt history → no fast path
-        return {}
-
-
-def _stable_set(
-    history: dict[str, dict], sf: float
-) -> tuple[set[str], dict[str, float]]:
-    """→ (stable query names, latest absolute seconds per query) from
-    the last _FASTPATH_MIN_ROUNDS rounds recorded AT THE SAME scale
-    factor — an ad-hoc sf0.001 run must neither read nor qualify
-    against the canonical sf0.1 history."""
-    import statistics
-
-    rounds = sorted(r for r in history if history[r].get("sf") == sf)
-    rounds = rounds[-_FASTPATH_MIN_ROUNDS:]
-    if len(rounds) < _FASTPATH_MIN_ROUNDS:
-        return set(), {}
-    qmaps = {r: history[r]["queries"] for r in rounds}
-    common = set.intersection(*(set(qmaps[r]) for r in rounds))
-    if not common:
-        return set(), {}
-    meds = {
-        r: statistics.median(qmaps[r][n] for n in common)
-        for r in rounds
-    }
-    if any(m <= 0 for m in meds.values()):
-        return set(), {}
-    stable = set()
-    for n in common:
-        vals = [qmaps[r][n] / meds[r] for r in rounds]
-        if min(vals) > 0 and max(vals) / min(vals) <= _FASTPATH_FLAT:
-            stable.add(n)
-    latest = {n: qmaps[rounds[-1]][n] for n in stable}
-    return stable, latest
-
-
-def _append_history(history: dict[str, dict],
-                    timings: dict[str, float], sf: float) -> None:
-    """Record this run's full per-query map under the next round label
-    (bench self-maintains the history the fast path reads). Only the
-    canonical per-round scale factor is recorded — ad-hoc small-sf
-    runs must not become rounds the stability criterion counts."""
-    if sf != 0.1:
-        return
-    nums = [int(r[1:]) for r in history if r.startswith("r")]
-    label = f"r{(max(nums) + 1) if nums else 1:02d}"
-    history = dict(history)
-    history[label] = {"sf": sf, "queries": timings}
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        _HISTORY_FILE)
-    with open(path, "w") as f:
-        json.dump(
-            {
-                "note": (
-                    "Full per-query wall-second history by round "
-                    "(with the scale factor it was measured at), "
-                    "maintained by bench.py to drive the stable-query "
-                    "fast path; bootstrapped from the "
-                    "BENCH_DETAIL.json snapshots committed in rounds "
-                    "9-11."
-                ),
-                "rounds": history,
-            },
-            f, indent=1, sort_keys=True,
-        )
-
-
+_HERE = os.path.dirname(os.path.abspath(__file__))
 _ISOLATED_TOP_N = 10
-# always re-time these isolated even when not in the top-10: queries
-# whose code changed recently, so a suite-context inflation can be
-# attributed (environment vs plan regression) from the artifact alone
-# (stream_* names need not appear here — the whole family is timed in
-# its own JVM by _stream_family_pass)
-_ISOLATED_ALWAYS = ()
 
 # The streaming family runs in its OWN fresh JVM (VERDICT r12 task 2):
 # three consecutive rounds of in-suite drift on untouched stream_*
@@ -246,67 +46,72 @@ _ISOLATED_ALWAYS = ()
 _STREAM_PREFIX = "stream_"
 
 
-def _stream_family_pass(
-    names: list[str], history: dict[str, dict], sf: float
-) -> tuple[dict[str, float], dict]:
-    """Time the stream_* queries in one fresh subprocess (shared
-    warmup, min-of-3 each — the _isolated_child protocol). Returns
-    (timings to record, BENCH_DETAIL attribution block with the
-    fresh/last-recorded ratio per query)."""
+def _err(exc: BaseException) -> str:
+    return f"{type(exc).__name__}: {exc}"[:200]
+
+
+def _time_passes(
+    run_one: Callable[[str], object], names: list[str], passes: int
+) -> tuple[dict[str, float], dict[str, str], list[float]]:
+    """Run every name once per pass, in ``names`` order, and return
+    (per-query minimum seconds, errors, per-pass totals).
+
+    A name that raises is recorded once in ``errors`` and never run
+    again: one broken query must not cost the run its record (an
+    exception before the print loses it like an oversized line did in
+    r3+r4). Pass totals sum only the names that completed every pass —
+    the run-to-run variance evidence: a uniform pass-to-pass delta says
+    machine contention, a single inflated query says plan.
+    """
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    per_pass: list[dict[str, float]] = []
+    for _ in range(passes):
+        cur: dict[str, float] = {}
+        for name in names:
+            if name in errors:
+                continue
+            start = time.perf_counter()
+            try:
+                run_one(name)
+            except Exception as exc:  # noqa: BLE001 — record, don't crash
+                errors[name] = _err(exc)
+                timings.pop(name, None)
+                continue
+            cur[name] = round(time.perf_counter() - start, 3)
+            timings[name] = min(timings.get(name, cur[name]), cur[name])
+        per_pass.append(cur)
+    totals = [
+        round(sum(t for n, t in cur.items() if n in timings), 3)
+        for cur in per_pass
+    ]
+    return timings, errors, totals
+
+
+def _isolated(names: list[str]) -> dict:
+    """Time ``names`` in ONE fresh subprocess (``bench.py --isolated``:
+    new JVM, shared warmup, untimed pass, min-of-3 per query) and return
+    the child's JSON line. Raises if the child prints no result."""
     import subprocess
     import sys
 
+    if not names:
+        return {}
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--isolated",
          ",".join(names)],
         capture_output=True,
         text=True,
         timeout=1200,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
+        cwd=_HERE,
     )
-    iso = json.loads(proc.stdout.strip().rsplit("\n", 1)[-1])
-    timings = {n: float(iso[n]) for n in names if n in iso}
-    stream_phases = iso.get("_stream_phases", {})
-    # attribution vs the LAST recorded round at this sf: >1 means the
-    # old in-suite number was inflated by suite context (the drift
-    # this pass removes); ~1 means the in-suite run was already clean
-    rounds = sorted(r for r in history if history[r].get("sf") == sf)
-    last = history[rounds[-1]]["queries"] if rounds else {}
-    ratios = {
-        n: round(last[n] / timings[n], 2)
-        for n in timings
-        if n in last and timings[n] > 0
-    }
-    rs = sorted(ratios.values())
-    return timings, {
-        "method": (
-            "own fresh JVM (subprocess), shared warmup, min-of-3 per "
-            "query — recorded timings for the stream family come from "
-            "here, not the main suite loop"
-        ),
-        "why": (
-            "3 consecutive rounds of in-suite drift on untouched "
-            "stream_* code with flat isolated re-timings (suite "
-            "crowding); VERDICT r12 task 2"
-        ),
-        "queries": {n: round(t, 3) for n, t in timings.items()},
-        "phase_attribution": {
-            "note": (
-                "per-query split of the BEST timed pass: start_sec = "
-                "stream start (trigger/source setup, offset-log dir), "
-                "await_sec = microbatch execution; trigger_execution/"
-                "add_batch/offset_log/state_commit ms come from Spark's "
-                "own progress events (VERDICT r15 task 4)"
-            ),
-            "queries": stream_phases,
-        },
-        "last_recorded_vs_fresh_ratio": ratios,
-        "ratio_definition": (
-            "last_recorded_insuite / fresh_jvm (>1 = the recorded "
-            "history carried suite-context inflation)"
-        ),
-        "ratio_median": rs[len(rs) // 2] if rs else None,
-    }
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode or not lines:
+        raise RuntimeError(
+            f"--isolated child exited {proc.returncode}: "
+            f"{proc.stderr.strip()[-150:]}"
+        )
+    return json.loads(lines[-1])
 
 
 def _warmup(spark, sf_dir: str) -> None:
@@ -367,50 +172,6 @@ def _isolated_child(names: list[str]) -> None:
     print(json.dumps(out, separators=(",", ":")), flush=True)
 
 
-def _isolated_pass(timings: dict[str, float]) -> dict:
-    """Re-time the suite's slowest queries in ONE fresh subprocess
-    (min-of-3 each). Keyed off the in-suite ranking; returns
-    {name: isolated_sec} plus a method note for BENCH_DETAIL."""
-    import subprocess
-    import sys
-
-    # stream_* timings already come from a fresh JVM; re-isolating
-    # them would double work for a ratio that is 1.0 by construction
-    names = sorted(
-        (n for n in timings if not n.startswith(_STREAM_PREFIX)),
-        key=lambda n: -timings[n],
-    )[:_ISOLATED_TOP_N]
-    names += [n for n in _ISOLATED_ALWAYS if n not in names and n in timings]
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--isolated", ",".join(names)],
-        capture_output=True,
-        text=True,
-        timeout=900,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-    )
-    last = proc.stdout.strip().rsplit("\n", 1)[-1]
-    iso = json.loads(last)
-    # in-suite / isolated per query: the environment-drift detector the
-    # r10 judge had to reconstruct by hand. A ratio near 1.0 means the
-    # suite context adds nothing; a UNIFORM ratio >> 1 across unrelated
-    # queries means machine contention / GC history (environment); a
-    # SINGLE query far above its family means a plan regression.
-    ratios = {
-        n: round(timings[n] / iso[n], 2)
-        for n in iso
-        if n in timings and isinstance(iso[n], (int, float)) and iso[n] > 0
-    }
-    rs = sorted(ratios.values())
-    median = rs[len(rs) // 2] if rs else None
-    return {
-        "method": "fresh subprocess (new JVM), shared warmup, min-of-3 per query",
-        "queries": iso,
-        "isolated_vs_insuite_ratio": ratios,
-        "ratio_definition": "insuite_min / isolated_min (>1 = suite-context inflation)",
-        "ratio_median": median,
-    }
-
-
 def _hll_envelope(spark, sf_dir: str) -> dict:
     """Re-rehearse rollup_hll_mergeable's error contract at the BENCH
     scale factor (the driver's correctness gate runs it at sf0.01 only)
@@ -449,29 +210,17 @@ def main() -> None:
 
     queries = registry.all_queries()
 
+    def run_one(name: str) -> None:
+        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
     # untimed warmup: JVM/codegen spin-up + first touch of each table +
     # Python UDF worker fork, so per-query timings measure the queries
     _warmup(spark, sf_dir)
 
-    # three passes, per-query minimum: one pass measures codegen compile +
-    # machine noise as much as the query; the min is the reproducible cost.
-    # (r2 post-mortem: a concurrent process inflated BOTH passes of a
-    # 2-pass min by 3x on some queries; a third pass narrows that window)
-    # Time the FULL registry: HEADLINE order first (stable round-over-
-    # round comparability for the long-lived names), then every other
-    # registered query so no query is in the "untimed" class.
-    bench_names = list(HEADLINE) + sorted(n for n in queries if n not in HEADLINE)
-    # the stream family is timed in its own fresh JVM (see
-    # _stream_family_pass); the main loop neither warms nor times it
-    stream_names = [n for n in bench_names if n.startswith(_STREAM_PREFIX)]
-    bench_names = [n for n in bench_names if not n.startswith(_STREAM_PREFIX)]
-    timings: dict[str, float] = {}
-    # Per-query error isolation: one broken query must not cost the
-    # round's bench record (the failure mode that lost r3+r4 was line
-    # size, but an exception before the print would lose it the same
-    # way). Failures are skipped on later passes and reported in the
-    # output instead of crashing the run.
-    errors: dict[str, str] = {}
+    # the full registry in name order; the stream family is timed in
+    # its own fresh JVM, so the main loop neither warms nor times it
+    suite = sorted(n for n in queries if not n.startswith(_STREAM_PREFIX))
+    stream_names = sorted(n for n in queries if n.startswith(_STREAM_PREFIX))
 
     # UNRECORDED full-suite warm-up pass (r10 verdict): the recorded
     # pass totals showed a monotone 288→268→228 s slope — pass 1 was
@@ -480,88 +229,51 @@ def main() -> None:
     # Executing every query once untimed moves that one-off cost out of
     # the recorded passes entirely, so spread_sec reads as genuine
     # run-to-run variance.
-    for name in bench_names:
-        try:
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:  # noqa: BLE001 — record, don't crash
-            errors[name] = f"{type(exc).__name__}: {exc}"[:200]
+    _, errors, _ = _time_passes(run_one, suite, 1)
 
-    # stable-query fast path (see _stable_set): flat-history queries
-    # are timed once on pass 1; outliers get promoted back to 3-pass
-    history = _load_history()
-    stable, stable_latest = _stable_set(history, sf)
-    promoted: set[str] = set()
-    pass_elapsed: list[dict[str, float]] = []
-    for pass_i in range(3):
-        cur: dict[str, float] = {}
-        for name in bench_names:
-            if name in errors:
-                continue
-            if pass_i > 0 and name in stable and name not in promoted:
-                continue
-            fn = queries[name]
-            start = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001 — record, don't crash
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-                timings.pop(name, None)
-                continue
-            elapsed = round(time.perf_counter() - start, 3)
-            cur[name] = elapsed
-            timings[name] = min(timings.get(name, elapsed), elapsed)
-            if (
-                pass_i == 0
-                and name in stable
-                and elapsed > _FASTPATH_PROMOTE * stable_latest[name]
-            ):
-                promoted.add(name)
-        pass_elapsed.append(cur)
-    fast_path = sorted(
-        n for n in stable if n in timings and n not in promoted
+    # three passes, per-query minimum: one pass measures codegen compile +
+    # machine noise as much as the query; the min is the reproducible cost.
+    # (r2 post-mortem: a concurrent process inflated BOTH passes of a
+    # 2-pass min by 3x on some queries; a third pass narrows that window)
+    timings, pass_errors, pass_totals = _time_passes(
+        run_one, [n for n in suite if n not in errors], 3
     )
-    # per-pass totals over the queries that completed EVERY pass (the
-    # full-3-pass set; fast-path queries run once by design): the
-    # round-over-round variance evidence (a uniform pass-to-pass spread
-    # says machine contention; a single inflated query says plan) —
-    # requested by the r8 verdict so total-wall swings are attributable
-    # from the artifact alone
-    ok = set(timings) - set(fast_path)
-    pass_totals = [
-        round(sum(t for n, t in cur.items() if n in ok), 3)
-        for cur in pass_elapsed
-    ]
+    errors.update(pass_errors)
 
-    # stream family: own fresh JVM; inline 3-pass fallback keeps the
-    # round's record if the subprocess dies
     try:
-        stream_times, stream_detail = _stream_family_pass(
-            stream_names, history, sf
-        )
-        missing = [n for n in stream_names if n not in stream_times]
+        stream = _isolated(stream_names)
     except Exception as exc:  # noqa: BLE001
-        stream_times, missing = {}, list(stream_names)
-        stream_detail = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-    for name in missing:
-        for _ in range(3):
-            start = time.perf_counter()
-            try:
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as exc:  # noqa: BLE001
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-                break
-            elapsed = round(time.perf_counter() - start, 3)
-            stream_times[name] = min(
-                stream_times.get(name, elapsed), elapsed
+        stream = {"error": _err(exc)}
+    for name in stream_names:
+        if isinstance(stream.get(name), (int, float)):
+            timings[name] = float(stream[name])
+        else:
+            errors[name] = stream.get(
+                "error", "missing from the --isolated child's output"
             )
-    timings.update(stream_times)
-
-    _append_history(history, timings, sf)
+    stream_detail = {
+        "method": (
+            "own fresh JVM (subprocess), shared warmup, min-of-3 per "
+            "query — recorded timings for the stream family come from "
+            "here, not the main suite loop"
+        ),
+        "why": (
+            "3 consecutive rounds of in-suite drift on untouched "
+            "stream_* code with flat isolated re-timings (suite "
+            "crowding); VERDICT r12 task 2"
+        ),
+        "queries": {n: timings[n] for n in stream_names if n in timings},
+        "phase_attribution": {
+            "note": (
+                "per-query split of the BEST timed pass: start_sec = "
+                "stream start (trigger/source setup, offset-log dir), "
+                "await_sec = microbatch execution; trigger_execution/"
+                "add_batch/offset_log/state_commit ms come from Spark's "
+                "own progress events (VERDICT r15 task 4)"
+            ),
+            "queries": stream.get("_stream_phases", {}),
+        },
+    }
 
     # substrate-build attribution (VERDICT r15 task 5): app-scoped memos
     # (LSH index, unigram model, ann substrates) are built on the UNTIMED
@@ -581,22 +293,46 @@ def main() -> None:
             "build_total_sec": round(sum(BUILD_LOG.values()), 3),
         }
     except Exception as exc:  # noqa: BLE001
-        substrates = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+        substrates = {"error": _err(exc)}
 
     try:
         skew = _skew_bench(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001
-        skew = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+        skew = {"error": _err(exc)}
 
     try:
         hll = _hll_envelope(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001
-        hll = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+        hll = {"error": _err(exc)}
 
+    # the suite's slowest queries re-timed in one fresh JVM; in-suite /
+    # isolated per query is the environment-drift detector the r10
+    # judge had to reconstruct by hand. A ratio near 1.0 means the
+    # suite context adds nothing; a UNIFORM ratio >> 1 across unrelated
+    # queries means machine contention / GC history (environment); a
+    # SINGLE query far above its family means a plan regression.
+    # (stream_* timings already come from a fresh JVM: 1.0 by design)
+    top = sorted(
+        (n for n in timings if not n.startswith(_STREAM_PREFIX)),
+        key=lambda n: -timings[n],
+    )[:_ISOLATED_TOP_N]
     try:
-        isolated = _isolated_pass(timings)
+        iso = _isolated(top)
+        ratios = {
+            n: round(timings[n] / iso[n], 2)
+            for n in top
+            if isinstance(iso.get(n), (int, float)) and iso[n] > 0
+        }
+        rs = sorted(ratios.values())
+        isolated = {
+            "method": "fresh subprocess (new JVM), shared warmup, min-of-3 per query",
+            "queries": iso,
+            "isolated_vs_insuite_ratio": ratios,
+            "ratio_definition": "insuite_min / isolated_min (>1 = suite-context inflation)",
+            "ratio_median": rs[len(rs) // 2] if rs else None,
+        }
     except Exception as exc:  # noqa: BLE001
-        isolated = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+        isolated = {"error": _err(exc)}
 
     # sink family: per-phase attribution (VERDICT r13 task 6 — two
     # rounds of drift on untouched sink code; the artifact now shows
@@ -610,7 +346,7 @@ def main() -> None:
 
         sink_detail = sink_phase_breakdown(spark, sf_dir)
     except Exception as exc:  # noqa: BLE001
-        sink_detail = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+        sink_detail = {"error": _err(exc)}
 
     total = round(sum(timings.values()), 3)
     # "contract"-tagged queries compute an exact reference ALONGSIDE a
@@ -631,21 +367,6 @@ def main() -> None:
         "errors": errors,
         "passes": 3,
         "warmup": "full-suite untimed pass before pass 1 (JIT/page-cache)",
-        "fast_path": {
-            "criterion": (
-                f"median-normalized cost flat within ±{_FASTPATH_FLAT}x "
-                f"across the last {_FASTPATH_MIN_ROUNDS} recorded "
-                "rounds → timed once on pass 1; promoted back to "
-                f"3-pass when the single timing exceeds "
-                f"{_FASTPATH_PROMOTE}x the latest recorded value"
-            ),
-            "n_single_pass": len(fast_path),
-            "single_pass_queries": fast_path,
-            "outliers_promoted": sorted(promoted),
-            "single_pass_total_sec": round(
-                sum(timings[n] for n in fast_path), 3
-            ),
-        },
         "pass_totals_sec": pass_totals,
         "spread_sec": round(max(pass_totals) - min(pass_totals), 3)
         if pass_totals
@@ -661,7 +382,7 @@ def main() -> None:
         "sink_family": sink_detail,
         "sf": sf,
     }
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"), "w") as f:
+    with open(os.path.join(_HERE, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     # stop Spark BEFORE printing: its log4j console output interleaves
     # on stdout here, and the driver parses the LAST line of the tail —

@@ -299,29 +299,41 @@ class ManifestJsonlSinkDataSource(DataSource):
         )
 
 
+def _required_path(options) -> str:
+    path = options.get("path")
+    if not path:
+        raise ValueError("manifest_jsonl requires .option('path', ...)")
+    return path
+
+
+def _stage_part(path: str, columns: list[str], rows) -> _PartFileCommit:
+    """Executor side of both manifest writers: write one partition's
+    rows to ``<path>/_staging/part-<uuid>.jsonl`` and return the commit
+    message the driver-side publish step moves into place."""
+    import json
+    import os
+    import uuid
+
+    staging = os.path.join(path, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    staged = os.path.join(staging, f"part-{uuid.uuid4().hex}.jsonl")
+    n = 0
+    with open(staged, "w") as f:
+        for row in rows:
+            rec = {c: _jsonable(v) for c, v in zip(columns, row)}
+            f.write(json.dumps(rec, sort_keys=True) + "\n")
+            n += 1
+    return _PartFileCommit(staged, n)
+
+
 class _ManifestJsonlWriter(DataSourceWriter):
     def __init__(self, options, columns):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("manifest_jsonl requires .option('path', ...)")
+        self.path = _required_path(options)
         self.columns = list(columns)
 
     # -- executor side -----------------------------------------------------
     def write(self, iterator) -> _PartFileCommit:
-        import json
-        import os
-        import uuid
-
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        staged = os.path.join(staging, f"part-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(staged, "w") as f:
-            for row in iterator:
-                rec = {c: _jsonable(v) for c, v in zip(self.columns, row)}
-                f.write(json.dumps(rec, sort_keys=True) + "\n")
-                n += 1
-        return _PartFileCommit(staged, n)
+        return _stage_part(self.path, self.columns, iterator)
 
     # -- driver side, exactly once ----------------------------------------
     def commit(self, messages) -> None:
@@ -379,26 +391,11 @@ class _ManifestJsonlStreamWriter(DataSourceStreamWriter):
     logs."""
 
     def __init__(self, options, columns):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("manifest_jsonl requires .option('path', ...)")
+        self.path = _required_path(options)
         self.columns = list(columns)
 
     def write(self, iterator) -> _PartFileCommit:
-        import json
-        import os
-        import uuid
-
-        staging = os.path.join(self.path, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        staged = os.path.join(staging, f"part-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(staged, "w") as f:
-            for row in iterator:
-                rec = {c: _jsonable(v) for c, v in zip(self.columns, row)}
-                f.write(json.dumps(rec, sort_keys=True) + "\n")
-                n += 1
-        return _PartFileCommit(staged, n)
+        return _stage_part(self.path, self.columns, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         import json

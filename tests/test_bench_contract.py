@@ -45,14 +45,6 @@ def test_compact_line_small_set_keeps_everything():
     assert parsed["queries_elided"] == 0
 
 
-def test_headline_names_are_registered():
-    from pyspark_postgres_loader_spark.registry import all_queries
-
-    registered = set(all_queries())
-    missing = [n for n in bench.HEADLINE if n not in registered]
-    assert not missing, f"HEADLINE names not registered: {missing}"
-
-
 def test_compact_line_reports_error_count():
     line = bench._compact_line(1.0, {"q": 1.0}, 0.1, n_errors=3)
     assert json.loads(line)["n_errors"] == 3
@@ -103,55 +95,71 @@ def test_compact_line_budget_holds_with_pass_totals():
     assert parsed["queries_elided"] + len(parsed["queries"]) == 200
 
 
-def test_fastpath_stable_set_rules():
-    """Stability = median-normalized flatness within ±10% over the
-    last 3 rounds AT THE SAME sf; short or off-sf history yields no
-    fast path."""
-    # q_flat: absolute values drift 2x but track each round's median
-    # exactly -> stable. q_jumpy: moves 30% against the median -> not.
-    hist = {
-        "r01": {"sf": 0.1, "queries": {"q_flat": 1.0, "q_jumpy": 1.0,
-                                       "q_med": 1.0}},
-        "r02": {"sf": 0.1, "queries": {"q_flat": 2.0, "q_jumpy": 2.6,
-                                       "q_med": 2.0}},
-        "r03": {"sf": 0.1, "queries": {"q_flat": 1.5, "q_jumpy": 1.5,
-                                       "q_med": 1.5}},
-    }
-    stable, latest = bench._stable_set(hist, 0.1)
-    assert "q_flat" in stable and "q_med" in stable
-    assert "q_jumpy" not in stable
-    assert latest["q_flat"] == 1.5
-    # off-sf: the same history must not qualify an sf0.001 run
-    assert bench._stable_set(hist, 0.001) == (set(), {})
-    # short history: two rounds are not enough
-    short = {k: hist[k] for k in ("r01", "r02")}
-    assert bench._stable_set(short, 0.1) == (set(), {})
-    # a query missing from one round is not in the common set
-    hist["r02"]["queries"].pop("q_med")
-    stable2, _ = bench._stable_set(hist, 0.1)
-    assert "q_med" not in stable2
+class _Clock:
+    """Fake ``time`` module: ``run_one`` advances it by a scripted
+    duration, so ``_time_passes`` is tested without Spark or sleeps."""
+
+    def __init__(self):
+        self.now = 0.0
+
+    def perf_counter(self):
+        return self.now
 
 
-def test_fastpath_history_append_guards_sf(tmp_path, monkeypatch):
-    """Only canonical sf0.1 runs become history rounds — an ad-hoc
-    small-sf run must not shift the round labels or the criterion."""
-    import os
+def _scripted(monkeypatch, durations):
+    """→ (run_one, calls): each call pops the name's next duration; a
+    duration of ``None`` raises instead."""
+    clock = _Clock()
+    monkeypatch.setattr(bench, "time", clock)
+    calls = []
 
-    monkeypatch.setattr(bench.os.path, "dirname",
-                        lambda _p: str(tmp_path))
-    hist = {"r05": {"sf": 0.1, "queries": {"a": 1.0}}}
-    bench._append_history(hist, {"a": 9.9}, 0.001)
-    assert not os.path.exists(tmp_path / "BENCH_HISTORY.json")
-    bench._append_history(hist, {"a": 1.1}, 0.1)
-    got = json.load(open(tmp_path / "BENCH_HISTORY.json"))["rounds"]
-    assert got["r06"] == {"sf": 0.1, "queries": {"a": 1.1}}
-    assert got["r05"]["queries"] == {"a": 1.0}
+    def run_one(name):
+        calls.append(name)
+        d = durations[name].pop(0)
+        if d is None:
+            raise ValueError(f"{name} broke")
+        clock.now += d
+
+    return run_one, calls
 
 
-def test_fastpath_repo_history_is_loadable():
-    """The committed bootstrap history drives a non-trivial fast path
-    at the canonical sf."""
-    hist = bench._load_history()
-    stable, latest = bench._stable_set(hist, 0.1)
-    assert len(stable) >= 30
-    assert all(latest[n] > 0 for n in stable)
+def test_time_passes_records_min_of_every_pass(monkeypatch):
+    run_one, calls = _scripted(
+        monkeypatch, {"a": [3.0, 1.0, 2.0], "b": [0.5, 0.7, 0.25]}
+    )
+    timings, errors, totals = bench._time_passes(run_one, ["a", "b"], 3)
+    assert timings == {"a": 1.0, "b": 0.25}
+    assert errors == {}
+    assert totals == [3.5, 1.7, 2.25]
+    # pass order: every name once per pass, in the given order
+    assert calls == ["a", "b"] * 3
+
+
+def test_time_passes_drops_a_failing_name_for_good(monkeypatch):
+    run_one, calls = _scripted(
+        monkeypatch,
+        {"a": [1.0, 1.0, 1.0], "bad": [2.0, None], "c": [0.5, 0.5, 0.5]},
+    )
+    timings, errors, totals = bench._time_passes(
+        run_one, ["a", "bad", "c"], 3
+    )
+    # recorded once, never re-run after it raised, no timing kept
+    assert list(errors) == ["bad"]
+    assert errors["bad"] == "ValueError: bad broke"
+    assert calls.count("bad") == 2
+    assert "bad" not in timings
+    # totals cover only the names that completed every pass: pass 1's
+    # 2.0 s for "bad" is not in them
+    assert totals == [1.5, 1.5, 1.5]
+    assert timings == {"a": 1.0, "c": 0.5}
+
+
+def test_time_passes_single_pass_is_the_warmup_shape(monkeypatch):
+    run_one, _ = _scripted(monkeypatch, {"a": [None], "b": [1.0]})
+    timings, errors, totals = bench._time_passes(run_one, ["a", "b"], 1)
+    assert set(errors) == {"a"}
+    assert timings == {"b": 1.0} and totals == [1.0]
+
+
+def test_isolated_with_no_names_starts_no_child():
+    assert bench._isolated([]) == {}

@@ -1,6 +1,6 @@
-"""Round-15 optimization audit: dump the FORMATTED physical plan of
-every registered query at the bench scale factor and summarize
-anti-pattern signals per query (guide §1.1/§7.2):
+"""Plan audit: dump the FORMATTED physical plan of registered queries
+at the bench scale factor and summarize anti-pattern signals per query
+(guide §1.1/§7.2):
 
 - Exchange count (shuffles), SortMergeJoin / ShuffledHashJoin /
   BroadcastNestedLoopJoin / CartesianProduct occurrences,
@@ -9,15 +9,19 @@ anti-pattern signals per query (guide §1.1/§7.2):
 - FileScan count and whether any scan carries PushedFilters,
 - WholeStageCodegen span count.
 
-Writes one plan file per query to ``<out>/<name>.txt`` and a JSON
-summary to ``<out>/summary.json`` (joined with the latest BENCH_HISTORY
-timings so hot+suspicious queries sort first). ``--out`` defaults to a
-fresh temporary directory, printed at the end; audits are regenerated
-on demand, not committed.
+Audits every registered query, or only the named ones. Writes one plan
+file per query to ``<out>/<name>.txt`` (``<out>/<name>_<suffix>.txt``
+with ``--suffix``, e.g. the ``before``/``after`` evidence pairs an
+optimization record cites) and a JSON summary to
+``<out>/summary[_<suffix>].json`` whose rows carry each query's
+``bench_sec`` from the committed BENCH_DETAIL.json, so hot+suspicious
+queries can be ranked. ``--out`` defaults to a fresh
+temporary directory, printed at the end; audits are regenerated on
+demand, not committed.
 
 Run from the repo root:
 
-    python tools/audit_plans.py [sf_dir] [--out DIR]
+    python tools/audit_plans.py [sf_dir [name ...]] [--out DIR] [--suffix S]
 """
 
 from __future__ import annotations
@@ -65,7 +69,9 @@ def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("sf_dir", nargs="?", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("names", nargs="*", help="queries to audit (default: all)")
     ap.add_argument("--out", help="output directory (default: a new temp dir)")
+    ap.add_argument("--suffix", help="plan files are written as <name>_<suffix>.txt")
     args = ap.parse_args()
     sf_dir = args.sf_dir
     out_dir = args.out or tempfile.mkdtemp(prefix="plan-audit-")
@@ -73,14 +79,16 @@ def main() -> None:
 
     spark = get_spark(app_name="plan-audit")
     qs = registry.all_queries()
+    if args.names:
+        qs = {n: qs[n] for n in args.names}
+    tail = f"_{args.suffix}" if args.suffix else ""
 
-    # latest bench timings for ranking
+    # committed bench timings for ranking
     times: dict[str, float] = {}
     try:
-        hist = json.load(open(os.path.join(ROOT, "BENCH_HISTORY.json")))["rounds"]
-        latest = sorted(r for r in hist if hist[r].get("sf") == 0.1)[-1]
-        times = hist[latest]["queries"]
-    except Exception:
+        with open(os.path.join(ROOT, "BENCH_DETAIL.json")) as f:
+            times = json.load(f)["queries"]
+    except (OSError, ValueError, KeyError):
         pass
 
     jvm = spark.sparkContext._jvm
@@ -96,7 +104,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — survey, don't abort
             summary[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
             continue
-        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}{tail}.txt"), "w") as f:
             f.write(plan)
         row = {k: len(p.findall(plan)) for k, p in _PATTERNS.items()}
         row["pushed_filters"] = len(re.findall(r"PushedFilters: \[[^\]]", plan))
@@ -107,7 +115,7 @@ def main() -> None:
               f"bep={row['batch_eval_python']} cart={row['cartesian']} "
               f"build={row['build_sec']}s", flush=True)
 
-    with open(os.path.join(out_dir, "summary.json"), "w") as f:
+    with open(os.path.join(out_dir, f"summary{tail}.json"), "w") as f:
         json.dump({"sf_dir": sf_dir, "wall_sec": round(time.time() - t_all, 1),
                    "queries": summary}, f, indent=1, sort_keys=True)
     print(f"audited {len(summary)} queries in {round(time.time()-t_all,1)}s "
