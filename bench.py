@@ -51,10 +51,15 @@ def _err(exc: BaseException) -> str:
 
 
 def _time_passes(
-    run_one: Callable[[str], object], names: list[str], passes: int
+    run_one: Callable[[str], object],
+    names: list[str],
+    passes: int,
+    best: dict[str, object] | None = None,
 ) -> tuple[dict[str, float], dict[str, str], list[float]]:
     """Run every name once per pass, in ``names`` order, and return
-    (per-query minimum seconds, errors, per-pass totals).
+    (per-query minimum seconds, errors, per-pass totals). ``best``, if
+    given, receives what ``run_one`` returned on each name's fastest
+    pass.
 
     A name that raises is recorded once in ``errors`` and never run
     again: one broken query must not cost the run its record (an
@@ -73,13 +78,16 @@ def _time_passes(
                 continue
             start = time.perf_counter()
             try:
-                run_one(name)
+                result = run_one(name)
             except Exception as exc:  # noqa: BLE001 — record, don't crash
                 errors[name] = _err(exc)
                 timings.pop(name, None)
                 continue
             cur[name] = round(time.perf_counter() - start, 3)
-            timings[name] = min(timings.get(name, cur[name]), cur[name])
+            if cur[name] < timings.get(name, float("inf")):
+                timings[name] = cur[name]
+                if best is not None:
+                    best[name] = result
         per_pass.append(cur)
     totals = [
         round(sum(t for n, t in cur.items() if n in timings), 3)
@@ -134,41 +142,39 @@ def _isolated_child(names: list[str]) -> None:
     500-execution GC history) and print one JSON line. The round-6
     judge measured suite-context inflation up to ~1.5x on the heaviest
     queries (pagerank: 5.09 s in-suite vs 3.33 s isolated) — these are
-    the reproducible per-query numbers."""
+    the reproducible per-query numbers. A query that raises is listed
+    under ``_errors`` and the others are still timed."""
+    # per-query stream phase attribution (VERDICT r15 task 4): the
+    # windows.PHASE_LOG records each query's best timed pass appended
+    from pyspark_postgres_loader_spark.streaming import windows as _w
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="bench-isolated")
     queries = registry.all_queries()
+
+    def run_one(name: str) -> list:
+        mark = len(_w.PHASE_LOG)
+        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return _w.PHASE_LOG[mark:]
+
     _warmup(spark, sf_dir)
     # one UNTIMED pass per query first: a fresh JVM is JIT-cold (C2
     # compilation of Spark internals takes ~a minute of execution), and
     # without this the "isolated" numbers read 1.5-2x SLOWER than
     # in-suite — the exact inverse of the suite-context noise this pass
     # exists to remove
-    for name in names:
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    out: dict[str, float] = {}
-    # per-query stream phase attribution (VERDICT r15 task 4): slice
-    # windows.PHASE_LOG by the records each timed min-pass appends
-    from pyspark_postgres_loader_spark.streaming import windows as _w
-
+    _, errors, _ = _time_passes(run_one, names, 1)
     phases: dict[str, list] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(3):
-            mark = len(_w.PHASE_LOG)
-            start = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            elapsed = time.perf_counter() - start
-            if elapsed < best:
-                best = elapsed
-                if len(_w.PHASE_LOG) > mark:
-                    phases[name] = _w.PHASE_LOG[mark:]
-        out[name] = round(best, 3)
+    out, pass_errors, _ = _time_passes(
+        run_one, [n for n in names if n not in errors], 3, best=phases
+    )
+    errors.update(pass_errors)
     spark.stop()
+    phases = {n: p for n, p in phases.items() if p and n in out}
     if phases:
         out["_stream_phases"] = phases  # filtered out of timings by name
+    if errors:
+        out["_errors"] = errors
     print(json.dumps(out, separators=(",", ":")), flush=True)
 
 
@@ -248,7 +254,7 @@ def main() -> None:
         if isinstance(stream.get(name), (int, float)):
             timings[name] = float(stream[name])
         else:
-            errors[name] = stream.get(
+            errors[name] = stream.get("_errors", {}).get(name) or stream.get(
                 "error", "missing from the --isolated child's output"
             )
     stream_detail = {

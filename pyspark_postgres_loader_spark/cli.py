@@ -18,7 +18,6 @@ Windows-only INI path (load_postgres_from_spark_df.py:58-60).
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 
 from .session import get_spark
@@ -32,47 +31,6 @@ def _parse_source_args(pairs: list[str]) -> dict[str, str]:
         k, v = pair.split("=", 1)
         out[k] = v
     return out
-
-
-def make_postgres_connection_factory(pg_python_package: str = "psycopg2"):
-    """Zero-arg picklable connection factory from PG* env vars.
-
-    ``pg_python_package`` mirrors the reference's ``--pg_python_package``
-    (main.py:18-22): ``psycopg2`` yields the sync driver directly;
-    ``asyncpg`` yields ``asyncpg.connect`` lifted through
-    ``async_adapter.adapt_async_factory`` so the same sink machinery
-    drives the async driver. Imports are deferred and guarded: both
-    drivers are optional dependencies."""
-    import functools
-
-    params = {
-        "host": os.environ.get("PGHOST", "localhost"),
-        "port": int(os.environ.get("PGPORT", "5432")),
-        "user": os.environ.get("PGUSER", "postgres"),
-        "password": os.environ.get("PGPASSWORD", ""),
-    }
-    database = os.environ.get("PGDATABASE", "postgres")
-    if pg_python_package == "asyncpg":
-        try:
-            import asyncpg
-        except ImportError as exc:  # pragma: no cover - env without asyncpg
-            raise SystemExit(
-                "asyncpg is required for --pg_python_package asyncpg; "
-                "install it or use the default psycopg2 driver"
-            ) from exc
-        from .sinks.async_adapter import adapt_async_factory
-
-        return adapt_async_factory(
-            functools.partial(asyncpg.connect, database=database, **params)
-        )
-    try:
-        import psycopg2
-    except ImportError as exc:  # pragma: no cover - env without psycopg2
-        raise SystemExit(
-            "psycopg2 is required for the Postgres CLI sink; install it or "
-            "use the library API with another DBAPI connection_factory"
-        ) from exc
-    return functools.partial(psycopg2.connect, dbname=database, **params)
 
 
 def _connect_sqlite(path: str):
@@ -162,10 +120,10 @@ def main(argv: list[str] | None = None) -> int:
                 f"for --dialect {args.dialect}",
                 file=sys.stderr,
             )
-    elif args.config:
-        from .config import load_config, make_connection_factory
+    else:
+        from . import config
 
-        cfg = load_config(args.config)
+        cfg = config.load_config(args.config) if args.config else config.LoaderConfig()
         kinds = cfg.source_kinds()
         if kinds and args.source.split("_")[0] not in kinds and args.source not in kinds:
             print(
@@ -173,9 +131,7 @@ def main(argv: list[str] | None = None) -> int:
                 f"source mapping {kinds}; proceeding with the registry",
                 file=sys.stderr,
             )
-        factory = make_connection_factory(cfg)
-    else:
-        factory = make_postgres_connection_factory(args.pg_python_package)
+        factory = config.make_connection_factory(cfg, args.pg_python_package)
 
     spark = get_spark(app_name="Postgres Loader")
     try:

@@ -100,17 +100,34 @@ def load_config(path: str) -> LoaderConfig:
     return cfg
 
 
-def make_connection_factory(cfg: LoaderConfig):
-    """Zero-arg picklable psycopg2 connection factory from the config
-    (env-overridable). psycopg2 import deferred + guarded: optional."""
+def make_connection_factory(cfg: LoaderConfig, pg_python_package: str = "psycopg2"):
+    """Zero-arg picklable Postgres connection factory from the config's
+    env-overridable credentials (``LoaderConfig()`` = env vars and
+    defaults only).
+
+    ``pg_python_package`` mirrors the reference's ``--pg_python_package``
+    (main.py:18-22): ``psycopg2`` yields the sync driver directly;
+    ``asyncpg`` yields ``asyncpg.connect`` lifted through
+    ``async_adapter.adapt_async_factory`` so the same sink machinery
+    drives the async driver. Imports are deferred and guarded: both
+    drivers are optional dependencies."""
     import functools
 
     params = cfg.connection_params()
     try:
-        import psycopg2
-    except ImportError as exc:  # pragma: no cover - env without psycopg2
+        if pg_python_package == "asyncpg":
+            import asyncpg as driver
+        else:
+            import psycopg2 as driver
+    except ImportError as exc:  # pragma: no cover - env without the driver
         raise SystemExit(
-            "psycopg2 is required for the Postgres CLI sink; install it or "
-            "use the library API with another DBAPI connection_factory"
+            f"{pg_python_package} is required for the Postgres CLI sink; "
+            "install it or use the library API with another DBAPI "
+            "connection_factory"
         ) from exc
-    return functools.partial(psycopg2.connect, **params)
+    if pg_python_package == "asyncpg":
+        from .sinks.async_adapter import adapt_async_factory
+
+        params["database"] = params.pop("dbname")
+        return adapt_async_factory(functools.partial(driver.connect, **params))
+    return functools.partial(driver.connect, **params)

@@ -15,6 +15,8 @@ sql.py:28 / load_postgres_from_spark_df.py:217 — which we skip).
 
 from __future__ import annotations
 
+import functools
+
 
 def _split_table(table: str) -> tuple[str, str]:
     if "." in table:
@@ -101,16 +103,6 @@ def fetch_unique_key_pg(conn, table: str, *, numbered: bool = False) -> list[str
     return [col for cname, col in rows if cname == first]
 
 
-def fetch_target_schema_asyncpg(conn, table: str) -> dict[str, str]:
-    """The pg introspector with asyncpg's ``$n`` placeholders — used
-    when the sink runs through ``async_adapter`` over real asyncpg."""
-    return fetch_target_schema_pg(conn, table, numbered=True)
-
-
-def fetch_unique_key_asyncpg(conn, table: str) -> list[str] | None:
-    return fetch_unique_key_pg(conn, table, numbered=True)
-
-
 # --- SQLite backend (integration tests without a Postgres server) ----------
 
 _SQLITE_TO_PG = {
@@ -155,53 +147,57 @@ def fetch_unique_key_sqlite(conn, table: str) -> list[str] | None:
 # DuckDB ships information_schema.columns but its DBAPI wants ``?``
 # placeholders (the postgres introspector's %s would throw before any
 # data moved); key discovery uses duckdb_constraints() which exists on
-# every DuckDB version we target.
+# every DuckDB version we target. An unqualified name resolves in
+# current_schema() (``main`` unless the connection set another), the
+# same schema the sink's unqualified INSERT writes to.
 
 DUCK_COLUMNS_SQL = """
-SELECT column_name,
-       CASE WHEN data_type LIKE 'DECIMAL%' THEN lower(data_type)
-            ELSE lower(data_type) END AS data_type
+SELECT column_name, lower(data_type) AS data_type
 FROM information_schema.columns
-WHERE table_name = ?
+WHERE table_schema = coalesce(?, current_schema()) AND table_name = ?
 ORDER BY ordinal_position
 """
 
+DUCK_KEY_SQL = """
+SELECT constraint_column_names FROM duckdb_constraints()
+WHERE schema_name = coalesce(?, current_schema()) AND table_name = ?
+  AND constraint_type = ?
+ORDER BY constraint_index
+"""
+
+
+def _duck_schema_and_name(table: str) -> tuple[str | None, str]:
+    schema, _, name = table.rpartition(".")
+    return schema or None, name
+
 
 def fetch_target_schema_duckdb(conn, table: str) -> dict[str, str]:
-    _schema, name = _split_table(table)
     cur = conn.cursor()
-    cur.execute(DUCK_COLUMNS_SQL, (name,))
+    cur.execute(DUCK_COLUMNS_SQL, _duck_schema_and_name(table))
     out = {col: dtype for col, dtype in cur.fetchall()}
     cur.close()
     return out
 
 
 def fetch_unique_key_duckdb(conn, table: str) -> list[str] | None:
-    _schema, name = _split_table(table)
+    """Primary key, else the first unique constraint, else None."""
     cur = conn.cursor()
-    cur.execute(
-        "SELECT constraint_column_names FROM duckdb_constraints() "
-        "WHERE table_name = ? AND constraint_type = 'PRIMARY KEY'",
-        (name,),
-    )
-    rows = cur.fetchall()
-    if rows:
-        cur.close()
-        return list(rows[0][0])
-    cur.execute(
-        "SELECT constraint_column_names FROM duckdb_constraints() "
-        "WHERE table_name = ? AND constraint_type = 'UNIQUE' "
-        "ORDER BY constraint_index",
-        (name,),
-    )
-    rows = cur.fetchall()
+    for kind in ("PRIMARY KEY", "UNIQUE"):
+        cur.execute(DUCK_KEY_SQL, (*_duck_schema_and_name(table), kind))
+        rows = cur.fetchall()
+        if rows:
+            cur.close()
+            return list(rows[0][0])
     cur.close()
-    return list(rows[0][0]) if rows else None
+    return None
 
 
 INTROSPECTORS = {
     "postgres": (fetch_target_schema_pg, fetch_unique_key_pg),
-    "asyncpg": (fetch_target_schema_asyncpg, fetch_unique_key_asyncpg),
+    "asyncpg": (
+        functools.partial(fetch_target_schema_pg, numbered=True),
+        functools.partial(fetch_unique_key_pg, numbered=True),
+    ),
     "sqlite": (fetch_target_schema_sqlite, fetch_unique_key_sqlite),
     "duckdb": (fetch_target_schema_duckdb, fetch_unique_key_duckdb),
 }

@@ -43,18 +43,45 @@ def load_to_database(
     strategy: str = "batched",
     unique_key_override: list[str] | None = None,
 ) -> LoadResult:
-    """Run the full reference pipeline (source → align → upsert).
+    """Run the full reference pipeline: read ``source``, then
+    :func:`load_dataframe_to_database`."""
+    df = get_source_dataframe(spark, source, **source_args)
+    return load_dataframe_to_database(
+        df,
+        target_table,
+        connection_factory,
+        dialect,
+        batch_size=batch_size,
+        parallelism=parallelism,
+        partition_cols=partition_cols,
+        strategy=strategy,
+        unique_key_override=unique_key_override,
+    )
+
+
+def load_dataframe_to_database(
+    df: DataFrame,
+    target_table: str,
+    connection_factory: Callable[[], object],
+    dialect: str | Dialect = "postgres",
+    batch_size: int = 1000,
+    parallelism: int = 1,
+    partition_cols: list[str] | None = None,
+    strategy: str = "batched",
+    unique_key_override: list[str] | None = None,
+) -> LoadResult:
+    """Introspect the target, align ``df`` to it, upsert (the
+    ``foreachBatch`` entry point for streaming loads).
 
     ``strategy``: ``"batched"`` = per-row quarantine sink (reference
     semantics); ``"staging"`` = set-based staging merge (scale path).
+    The layer functions are module globals looked up at call time, so
+    a tracer can rebind them.
     """
     dia = DIALECTS[dialect] if isinstance(dialect, str) else dialect
     fetch_schema, fetch_key = INTROSPECTORS[
         dia.name if dia.name in INTROSPECTORS else "postgres"
     ]
-
-    df = get_source_dataframe(spark, source, **source_args)
-
     conn = connection_factory()
     try:
         target_schema = fetch_schema(conn, target_table)
@@ -77,36 +104,6 @@ def load_to_database(
         partition_cols=partition_cols,
         dialect=dia,
     )
-    return LoadResult(
-        stats=stats, unique_key=unique_key, aligned_columns=list(aligned.columns)
-    )
-
-
-def load_dataframe_to_database(
-    df: DataFrame,
-    target_table: str,
-    connection_factory: Callable[[], object],
-    dialect: str | Dialect = "postgres",
-    **kwargs,
-) -> LoadResult:
-    """Same pipeline but starting from an existing DataFrame (the
-    ``foreachBatch`` entry point for streaming loads)."""
-    dia = DIALECTS[dialect] if isinstance(dialect, str) else dialect
-    fetch_schema, fetch_key = INTROSPECTORS[
-        dia.name if dia.name in INTROSPECTORS else "postgres"
-    ]
-    conn = connection_factory()
-    try:
-        target_schema = fetch_schema(conn, target_table)
-        unique_key = kwargs.pop("unique_key_override", None) or fetch_key(
-            conn, target_table
-        )
-    finally:
-        conn.close()
-    aligned = align_to_target(df, target_schema)
-    strategy = kwargs.pop("strategy", "batched")
-    sink = upsert_dataframe if strategy == "batched" else upsert_via_staging
-    stats = sink(aligned, connection_factory, target_table, unique_key, dialect=dia, **kwargs)
     return LoadResult(
         stats=stats, unique_key=unique_key, aligned_columns=list(aligned.columns)
     )

@@ -89,7 +89,8 @@ _LEDGER_DIR = _PKG_DIR.parent
 # its semantics (its result, verdicts or error classes); an entry
 # expires once a ledger from that round or later lists the query.
 _TOUCHED: dict[str, int] = {
-    # sink chunk writer: DuckDB chunks become one Arrow relation
+    # sink chunk writer: DuckDB chunks become one Arrow relation; one
+    # load path: shared DuckDB target/readback helpers, no pipeline=
     "sink_upsert_final_state": 17,
     "sink_staging_merge_final_state": 17,
     "sink_async_upsert_final_state": 17,

@@ -35,9 +35,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"
-    n_shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -55,10 +53,7 @@ def get_spark(
         # every scan-side stage on one core. 4 MB ≈ the same
         # splits-per-core ratio a 100 TB table gets at 128 MB on a
         # 1000-executor cluster; at real scale leave the default.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -56,12 +56,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cli import make_file_db_connection_factory
 from ..registry import register
 from ..scratch import claim_scratch_dir
 from ..tables import load_table
 from .async_adapter import adapt_async_factory
 from .sql_builder import ASYNCPG, DUCKDB
-from .upsert import upsert_dataframe, upsert_via_staging
+from .upsert import (
+    LoadStats,
+    _batch_and_upsert,
+    _dedup_key_indices,
+    chunk_writer,
+    upsert_dataframe,
+    upsert_via_staging,
+)
 
 _BATCH = 256
 _KEYS = 50
@@ -105,38 +113,78 @@ _TARGET_DDL = (
 )
 
 
-def _connect(path: str):
-    """Top-level factory (``duckdb.connect`` itself is an unpicklable
-    pybind builtin — a named module function pickles by reference)."""
-    import duckdb as _duckdb
+def _fresh_target(base: str, tag: str, filename: str, ddl: str) -> str:
+    """Path of a DuckDB file in this process's ``base`` scratch dir,
+    any leftover from an earlier call removed and ``ddl`` applied. The
+    connection is closed again before returning, releasing the file
+    lock for the executors."""
+    scratch = claim_scratch_dir(base, hashlib.md5(tag.encode()).hexdigest()[:8])
+    dbfile = os.path.join(scratch, filename)
+    for leftover in (dbfile, dbfile + ".wal"):
+        if os.path.exists(leftover):
+            os.remove(leftover)
+    con = duckdb.connect(dbfile)
+    try:
+        con.execute(ddl)
+    finally:
+        con.close()
+    return dbfile
 
-    return _duckdb.connect(path)
+
+def _read_back(spark: SparkSession, dbfile: str, table: str, **counters: int) -> DataFrame:
+    """The target's final ``k, rnk, amount, status`` rows, plus each of
+    ``counters`` as a constant long column, ordered by key."""
+    con = duckdb.connect(dbfile)
+    try:
+        final = con.execute(
+            f"SELECT k, rnk, amount, status FROM {table} ORDER BY k"
+        ).fetchall()
+    finally:
+        con.close()
+    out = spark.createDataFrame(final, "k long, rnk long, amount double, status string")
+    return out.select(
+        "*", *(F.lit(v).cast("long").alias(n) for n, v in counters.items())
+    ).orderBy("k")
+
+
+def _stat_columns(stats: LoadStats) -> dict[str, int]:
+    return {
+        "rows_seen": stats.rows_seen,
+        "rows_loaded": stats.rows_loaded,
+        "rows_rejected": stats.rows_rejected,
+        "partitions_used": stats.partitions,
+        "aborted_partitions": stats.aborted_partitions,
+    }
 
 
 def _changelog(
     spark: SparkSession,
     sf_dir: str,
     limit: int = _SINK_ROWS,
-    poison_mod: int = _POISON_MOD,
+    poison_mod: int | None = _POISON_MOD,
 ) -> DataFrame:
-    """Deterministic upsert workload derived from ``orders``: key
-    collisions (rnk % 50), poison rows (rnk % poison_mod = 3 → negative
-    amount, violating the target's CHECK), arrival order = rank order."""
+    """Deterministic upsert workload derived from ``orders`` in ONE
+    partition sorted by arrival order: key collisions (rnk % 50),
+    poison rows (rnk % poison_mod = 3 → negative amount, violating the
+    target's CHECK; none when ``poison_mod`` is None), arrival order =
+    rank order."""
     orders = load_table(spark, sf_dir, "orders")
     w = Window.orderBy("o_orderkey")
     ranked = orders.select(
         F.row_number().over(w).alias("rnk"), "o_totalprice", "o_orderstatus"
     ).filter(F.col("rnk") <= limit)
-    return ranked.select(
-        (F.col("rnk") % _KEYS).cast("long").alias("k"),
-        F.col("rnk").cast("long").alias("rnk"),
-        F.when(
-            F.col("rnk") % poison_mod == _POISON_RES, -F.col("o_totalprice")
+    amount = F.col("o_totalprice")
+    if poison_mod is not None:
+        amount = F.when(F.col("rnk") % poison_mod == _POISON_RES, -amount).otherwise(amount)
+    return (
+        ranked.select(
+            (F.col("rnk") % _KEYS).cast("long").alias("k"),
+            F.col("rnk").cast("long").alias("rnk"),
+            amount.cast("double").alias("amount"),
+            F.col("o_orderstatus").alias("status"),
         )
-        .otherwise(F.col("o_totalprice"))
-        .cast("double")
-        .alias("amount"),
-        F.col("o_orderstatus").alias("status"),
+        .coalesce(1)
+        .sortWithinPartitions("rnk")
     )
 
 
@@ -202,51 +250,17 @@ def _changelog(
     "last-wins dedup + rejected-winner replay, LoadStats counters",
 )
 def sink_upsert_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    scratch = claim_scratch_dir("sink_roundtrip", tag)
-    dbfile = os.path.join(scratch, "target.duckdb")
-    for leftover in (dbfile, dbfile + ".wal"):
-        if os.path.exists(leftover):
-            os.remove(leftover)
-
-    con = duckdb.connect(dbfile)
-    try:
-        con.execute(_TARGET_DDL)
-    finally:
-        con.close()  # release the file lock before executors connect
-
-    rows = _changelog(spark, sf_dir).coalesce(1).sortWithinPartitions("rnk")
+    dbfile = _fresh_target("sink_roundtrip", sf_dir, "target.duckdb", _TARGET_DDL)
     stats = upsert_dataframe(
-        rows,
-        functools.partial(_connect, dbfile),
+        _changelog(spark, sf_dir),
+        make_file_db_connection_factory("duckdb", dbfile),
         "sink_final_state",
         unique_key=["k"],
         batch_size=_BATCH,
         parallelism=1,
         dialect=DUCKDB,
     )
-
-    con = duckdb.connect(dbfile)
-    try:
-        final = con.execute(
-            "SELECT k, rnk, amount, status FROM sink_final_state ORDER BY k"
-        ).fetchall()
-    finally:
-        con.close()
-
-    out = spark.createDataFrame(
-        final, "k long, rnk long, amount double, status string"
-    )
-    return (
-        out.withColumn("rows_seen", F.lit(stats.rows_seen).cast("long"))
-        .withColumn("rows_loaded", F.lit(stats.rows_loaded).cast("long"))
-        .withColumn("rows_rejected", F.lit(stats.rows_rejected).cast("long"))
-        .withColumn("partitions_used", F.lit(stats.partitions).cast("long"))
-        .withColumn(
-            "aborted_partitions", F.lit(stats.aborted_partitions).cast("long")
-        )
-        .orderBy("k")
-    )
+    return _read_back(spark, dbfile, "sink_final_state", **_stat_columns(stats))
 
 
 @register(
@@ -299,63 +313,24 @@ def sink_staging_merge_final_state(spark: SparkSession, sf_dir: str) -> DataFram
     partition is again the harness determinism choice; production
     stages with ``parallelism=N`` because ``_staged_seq`` — not arrival
     order — decides the winner."""
-    tag = hashlib.md5((sf_dir + ":staging").encode()).hexdigest()[:8]
-    scratch = claim_scratch_dir("sink_roundtrip", tag)
-    dbfile = os.path.join(scratch, "staging_target.duckdb")
-    for leftover in (dbfile, dbfile + ".wal"):
-        if os.path.exists(leftover):
-            os.remove(leftover)
-
-    con = duckdb.connect(dbfile)
-    try:
-        con.execute(
-            "CREATE TABLE merge_final_state ("
-            "  k BIGINT PRIMARY KEY, rnk BIGINT, amount DOUBLE,"
-            "  status VARCHAR)"
-        )
-    finally:
-        con.close()
-
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.orderBy("o_orderkey")
-    rows = (
-        orders.select(
-            F.row_number().over(w).alias("rnk"), "o_totalprice", "o_orderstatus"
-        )
-        .filter(F.col("rnk") <= _STAGE_ROWS)
-        .select(
-            (F.col("rnk") % _KEYS).cast("long").alias("k"),
-            F.col("rnk").cast("long").alias("rnk"),
-            F.col("o_totalprice").cast("double").alias("amount"),
-            F.col("o_orderstatus").alias("status"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("rnk")
+    dbfile = _fresh_target(
+        "sink_roundtrip",
+        sf_dir + ":staging",
+        "staging_target.duckdb",
+        "CREATE TABLE merge_final_state ("
+        "  k BIGINT PRIMARY KEY, rnk BIGINT, amount DOUBLE,"
+        "  status VARCHAR)",
     )
     stats = upsert_via_staging(
-        rows,
-        functools.partial(_connect, dbfile),
+        _changelog(spark, sf_dir, limit=_STAGE_ROWS, poison_mod=None),
+        make_file_db_connection_factory("duckdb", dbfile),
         "merge_final_state",
         unique_key=["k"],
         batch_size=512,
         parallelism=1,
         dialect=DUCKDB,
     )
-
-    con = duckdb.connect(dbfile)
-    try:
-        final = con.execute(
-            "SELECT k, rnk, amount, status FROM merge_final_state ORDER BY k"
-        ).fetchall()
-    finally:
-        con.close()
-
-    out = spark.createDataFrame(
-        final, "k long, rnk long, amount double, status string"
-    )
-    return out.withColumn(
-        "rows_staged", F.lit(stats.rows_loaded).cast("long")
-    ).orderBy("k")
+    return _read_back(spark, dbfile, "merge_final_state", rows_staged=stats.rows_loaded)
 
 
 # --------------------- async-dialect roundtrip (reference U6 + $n SQL)
@@ -460,30 +435,10 @@ def sink_async_upsert_final_state(spark: SparkSession, sf_dir: str) -> DataFrame
     are plain per-row counts and the final state is simply the last
     constraint-satisfying occurrence per key.
 
-    Scale note: ``pipeline=True`` gives this personality the
-    reference asyncpg executor's one-in-flight-batch overlap — batch
-    N's per-row round trips execute on the writer's worker while
-    batch N+1 accumulates from the Spark iterator (round 15); the
-    100 TB path remains the staging merge. Single sorted partition =
-    the harness determinism choice, as in the sibling queries."""
-    tag = hashlib.md5((sf_dir + ":async").encode()).hexdigest()[:8]
-    scratch = claim_scratch_dir("sink_roundtrip", tag)
-    dbfile = os.path.join(scratch, "async_target.duckdb")
-    for leftover in (dbfile, dbfile + ".wal"):
-        if os.path.exists(leftover):
-            os.remove(leftover)
-
-    con = duckdb.connect(dbfile)
-    try:
-        con.execute(_TARGET_DDL)
-    finally:
-        con.close()
-
-    rows = (
-        _changelog(spark, sf_dir, limit=_ASYNC_ROWS, poison_mod=_ASYNC_POISON_MOD)
-        .coalesce(1)
-        .sortWithinPartitions("rnk")
-    )
+    Scale note: the 100 TB path remains the staging merge. Single
+    sorted partition = the harness determinism choice, as in the
+    sibling queries."""
+    dbfile = _fresh_target("sink_roundtrip", sf_dir + ":async", "async_target.duckdb", _TARGET_DDL)
     # asyncpg paramstyle over a savepoint-free store: the one dialect
     # knob that differs from stock ASYNCPG (Postgres HAS savepoints;
     # DuckDB is the harness stand-in), flipped via dataclasses.replace
@@ -491,39 +446,15 @@ def sink_async_upsert_final_state(spark: SparkSession, sf_dir: str) -> DataFrame
     # asyncpg personality.
     dialect = dataclasses.replace(ASYNCPG, supports_savepoint=False)
     stats = upsert_dataframe(
-        rows,
+        _changelog(spark, sf_dir, limit=_ASYNC_ROWS, poison_mod=_ASYNC_POISON_MOD),
         adapt_async_factory(functools.partial(_async_connect, dbfile)),
         "sink_final_state",
         unique_key=["k"],
         batch_size=_BATCH,
         parallelism=1,
         dialect=dialect,
-        # the reference asyncpg executor's in-flight overlap: batch
-        # N's round trips ride the worker while batch N+1 accumulates
-        pipeline=True,
     )
-
-    con = duckdb.connect(dbfile)
-    try:
-        final = con.execute(
-            "SELECT k, rnk, amount, status FROM sink_final_state ORDER BY k"
-        ).fetchall()
-    finally:
-        con.close()
-
-    out = spark.createDataFrame(
-        final, "k long, rnk long, amount double, status string"
-    )
-    return (
-        out.withColumn("rows_seen", F.lit(stats.rows_seen).cast("long"))
-        .withColumn("rows_loaded", F.lit(stats.rows_loaded).cast("long"))
-        .withColumn("rows_rejected", F.lit(stats.rows_rejected).cast("long"))
-        .withColumn("partitions_used", F.lit(stats.partitions).cast("long"))
-        .withColumn(
-            "aborted_partitions", F.lit(stats.aborted_partitions).cast("long")
-        )
-        .orderBy("k")
-    )
+    return _read_back(spark, dbfile, "sink_final_state", **_stat_columns(stats))
 
 
 sink_async_upsert_final_state.__doc__ = (
@@ -593,48 +524,28 @@ def sink_phase_breakdown(
     sink phase in the suite timing is crowding, not the sink."""
     import time
 
-    from .upsert import _batch_and_upsert, _dedup_key_indices, chunk_writer
-
-    tag = hashlib.md5((sf_dir + "#phases").encode()).hexdigest()[:8]
-    scratch = claim_scratch_dir("sink_phases", tag)
     phases: dict[str, float] = {}
 
     def _rec(name: str, sec: float) -> None:
         phases[name] = round(min(phases.get(name, sec), sec), 3)
 
+    def _target(filename: str) -> str:
+        return _fresh_target("sink_phases", sf_dir + "#phases", filename, _TARGET_DDL)
+
     for trial in range(trials):
-        dbfile = os.path.join(scratch, f"t{trial}.duckdb")
-        for lf in (dbfile, dbfile + ".wal"):
-            if os.path.exists(lf):
-                os.remove(lf)
         t0 = time.perf_counter()
-        con = duckdb.connect(dbfile)
-        try:
-            con.execute(_TARGET_DDL)
-        finally:
-            con.close()
+        dbfile = _target(f"t{trial}.duckdb")
         t1 = time.perf_counter()
-        rows = (_changelog(spark, sf_dir)
-                .coalesce(1).sortWithinPartitions("rnk"))
+        rows = _changelog(spark, sf_dir)
         rows.count()
         t2 = time.perf_counter()
-        stats = upsert_dataframe(
-            rows, functools.partial(_connect, dbfile),
+        upsert_dataframe(
+            rows, make_file_db_connection_factory("duckdb", dbfile),
             "sink_final_state", unique_key=["k"], batch_size=_BATCH,
             parallelism=1, dialect=DUCKDB,
         )
         t3 = time.perf_counter()
-        con = duckdb.connect(dbfile)
-        try:
-            final = con.execute(
-                "SELECT k, rnk, amount, status FROM sink_final_state "
-                "ORDER BY k"
-            ).fetchall()
-        finally:
-            con.close()
-        spark.createDataFrame(
-            final, "k long, rnk long, amount double, status string"
-        ).count()
+        _read_back(spark, dbfile, "sink_final_state").count()
         t4 = time.perf_counter()
         _rec("ddl_sec", t1 - t0)
         _rec("fixture_sec", t2 - t1)
@@ -644,23 +555,16 @@ def sink_phase_breakdown(
 
     # driver-side consumer: identical rows + sink code, no Spark task
     # machinery, statements counted through a DBAPI proxy
-    changelog = _changelog(spark, sf_dir).coalesce(1).sortWithinPartitions("rnk")
+    changelog = _changelog(spark, sf_dir)
     data = [tuple(r) for r in changelog.collect()]
     cols = changelog.columns
-    dbfile = os.path.join(scratch, "floor.duckdb")
-    for lf in (dbfile, dbfile + ".wal"):
-        if os.path.exists(lf):
-            os.remove(lf)
-    con = duckdb.connect(dbfile)
-    try:
-        con.execute(_TARGET_DDL)
-    finally:
-        con.close()
+    dbfile = _target("floor.duckdb")
+    connect = make_file_db_connection_factory("duckdb", dbfile)
     counts = {"execute": 0, "executemany": 0, "commit": 0,
               "rollback": 0}
 
     def _counting_factory():
-        return _CountingConnection(_connect(dbfile), counts)
+        return _CountingConnection(connect(), counts)
 
     # the same per-dialect writer and dedup keys upsert_dataframe builds
     write_chunk = chunk_writer(

@@ -275,7 +275,6 @@ def _batch_and_upsert(
     batch_size: int,
     use_savepoint: bool = True,
     key_indices: list[int] | None = None,
-    pipeline: bool = False,
 ) -> Iterator[tuple[int, int, int, list[str], bool]]:
     """Per-partition consumer (≈ psycopg2_database_helper.py:123-187):
     lazy connect on first row, batch, transact, quarantine, early-abort
@@ -373,30 +372,6 @@ def _batch_and_upsert(
         conn.commit()
         return l == 0 and r > 0
 
-    # ``pipeline=True`` (round 15, the reference asyncpg executor's
-    # in-flight overlap): the previous batch's DB round trips execute
-    # on a single worker thread while THIS thread keeps accumulating
-    # the next batch from the Spark iterator. One in-flight batch per
-    # connection — all DB calls stay strictly ordered on the worker
-    # (savepoints, bisection, commits identical to the serial path),
-    # so quarantine semantics are preserved; the only delta is that
-    # the full-batch-rejected early-abort is observed at the NEXT
-    # flush boundary, so ``rows_seen`` of an aborted partition counts
-    # one extra accumulated batch.
-    pool = pending = None
-    if pipeline:
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-
-    def drain() -> bool:
-        nonlocal pending
-        if pending is None:
-            return False
-        bad = pending.result()
-        pending = None
-        return bad
-
     try:
         for row in rows:
             if conn is None:  # lazy: empty partitions never connect
@@ -405,34 +380,14 @@ def _batch_and_upsert(
             seen += 1
             batch.append(tuple(row))
             if len(batch) >= batch_size:
-                if pipeline:
-                    if drain():  # previous in-flight batch was all-bad
-                        aborted = True
-                        messages.append(
-                            "partition aborted: full batch rejected")
-                        break
-                    pending = pool.submit(flush, batch)
-                    batch = []
-                elif flush(batch):  # early abort: entire batch rejected
+                if flush(batch):  # early abort: entire batch rejected
                     aborted = True
                     messages.append("partition aborted: full batch rejected")
                     break
-                else:
-                    batch = []
-        if not aborted:
-            if pipeline and drain():
-                aborted = True
-                messages.append("partition aborted: full batch rejected")
-            else:
-                flush(batch)
                 batch = []
+        if not aborted:
+            flush(batch)
     finally:
-        if pipeline:
-            try:
-                drain()
-            except Exception:  # noqa: BLE001 — close must still run
-                pass
-            pool.shutdown(wait=True)
         if cursor is not None:
             cursor.close()
         if conn is not None:
@@ -482,19 +437,12 @@ def upsert_dataframe(
     partition_cols: list[str] | None = None,
     dialect: Dialect = POSTGRES,
     cols_not_for_update: list[str] | None = None,
-    pipeline: bool = False,
 ) -> LoadStats:
     """Upsert a DataFrame into a DBAPI target with error quarantine.
 
     ≈ ``upsert_spark_df_to_postgres`` (psycopg2_database_helper.py:
     287-357). ``connection_factory`` must be picklable (top-level
     function / functools.partial) — it runs on executors.
-
-    ``pipeline=True`` overlaps each batch's DB round trips with the
-    accumulation of the next batch (one in-flight batch per writer,
-    the reference asyncpg executor's shape); quarantine and final
-    state are identical, and the all-bad early-abort is observed one
-    flush boundary later (see _batch_and_upsert).
     """
     write_chunk = chunk_writer(
         df.schema, table, unique_key, cols_not_for_update, dialect
@@ -511,7 +459,6 @@ def upsert_dataframe(
             batch_size,
             use_savepoint=use_sp,
             key_indices=key_indices,
-            pipeline=pipeline,
         )
     ).collect()
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import importlib.util
 import json
+from types import SimpleNamespace
 
 _spec = importlib.util.spec_from_file_location("bench", "bench.py")
 bench = importlib.util.module_from_spec(_spec)
@@ -163,3 +164,46 @@ def test_time_passes_single_pass_is_the_warmup_shape(monkeypatch):
 
 def test_isolated_with_no_names_starts_no_child():
     assert bench._isolated([]) == {}
+
+
+def test_isolated_child_isolates_a_raising_query(monkeypatch, capsys):
+    """One raising query is reported by name; the others are still
+    timed min-of-3 with their best pass's phase records (no Spark:
+    registry, session and warmup are fakes)."""
+    from pyspark_postgres_loader_spark.streaming import windows
+
+    phase_log = []
+    monkeypatch.setattr(windows, "PHASE_LOG", phase_log)
+    run_one, calls = _scripted(
+        monkeypatch,
+        {"a": [9.0, 3.0, 1.0, 2.0], "bad": [None], "c": [9.0, 0.5, 0.5, 0.7]},
+    )
+
+    class _Query:  # queries[name](spark, sf).write.format(..).mode(..).save()
+        def __init__(self, name):
+            self.name, self.write = name, self
+
+        def format(self, _):
+            return self
+
+        mode = format
+
+        def save(self):
+            run_one(self.name)
+            phase_log.append((self.name, calls.count(self.name)))
+
+    queries = {n: (lambda n: lambda spark, sf: _Query(n))(n) for n in ("a", "bad", "c")}
+    monkeypatch.setattr(bench, "get_spark", lambda app_name: SimpleNamespace(stop=lambda: None))
+    monkeypatch.setattr(bench.registry, "all_queries", lambda: queries)
+    monkeypatch.setattr(bench, "_warmup", lambda spark, sf: None)
+
+    bench._isolated_child(["a", "bad", "c"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["a"] == 1.0 and out["c"] == 0.5
+    assert out["_errors"] == {"bad": "ValueError: bad broke"}
+    assert "bad" not in out
+    # phase records of the fastest pass: a's 3rd call, c's 2nd (a tie
+    # keeps the first)
+    assert out["_stream_phases"] == {"a": [["a", 3]], "c": [["c", 2]]}
+    # warm pass + 3 timed passes for the good names; "bad" ran once
+    assert calls.count("a") == 4 and calls.count("bad") == 1

@@ -174,7 +174,7 @@ def test_cli_config_factory_used_for_postgres_dialect(ini, monkeypatch, tmp_path
 
     captured = {}
 
-    def fake_factory(cfg):
+    def fake_factory(cfg, pg_python_package="psycopg2"):
         captured["params"] = cfg.connection_params()
         return functools.partial(sqlite3.connect, db)
 

@@ -388,7 +388,7 @@ def test_cli_asyncpg_driver_end_to_end(spark, tmp_path, monkeypatch):
     and the sink all run for real."""
     import functools
 
-    from pyspark_postgres_loader_spark import cli
+    from pyspark_postgres_loader_spark import cli, config
 
     path = str(tmp_path / "clipg.db")
     conn = fake_pg.connect(path)
@@ -399,12 +399,12 @@ def test_cli_asyncpg_driver_end_to_end(spark, tmp_path, monkeypatch):
     csv = tmp_path / "src.csv"
     csv.write_text("ID,V\n1,a\n2,b\n")
 
-    def fake_factory(pkg="psycopg2"):
+    def fake_factory(cfg, pkg="psycopg2"):
         assert pkg == "asyncpg", "CLI must thread --pg_python_package through"
         return adapt_async_factory(functools.partial(fake_pg.async_connect, path))
 
     monkeypatch.setattr(cli, "get_spark", lambda **kw: _NoStop(spark))
-    monkeypatch.setattr(cli, "make_postgres_connection_factory", fake_factory)
+    monkeypatch.setattr(config, "make_connection_factory", fake_factory)
 
     rc = cli.main(
         [

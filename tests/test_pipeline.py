@@ -153,3 +153,61 @@ def test_load_to_database_duckdb_dialect(spark, tmp_path):
     con.close()
     # upsert semantics: last row for id=1 wins
     assert rows == {1: (9.5, "c"), 2: (2.5, "b")}
+
+
+def test_load_dataframe_missing_target_raises(spark, tmp_path):
+    from pyspark_postgres_loader_spark.pipeline import load_dataframe_to_database
+
+    path = str(tmp_path / "missing.db")
+    sqlite3.connect(path).close()
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    with pytest.raises(ValueError, match="has no columns"):
+        load_dataframe_to_database(
+            df, "nope", functools.partial(_connect, path), dialect="sqlite"
+        )
+
+
+def test_load_dataframe_duckdb_round_trip(spark, tmp_path):
+    duckdb = pytest.importorskip("duckdb")
+    from pyspark_postgres_loader_spark.cli import make_file_db_connection_factory
+    from pyspark_postgres_loader_spark.pipeline import load_dataframe_to_database
+
+    db = str(tmp_path / "df.duckdb")
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE tgt (id BIGINT PRIMARY KEY, note VARCHAR)")
+    con.close()
+    df = spark.createDataFrame(
+        [("1", "a", 0), ("2", "b", 0), ("1", "c", 0)], "ID string, Note string, extra int"
+    ).coalesce(1)
+    result = load_dataframe_to_database(
+        df, "tgt", make_file_db_connection_factory("duckdb", db), dialect="duckdb"
+    )
+    assert result.unique_key == ["id"]
+    assert result.aligned_columns == ["id", "note"]
+    assert (result.stats.rows_seen, result.stats.rows_rejected) == (3, 0)
+    con = duckdb.connect(db)
+    assert dict(con.execute("SELECT id, note FROM tgt").fetchall()) == {1: "c", 2: "b"}
+    con.close()
+
+
+def test_duckdb_introspection_stays_in_one_schema(tmp_path):
+    """A same-named table in another schema contributes no columns and
+    no key; an unqualified name resolves in current_schema()."""
+    duckdb = pytest.importorskip("duckdb")
+    from pyspark_postgres_loader_spark.introspection import (
+        fetch_target_schema_duckdb,
+        fetch_unique_key_duckdb,
+    )
+
+    con = duckdb.connect(str(tmp_path / "schemas.duckdb"))
+    con.execute("CREATE TABLE t (a BIGINT PRIMARY KEY, b DECIMAL(12,2))")
+    con.execute("CREATE SCHEMA s2")
+    con.execute("CREATE TABLE s2.t (x BIGINT PRIMARY KEY)")
+    assert fetch_target_schema_duckdb(con, "t") == {"a": "bigint", "b": "decimal(12,2)"}
+    assert fetch_unique_key_duckdb(con, "t") == ["a"]
+    assert fetch_target_schema_duckdb(con, "s2.t") == {"x": "bigint"}
+    assert fetch_unique_key_duckdb(con, "s2.t") == ["x"]
+    con.execute("CREATE TABLE u (p BIGINT, q BIGINT, UNIQUE (p, q))")
+    con.execute("CREATE TABLE s2.u (r BIGINT PRIMARY KEY)")
+    assert fetch_unique_key_duckdb(con, "u") == ["p", "q"]
+    con.close()

@@ -316,7 +316,7 @@ def test_empty_partitions_never_connect(spark, tmp_path):
 
 def test_duckdb_multirow_quarantine_replay(spark, tmp_path):
     duckdb_mod = pytest.importorskip("duckdb")
-    from pyspark_postgres_loader_spark.sinks.roundtrip import _connect as _dconn
+    from pyspark_postgres_loader_spark.cli import make_file_db_connection_factory
     from pyspark_postgres_loader_spark.sinks.sql_builder import DUCKDB
 
     path = str(tmp_path / "quar.duckdb")
@@ -334,7 +334,7 @@ def test_duckdb_multirow_quarantine_replay(spark, tmp_path):
     ).coalesce(1)
     stats = upsert_dataframe(
         df,
-        functools.partial(_dconn, path),
+        make_file_db_connection_factory("duckdb", path),
         "q",
         ["k"],
         batch_size=10,
@@ -355,7 +355,7 @@ def test_duckdb_multirow_batch_bisection(spark, tmp_path):
     the single bad row on DuckDB (no SAVEPOINT: commit-per-chunk with
     tolerated rollback-on-autocommit), loading every good row."""
     duckdb_mod = pytest.importorskip("duckdb")
-    from pyspark_postgres_loader_spark.sinks.roundtrip import _connect as _dconn
+    from pyspark_postgres_loader_spark.cli import make_file_db_connection_factory
     from pyspark_postgres_loader_spark.sinks.sql_builder import DUCKDB
 
     path = str(tmp_path / "bisect.duckdb")
@@ -369,7 +369,7 @@ def test_duckdb_multirow_batch_bisection(spark, tmp_path):
     df = spark.createDataFrame(rows, "k long, v double").coalesce(1)
     stats = upsert_dataframe(
         df,
-        functools.partial(_dconn, path),
+        make_file_db_connection_factory("duckdb", path),
         "b",
         ["k"],
         batch_size=40,  # one statement → CHECK fails → bisection
@@ -380,85 +380,3 @@ def test_duckdb_multirow_batch_bisection(spark, tmp_path):
     got = dict(con.execute("SELECT k, v FROM b").fetchall())
     con.close()
     assert len(got) == 39 and 13 not in got
-
-
-# --- pipelined mode (round 15: the asyncpg executor's in-flight overlap)
-
-def _connect_mt(path: str):
-    # the pipelined flush runs on a worker thread; sqlite's default
-    # same-thread guard must be off for this test double (real
-    # drivers — psycopg2, asyncpg-adapted, duckdb — have no such tie)
-    return sqlite3.connect(path, timeout=30, check_same_thread=False)
-
-
-def test_pipeline_same_final_state_and_stats(spark, db):
-    path, conn = db
-    conn.execute(
-        "CREATE TABLE p1 (id INTEGER PRIMARY KEY, qty INTEGER "
-        "CHECK (qty >= 0))")
-    conn.commit()
-    rows = [(i % 7, -1 if i % 11 == 3 else i) for i in range(60)]
-    df = spark.createDataFrame(rows, "id int, qty int").coalesce(1)
-    stats = upsert_dataframe(
-        df,
-        functools.partial(_connect_mt, path),
-        "p1",
-        ["id"],
-        batch_size=8,
-        dialect=SQLITE,
-        pipeline=True,
-    )
-    assert stats.rows_seen == 60
-    assert stats.rows_loaded + stats.rows_rejected == 60
-    assert stats.aborted_partitions == 0
-    # final state: last constraint-satisfying occurrence per key —
-    # identical to the serial path's semantics
-    got = dict(conn.execute("SELECT id, qty FROM p1").fetchall())
-    exp = {}
-    for i in range(60):
-        if i % 11 != 3:
-            exp[i % 7] = i
-    assert got == exp
-
-
-def test_pipeline_quarantine_isolates_poison_rows(spark, db):
-    path, conn = db
-    conn.execute("CREATE TABLE p2 (id INTEGER, qty INTEGER CHECK (qty >= 0))")
-    conn.commit()
-    rows = [(i, -1 if i in (5, 23, 41) else i) for i in range(50)]
-    df = spark.createDataFrame(rows, "id int, qty int").coalesce(1)
-    stats = upsert_dataframe(
-        df,
-        functools.partial(_connect_mt, path),
-        "p2",
-        None,
-        batch_size=16,
-        dialect=SQLITE,
-        pipeline=True,
-    )
-    assert stats.rows_rejected == 3
-    assert stats.rows_loaded == 47
-    assert conn.execute("SELECT COUNT(*) FROM p2").fetchone()[0] == 47
-
-
-def test_pipeline_abort_observed_next_boundary(spark, db):
-    path, conn = db
-    conn.execute("CREATE TABLE p3 (id INTEGER, qty INTEGER CHECK (qty >= 0))")
-    conn.commit()
-    rows = [(i, -1) for i in range(40)]  # every row poison
-    df = spark.createDataFrame(rows, "id int, qty int").coalesce(1)
-    stats = upsert_dataframe(
-        df,
-        functools.partial(_connect_mt, path),
-        "p3",
-        None,
-        batch_size=10,
-        dialect=SQLITE,
-        pipeline=True,
-    )
-    assert stats.aborted_partitions == 1
-    # the all-bad verdict of batch 1 is observed when batch 2 fills —
-    # one extra accumulated batch vs the serial path's rows_seen == 10
-    assert stats.rows_seen == 20
-    assert any("aborted" in m for m in stats.error_messages)
-    assert conn.execute("SELECT COUNT(*) FROM p3").fetchone()[0] == 0
