@@ -25,6 +25,7 @@ until the budget is hit, and the FULL per-query map is written to
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -96,6 +97,15 @@ def _time_passes(
     return timings, errors, totals
 
 
+def _run_noop(queries: dict, spark, sf_dir: str, name: str) -> list[dict]:
+    """Run query ``name`` through the noop sink and return the
+    ``registry.RUN_LOG`` records written during the run: the substrate
+    builds and stream phases its wall time does not show."""
+    mark = len(registry.RUN_LOG)
+    queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return registry.RUN_LOG[mark:]
+
+
 def _isolated(names: list[str]) -> dict:
     """Time ``names`` in ONE fresh subprocess (``bench.py --isolated``:
     new JVM, shared warmup, untimed pass, min-of-3 per query) and return
@@ -143,19 +153,11 @@ def _isolated_child(names: list[str]) -> None:
     judge measured suite-context inflation up to ~1.5x on the heaviest
     queries (pagerank: 5.09 s in-suite vs 3.33 s isolated) — these are
     the reproducible per-query numbers. A query that raises is listed
-    under ``_errors`` and the others are still timed."""
-    # per-query stream phase attribution (VERDICT r15 task 4): the
-    # windows.PHASE_LOG records each query's best timed pass appended
-    from pyspark_postgres_loader_spark.streaming import windows as _w
-
+    under ``_errors`` and the others are still timed; the run-log
+    records of each query's best timed pass are under ``_attribution``."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="bench-isolated")
-    queries = registry.all_queries()
-
-    def run_one(name: str) -> list:
-        mark = len(_w.PHASE_LOG)
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return _w.PHASE_LOG[mark:]
+    run_one = functools.partial(_run_noop, registry.all_queries(), spark, sf_dir)
 
     _warmup(spark, sf_dir)
     # one UNTIMED pass per query first: a fresh JVM is JIT-cold (C2
@@ -164,15 +166,15 @@ def _isolated_child(names: list[str]) -> None:
     # in-suite — the exact inverse of the suite-context noise this pass
     # exists to remove
     _, errors, _ = _time_passes(run_one, names, 1)
-    phases: dict[str, list] = {}
+    logs: dict[str, list] = {}
     out, pass_errors, _ = _time_passes(
-        run_one, [n for n in names if n not in errors], 3, best=phases
+        run_one, [n for n in names if n not in errors], 3, best=logs
     )
     errors.update(pass_errors)
     spark.stop()
-    phases = {n: p for n, p in phases.items() if p and n in out}
-    if phases:
-        out["_stream_phases"] = phases  # filtered out of timings by name
+    logs = {n: r for n, r in logs.items() if r and n in out}
+    if logs:
+        out["_attribution"] = logs  # filtered out of timings by name
     if errors:
         out["_errors"] = errors
     print(json.dumps(out, separators=(",", ":")), flush=True)
@@ -215,9 +217,7 @@ def main() -> None:
     spark = get_spark(app_name="bench")
 
     queries = registry.all_queries()
-
-    def run_one(name: str) -> None:
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    run_one = functools.partial(_run_noop, queries, spark, sf_dir)
 
     # untimed warmup: JVM/codegen spin-up + first touch of each table +
     # Python UDF worker fork, so per-query timings measure the queries
@@ -234,8 +234,12 @@ def main() -> None:
     # as the queries, and the 3-pass min only partially absorbed it.
     # Executing every query once untimed moves that one-off cost out of
     # the recorded passes entirely, so spread_sec reads as genuine
-    # run-to-run variance.
-    _, errors, _ = _time_passes(run_one, suite, 1)
+    # run-to-run variance. App-scoped substrates (LSH index, unigram
+    # model, ANN graphs) are built on this pass, so its run-log records
+    # are the ones kept: the timed passes of their consumers read a
+    # checkpoint.
+    warm: dict[str, list] = {}
+    _, errors, _ = _time_passes(run_one, suite, 1, best=warm)
 
     # three passes, per-query minimum: one pass measures codegen compile +
     # machine noise as much as the query; the min is the reproducible cost.
@@ -269,37 +273,11 @@ def main() -> None:
             "crowding); VERDICT r12 task 2"
         ),
         "queries": {n: timings[n] for n in stream_names if n in timings},
-        "phase_attribution": {
-            "note": (
-                "per-query split of the BEST timed pass: start_sec = "
-                "stream start (trigger/source setup, offset-log dir), "
-                "await_sec = microbatch execution; trigger_execution/"
-                "add_batch/offset_log/state_commit ms come from Spark's "
-                "own progress events (VERDICT r15 task 4)"
-            ),
-            "queries": stream.get("_stream_phases", {}),
-        },
     }
-
-    # substrate-build attribution (VERDICT r15 task 5): app-scoped memos
-    # (LSH index, unigram model, ann substrates) are built on the UNTIMED
-    # warmup pass, so the timed passes of their consumer queries measure
-    # a checkpoint read — the build seconds are recorded here so those
-    # numbers stay interpretable. Additions-only: headline unchanged.
-    try:
-        from pyspark_postgres_loader_spark.operators.app_cache import BUILD_LOG
-
-        substrates = {
-            "note": (
-                "per-substrate eager-build seconds (most recent build in "
-                "this process; builds happen on the untimed warmup pass, "
-                "so consumer-query timings below exclude them)"
-            ),
-            "build_sec": dict(sorted(BUILD_LOG.items())),
-            "build_total_sec": round(sum(BUILD_LOG.values()), 3),
-        }
-    except Exception as exc:  # noqa: BLE001
-        substrates = {"error": _err(exc)}
+    # per query, the run-log records of the pass that attributes it:
+    # the suite's warm pass, the stream family's best timed pass
+    attribution = {n: r for n, r in warm.items() if r}
+    attribution.update(stream.get("_attribution", {}))
 
     try:
         skew = _skew_bench(spark, sf_dir)
@@ -340,20 +318,6 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         isolated = {"error": _err(exc)}
 
-    # sink family: per-phase attribution (VERDICT r13 task 6 — two
-    # rounds of drift on untouched sink code; the artifact now shows
-    # fixture/sink-I/O/readback splits, the exact statement count the
-    # bisection stress generates, and the Spark-free floor, so any
-    # future suite-number movement is attributable at a glance)
-    try:
-        from pyspark_postgres_loader_spark.sinks.roundtrip import (
-            sink_phase_breakdown,
-        )
-
-        sink_detail = sink_phase_breakdown(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001
-        sink_detail = {"error": _err(exc)}
-
     total = round(sum(timings.values()), 3)
     # "contract"-tagged queries compute an exact reference ALONGSIDE a
     # sketch/approx result purely to assert the error envelope — their
@@ -380,12 +344,11 @@ def main() -> None:
         "queries": timings,
         "contract_queries": contract,
         "contract_queries_sec": round(sum(timings[n] for n in contract), 3),
-        "substrates": substrates,
+        "attribution": dict(sorted(attribution.items())),
         "skew_mitigation": skew,
         "hll_envelope": hll,
         "isolated_top10": isolated,
         "stream_family": stream_detail,
-        "sink_family": sink_detail,
         "sf": sf,
     }
     with open(os.path.join(_HERE, "BENCH_DETAIL.json"), "w") as f:

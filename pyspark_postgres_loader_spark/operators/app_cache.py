@@ -16,11 +16,11 @@ in the cacheManager; probed on PySpark 4.1.2, ``getRDDStorageInfo``
 is identical with and without the call), so the blocks are freed by
 ContextCleaner once unreferenced, or when their context stops.
 
-Build cost is recorded per substrate in ``BUILD_LOG`` (name →
-seconds, most recent build wins) so bench.py can surface substrate
-construction separately from the per-query timings that consume the
-memo (VERDICT r15 task 5: a memoized query's timed passes read a
-checkpoint, not the build — the build seconds live here).
+Each build appends a ``substrate_build`` record to ``registry.RUN_LOG``
+so bench.py can report substrate construction in BENCH_DETAIL's
+``attribution`` block, apart from the per-query timings that consume
+the memo (a memoized query's timed passes read a checkpoint, not the
+build).
 """
 
 from __future__ import annotations
@@ -30,9 +30,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# substrate name -> seconds of the most recent build in this process
-# (measurement surface only; never read on any query path)
-BUILD_LOG: dict[str, float] = {}
+from ..registry import RUN_LOG
 
 
 def app_scoped(
@@ -53,8 +51,10 @@ def app_scoped(
             cache.pop(stale)
         t0 = time.perf_counter()
         df = build().localCheckpoint(eager=True)
-        BUILD_LOG["/".join(str(p) for p in key_tail)] = round(
-            time.perf_counter() - t0, 3
-        )
+        RUN_LOG.append({
+            "kind": "substrate_build",
+            "substrate": "/".join(str(p) for p in key_tail),
+            "sec": round(time.perf_counter() - t0, 3),
+        })
         cache[key] = df
     return df

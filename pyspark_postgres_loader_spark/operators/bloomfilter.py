@@ -12,8 +12,8 @@ so both sides are ours, pairwise independent:
   checks numBytes against the actual bitset, rejects non-XXHASH
   hashes, and runs membership probes;
 - hashing is the spec's xxHash64(seed=0) over the PLAIN-encoded
-  value (8-byte little-endian for INT64), implemented here in pure
-  Python and DIFFERENTIALLY VALIDATED against Spark's JVM
+  value (8-byte little-endian for INT64), the pure-Python
+  ``byteprim.xxh64``, DIFFERENTIALLY VALIDATED against Spark's JVM
   ``F.xxhash64`` (same algorithm, seed 42) plus the published
   empty-input vector 0xEF46DB3751D8E999 — writer, reader, and the
   JVM hash are three independent implementations;
@@ -49,76 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .byteprim import xxh64
 from .parquetwalk import _TReader, _pq_values
-
-_MASK64 = (1 << 64) - 1
-
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _MASK64
-
-
-def _round(acc: int, inp: int) -> int:
-    acc = (acc + inp * _P2) & _MASK64
-    return (_rotl(acc, 31) * _P1) & _MASK64
-
-
-def _merge(h: int, v: int) -> int:
-    h ^= _round(0, v)
-    return (h * _P1 + _P4) & _MASK64
-
-
-def xxhash64(data: bytes, seed: int = 0) -> int:
-    """Pure-Python XXH64 (public spec). Validated against the
-    published empty-input vector and Spark's JVM implementation in
-    tests/test_bloom_filter.py."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _MASK64
-        v2 = (seed + _P2) & _MASK64
-        v3 = seed & _MASK64
-        v4 = (seed - _P1) & _MASK64
-        while i <= n - 32:
-            v1 = _round(v1, struct.unpack_from("<Q", data, i)[0])
-            v2 = _round(v2, struct.unpack_from("<Q", data, i + 8)[0])
-            v3 = _round(v3, struct.unpack_from("<Q", data, i + 16)[0])
-            v4 = _round(v4, struct.unpack_from("<Q", data, i + 24)[0])
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12)
-             + _rotl(v4, 18)) & _MASK64
-        h = _merge(h, v1)
-        h = _merge(h, v2)
-        h = _merge(h, v3)
-        h = _merge(h, v4)
-    else:
-        h = (seed + _P5) & _MASK64
-    h = (h + n) & _MASK64
-    while i + 8 <= n:
-        h ^= _round(0, struct.unpack_from("<Q", data, i)[0])
-        h = (_rotl(h, 27) * _P1 + _P4) & _MASK64
-        i += 8
-    if i + 4 <= n:
-        h ^= (struct.unpack_from("<I", data, i)[0] * _P1) & _MASK64
-        h = (_rotl(h, 23) * _P2 + _P3) & _MASK64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _P5) & _MASK64
-        h = (_rotl(h, 11) * _P1) & _MASK64
-        i += 1
-    h ^= h >> 33
-    h = (h * _P2) & _MASK64
-    h ^= h >> 29
-    h = (h * _P3) & _MASK64
-    h ^= h >> 32
-    return h
-
 
 # spec salt constants — one odd 32-bit multiplier per block word
 _SALT = (0x47B6137B, 0x44974D91, 0x8824AD5B, 0xA2B7289D,
@@ -127,7 +59,7 @@ _SALT = (0x47B6137B, 0x44974D91, 0x8824AD5B, 0xA2B7289D,
 
 def _hash_int64(v: int) -> int:
     """Spec: hash the column's PLAIN encoding — 8-byte LE for INT64."""
-    return xxhash64(struct.pack("<q", v), seed=0)
+    return xxh64(struct.pack("<q", v), seed=0)
 
 
 def _block_mask(h_lo: int) -> list[int]:

@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import struct
 
-from .zstdwalk import xxh64
+from .byteprim import xxh64
 
 # --------------------------------------------------------------- bits
 

@@ -25,7 +25,7 @@ reader finds the table without scanning), then verifies the whole
 verifiable surface: per-entry compressed sizes against the actual
 frame boundaries, decompressed sizes against this repo's own RFC
 8878 decoder output (operators/zstdfse.py), per-frame XXH64-low32
-checksums (operators/zstdwalk.xxh64), and the table's total against
+checksums (operators/byteprim.xxh64), and the table's total against
 the file. A seek PROBE then resolves a target uncompressed offset
 to its frame via the table's prefix sums alone — the random-access
 operation the format exists for — and the probe result is checked
@@ -55,7 +55,8 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..tables import load_table
 from .zstdfse import decompress_frame
-from .zstdwalk import build_zstd_frame, xxh64
+from .byteprim import xxh64
+from .zstdwalk import build_zstd_frame
 from .walkbatch import decode_walk
 
 _SEEK_SKIP_MAGIC = 0x184D2A5E

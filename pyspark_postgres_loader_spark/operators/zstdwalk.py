@@ -38,67 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from ..registry import register
 from ..tables import load_table
 from ..functions.planctl import presentation_sort as _presentation_sort
+from .byteprim import xxh64
 from .walkbatch import decode_walk
 
 _MAGIC = 0xFD2FB528
 _SKIP_MAGIC_BASE = 0x184D2A50  # low nibble 0..15 all skippable
-
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _xxr(acc: int, lane: int) -> int:
-    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
-
-
-def xxh64(data: bytes, seed: int = 0) -> int:
-    """XXH64 from the public xxHash spec (zstd's content checksum is
-    its low 32 bits, seed 0). Pinned against the spec's published
-    vectors in tests/test_zstd_walk.py."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M64
-        v2 = (seed + _P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _P1) & _M64
-        while i + 32 <= n:
-            v1 = _xxr(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = _xxr(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = _xxr(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = _xxr(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ _xxr(0, v)) * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h = (_rotl(h ^ _xxr(0, int.from_bytes(data[i : i + 8], "little")), 27)
-             * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = (_rotl(h ^ (int.from_bytes(data[i : i + 4], "little") * _P1) & _M64,
-                   23) * _P2 + _P3) & _M64
-        i += 4
-    while i < n:
-        h = (_rotl(h ^ (data[i] * _P5) & _M64, 11) * _P1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M64
-    h ^= h >> 29
-    h = (h * _P3) & _M64
-    h ^= h >> 32
-    return h
 
 
 def build_zstd_frame(

@@ -45,6 +45,13 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
+# Work a query run does that its wall time does not show: one dict per
+# event, each with a "kind" ("substrate_build" from app_cache.app_scoped,
+# "stream" from the streaming runner). Measurement only: bench.py slices
+# it per query into BENCH_DETAIL's attribution block; no query path
+# reads it.
+RUN_LOG: list[dict] = []
+
 
 def register(
     name: str,

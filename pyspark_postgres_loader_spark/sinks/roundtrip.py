@@ -62,14 +62,7 @@ from ..scratch import claim_scratch_dir
 from ..tables import load_table
 from .async_adapter import adapt_async_factory
 from .sql_builder import ASYNCPG, DUCKDB
-from .upsert import (
-    LoadStats,
-    _batch_and_upsert,
-    _dedup_key_indices,
-    chunk_writer,
-    upsert_dataframe,
-    upsert_via_staging,
-)
+from .upsert import LoadStats, upsert_dataframe, upsert_via_staging
 
 _BATCH = 256
 _KEYS = 50
@@ -460,160 +453,3 @@ def sink_async_upsert_final_state(spark: SparkSession, sf_dir: str) -> DataFrame
 sink_async_upsert_final_state.__doc__ = (
     sink_async_upsert_final_state.__doc__.format(rows=_ASYNC_ROWS)
 )
-
-
-# ---------------------------------------- bench attribution (r14)
-
-
-class _CountingCursor:
-    """DBAPI cursor proxy counting statements — attribution only."""
-
-    def __init__(self, cur, counts: dict):
-        self._cur = cur
-        self._counts = counts
-
-    def execute(self, *a, **kw):
-        self._counts["execute"] += 1
-        return self._cur.execute(*a, **kw)
-
-    def executemany(self, *a, **kw):
-        self._counts["executemany"] += 1
-        return self._cur.executemany(*a, **kw)
-
-    def __getattr__(self, name):
-        return getattr(self._cur, name)
-
-
-class _CountingConnection:
-    """DBAPI connection proxy counting commits/rollbacks."""
-
-    def __init__(self, conn, counts: dict):
-        self._conn = conn
-        self._counts = counts
-
-    def cursor(self):
-        return _CountingCursor(self._conn.cursor(), self._counts)
-
-    def commit(self):
-        self._counts["commit"] += 1
-        return self._conn.commit()
-
-    def rollback(self):
-        self._counts["rollback"] += 1
-        return self._conn.rollback()
-
-    def __getattr__(self, name):
-        return getattr(self._conn, name)
-
-
-def sink_phase_breakdown(
-    spark: SparkSession, sf_dir: str, trials: int = 2
-) -> dict:
-    """Per-phase wall attribution of ``sink_upsert_final_state``
-    (VERDICT r13 task 6: two rounds of drift on untouched code needed
-    a breakdown in the artifact). Phases per trial, min recorded:
-    target DDL, changelog fixture build (Spark plan to count), sink
-    I/O (the real ``upsert_dataframe`` through a 1-partition Spark
-    job), readback (DuckDB select + createDataFrame + count). One
-    extra DRIVER-SIDE pass runs the identical partition consumer with
-    a statement-counting DBAPI proxy — no Spark task machinery — so
-    the artifact records (a) the exact DuckDB statement count the
-    mod-7 bisection stress generates and (b) the pure
-    Python+DuckDB floor of the production chunk writer; the gap
-    between that floor and the sink phase is Spark task overhead, and anything ABOVE the recorded
-    sink phase in the suite timing is crowding, not the sink."""
-    import time
-
-    phases: dict[str, float] = {}
-
-    def _rec(name: str, sec: float) -> None:
-        phases[name] = round(min(phases.get(name, sec), sec), 3)
-
-    def _target(filename: str) -> str:
-        return _fresh_target("sink_phases", sf_dir + "#phases", filename, _TARGET_DDL)
-
-    for trial in range(trials):
-        t0 = time.perf_counter()
-        dbfile = _target(f"t{trial}.duckdb")
-        t1 = time.perf_counter()
-        rows = _changelog(spark, sf_dir)
-        rows.count()
-        t2 = time.perf_counter()
-        upsert_dataframe(
-            rows, make_file_db_connection_factory("duckdb", dbfile),
-            "sink_final_state", unique_key=["k"], batch_size=_BATCH,
-            parallelism=1, dialect=DUCKDB,
-        )
-        t3 = time.perf_counter()
-        _read_back(spark, dbfile, "sink_final_state").count()
-        t4 = time.perf_counter()
-        _rec("ddl_sec", t1 - t0)
-        _rec("fixture_sec", t2 - t1)
-        _rec("sink_io_sec", t3 - t2)
-        _rec("readback_sec", t4 - t3)
-        os.remove(dbfile)
-
-    # driver-side consumer: identical rows + sink code, no Spark task
-    # machinery, statements counted through a DBAPI proxy
-    changelog = _changelog(spark, sf_dir)
-    data = [tuple(r) for r in changelog.collect()]
-    cols = changelog.columns
-    dbfile = _target("floor.duckdb")
-    connect = make_file_db_connection_factory("duckdb", dbfile)
-    counts = {"execute": 0, "executemany": 0, "commit": 0,
-              "rollback": 0}
-
-    def _counting_factory():
-        return _CountingConnection(connect(), counts)
-
-    # the same per-dialect writer and dedup keys upsert_dataframe builds
-    write_chunk = chunk_writer(
-        changelog.schema, "sink_final_state", ["k"], None, DUCKDB)
-    t0 = time.perf_counter()
-    consumed = list(_batch_and_upsert(
-        iter(data), _counting_factory, write_chunk, _BATCH,
-        use_savepoint=DUCKDB.supports_savepoint,
-        key_indices=_dedup_key_indices(cols, ["k"], DUCKDB),
-    ))
-    floor = round(time.perf_counter() - t0, 3)
-    os.remove(dbfile)
-    n_stmt = counts["execute"] + counts["executemany"]
-    # ambient-load baseline: DuckDB's per-execute cost itself swells
-    # with JVM/CPU pressure (measured 1.4 ms quiet vs ~3.4 ms at the
-    # tail of a full suite run), so record a same-moment baseline of
-    # trivial executes — statements x baseline ≈ the expected sink
-    # phase UNDER THE SAME LOAD, making the artifact self-attributing
-    bcon = duckdb.connect()
-    try:
-        t0 = time.perf_counter()
-        for _ in range(300):
-            bcon.execute("SELECT 1")
-        baseline_ms = round(
-            (time.perf_counter() - t0) * 1000.0 / 300.0, 3)
-    finally:
-        bcon.close()
-    return {
-        "phases_min_sec": phases,
-        "trials": trials,
-        "driver_side_floor_sec": floor,
-        "statements": counts,
-        "ms_per_statement": round(1000.0 * floor / max(n_stmt, 1), 3),
-        "ambient_ms_per_trivial_execute": baseline_ms,
-        "rows": consumed[0][0] if consumed else 0,
-        "method": (
-            "phases: min over trials around the query's own code "
-            "paths; floor: the identical partition consumer run "
-            "driver-side with a counting DBAPI proxy, writing each "
-            "chunk through DuckDB's production chunk writer (one "
-            "registered Arrow relation and one INSERT .. SELECT .. ON "
-            "CONFLICT per chunk) — the mod-7 "
-            "poison stride makes bisection emit ~80 statements per "
-            "256-row batch BY DESIGN (the stress the query exists "
-            "to hash). The INVARIANT is the statement count; wall = "
-            "statements x DuckDB's per-execute cost, which itself "
-            "scales with ambient load (compare ms_per_statement "
-            "against ambient_ms_per_trivial_execute measured the "
-            "same moment) — so a moved suite number with an "
-            "unchanged statement count is environment, not the sink"
-        ),
-    }

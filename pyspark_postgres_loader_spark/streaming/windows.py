@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import dsum, sql_dsum
-from ..registry import register
+from ..registry import RUN_LOG, register
 from ..tables import load_table
 
 # events.ts unit varies by fixture generation: TIMESTAMP(NANOS) parquet
@@ -74,17 +74,15 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STATE_PARTITIONS = 8  # state stores per stateful operator; see note below
 
-# Per-stream phase attribution (VERDICT r15 task 4): every
-# _run_to_memory call appends one record splitting its wall time into
+
+# Per-stream phase attribution: every _run_to_memory call appends one
+# "stream" record to registry.RUN_LOG splitting its wall time into
 # stream START (trigger/source setup, offset log creation), microbatch
 # EXECUTION (from Spark's own progress events: triggerExecution with
 # its addBatch/getBatch/walCommit/commitOffsets parts), and the
 # state-store COMMIT portion (stateOperators[].commitTimeMs summed).
-# Measurement surface only — bench.py copies it into BENCH_DETAIL's
-# stream_family block; nothing on the query path reads it.
-PHASE_LOG: list[dict] = []
-
-
+# Measurement only — bench.py copies it into BENCH_DETAIL's
+# attribution block; nothing on the query path reads it.
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Drive a streaming DataFrame to completion into a memory sink.
 
@@ -127,6 +125,7 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
             # sums below may cover only the last batches
             cap = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
             rec = {
+                "kind": "stream",
                 "sink": name,
                 "output_mode": output_mode,
                 "n_batches": len(progress),
@@ -153,7 +152,7 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
                     for op in p.get("stateOperators", [])
                 ),
             }
-            PHASE_LOG.append(rec)
+            RUN_LOG.append(rec)
         except Exception:  # noqa: BLE001 — attribution must never fail a query
             pass
     finally:

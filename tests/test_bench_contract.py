@@ -170,10 +170,10 @@ def test_isolated_child_isolates_a_raising_query(monkeypatch, capsys):
     """One raising query is reported by name; the others are still
     timed min-of-3 with their best pass's phase records (no Spark:
     registry, session and warmup are fakes)."""
-    from pyspark_postgres_loader_spark.streaming import windows
+    from pyspark_postgres_loader_spark import registry
 
     phase_log = []
-    monkeypatch.setattr(windows, "PHASE_LOG", phase_log)
+    monkeypatch.setattr(registry, "RUN_LOG", phase_log)
     run_one, calls = _scripted(
         monkeypatch,
         {"a": [9.0, 3.0, 1.0, 2.0], "bad": [None], "c": [9.0, 0.5, 0.5, 0.7]},
@@ -204,6 +204,41 @@ def test_isolated_child_isolates_a_raising_query(monkeypatch, capsys):
     assert "bad" not in out
     # phase records of the fastest pass: a's 3rd call, c's 2nd (a tie
     # keeps the first)
-    assert out["_stream_phases"] == {"a": [["a", 3]], "c": [["c", 2]]}
+    assert out["_attribution"] == {"a": [["a", 3]], "c": [["c", 2]]}
     # warm pass + 3 timed passes for the good names; "bad" ran once
     assert calls.count("a") == 4 and calls.count("bad") == 1
+
+
+def test_run_noop_returns_only_the_records_of_its_run(monkeypatch):
+    """The shared runner saves through the noop sink and returns exactly
+    the run-log records appended while the query ran: not the ones
+    already in the log, not the ones a later run appends."""
+    from pyspark_postgres_loader_spark import registry
+
+    run_log = [{"kind": "stream", "sink": "earlier"}]
+    monkeypatch.setattr(registry, "RUN_LOG", run_log)
+    saved = []
+
+    class _Query:  # queries[name](spark, sf).write.format(..).mode(..).save()
+        def __init__(self, name):
+            self.name, self.write = name, self
+
+        def format(self, fmt):
+            saved.append(fmt)
+            return self
+
+        def mode(self, _):
+            return self
+
+        def save(self):
+            run_log.append({"kind": "substrate_build", "substrate": self.name})
+            run_log.append({"kind": "stream", "sink": self.name})
+
+    queries = {n: (lambda n: lambda spark, sf: _Query(n))(n) for n in ("a", "b")}
+    got = bench._run_noop(queries, None, "sf", "a")
+    bench._run_noop(queries, None, "sf", "b")
+    assert got == [
+        {"kind": "substrate_build", "substrate": "a"},
+        {"kind": "stream", "sink": "a"},
+    ]
+    assert saved == ["noop", "noop"]

@@ -15,8 +15,8 @@ from pyspark_postgres_loader_spark.operators.bloomfilter import (
     sbbf_deserialize,
     sbbf_num_blocks,
     sbbf_serialize,
-    xxhash64,
 )
+from pyspark_postgres_loader_spark.operators.byteprim import xxh64 as xxhash64
 from pyspark_postgres_loader_spark.operators.parquetwalk import _pq_values
 
 

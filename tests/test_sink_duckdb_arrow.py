@@ -2,7 +2,8 @@
 Arrow relation (``sinks.upsert.chunk_writer``), so every Spark type the
 aligned DataFrame carries must land in DuckDB with the value the Row
 path holds; and the file-backed CLI factories must pickle and load
-DATE/TIMESTAMP rows on a fresh executor."""
+DATE/TIMESTAMP rows on a fresh executor. The statement count of the
+``sink_upsert_final_state`` workload is pinned here."""
 
 from __future__ import annotations
 
@@ -16,8 +17,14 @@ from decimal import Decimal
 import duckdb
 import pytest
 
+from pyspark_postgres_loader_spark.sinks import roundtrip
 from pyspark_postgres_loader_spark.sinks.sql_builder import DUCKDB
-from pyspark_postgres_loader_spark.sinks.upsert import upsert_dataframe
+from pyspark_postgres_loader_spark.sinks.upsert import (
+    _batch_and_upsert,
+    _dedup_key_indices,
+    chunk_writer,
+    upsert_dataframe,
+)
 
 _SCHEMA = (
     "k bigint, i int, d double, m decimal(12,2), day date, ts timestamp, "
@@ -163,3 +170,72 @@ def test_file_db_factory_binds_datetimes_in_a_fresh_process(dialect, tmp_path):
     assert proc.returncode == 0, proc.stderr.decode()
     assert proc.stdout.decode().strip() == "1"
     assert pickle.loads(blob).args == (db,)
+
+
+class _CountedCursor:
+    def __init__(self, cur, counts: dict):
+        self._cur, self._counts = cur, counts
+
+    def execute(self, *a, **kw):
+        self._counts["execute"] += 1
+        return self._cur.execute(*a, **kw)
+
+    def executemany(self, *a, **kw):
+        self._counts["executemany"] += 1
+        return self._cur.executemany(*a, **kw)
+
+    def __getattr__(self, name):
+        return getattr(self._cur, name)
+
+
+class _CountedDuckDB:
+    """A DuckDB connection that counts statements, commits and
+    rollbacks into ``counts``."""
+
+    def __init__(self, path: str, counts: dict):
+        self._con, self._counts = duckdb.connect(path), counts
+
+    def cursor(self):
+        return _CountedCursor(self._con.cursor(), self._counts)
+
+    def commit(self):
+        self._counts["commit"] += 1
+        return self._con.commit()
+
+    def rollback(self):
+        self._counts["rollback"] += 1
+        return self._con.rollback()
+
+    def __getattr__(self, name):
+        return getattr(self._con, name)
+
+
+def test_sink_roundtrip_statement_count(spark, tmp_path):
+    """The ``sink_upsert_final_state`` changelog (6,000 rows at sf0.01,
+    every 7th a CHECK violation) through DuckDB's Arrow chunk writer
+    issues a fixed number of statements: the mod-7 poison stride makes
+    nearly every 256-row batch bisect. A change in these counts is a
+    change in the sink's bisection or dedup, not in the environment."""
+    path = str(tmp_path / "count.duckdb")
+    con = duckdb.connect(path)
+    con.execute(roundtrip._TARGET_DDL)
+    con.close()
+    changelog = roundtrip._changelog(spark, "/root/testdata/sf0.01")
+    rows = [tuple(r) for r in changelog.collect()]
+    counts = dict.fromkeys(("execute", "executemany", "commit", "rollback"), 0)
+    factory = functools.partial(_CountedDuckDB, path, counts)
+
+    ((seen, *_),) = list(
+        _batch_and_upsert(
+            iter(rows),
+            factory,
+            chunk_writer(changelog.schema, "sink_final_state", ["k"], dialect=DUCKDB),
+            roundtrip._BATCH,
+            use_savepoint=DUCKDB.supports_savepoint,
+            key_indices=_dedup_key_indices(changelog.columns, ["k"], DUCKDB),
+        )
+    )
+    assert seen == 6000
+    assert counts == {
+        "execute": 1974, "executemany": 0, "commit": 1194, "rollback": 804
+    }

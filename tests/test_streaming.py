@@ -131,8 +131,9 @@ def test_stream_run_ignores_retired_env_knobs_and_leaks_no_conf(
 
 def test_phase_log_flags_truncated_progress(spark, tmp_path):
     """``recentProgress`` keeps at most ``numRecentProgressUpdates - 1``
-    records, so a stream with more batches than that gets a PHASE_LOG
+    records, so a stream with more batches than that gets a RUN_LOG
     record summed over its last batches only; the record says so."""
+    from pyspark_postgres_loader_spark import registry
     from pyspark_postgres_loader_spark.streaming import windows
 
     for i in range(3):
@@ -146,9 +147,9 @@ def test_phase_log_flags_truncated_progress(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(str(tmp_path / "src" / "*"))
         )
-        mark = len(windows.PHASE_LOG)
+        mark = len(registry.RUN_LOG)
         assert windows._run_to_memory(stream, "append").count() == 30
-        (rec,) = windows.PHASE_LOG[mark:]
+        (rec,) = registry.RUN_LOG[mark:]
         return rec["n_batches"], rec["progress_truncated"]
 
     key = "spark.sql.streaming.numRecentProgressUpdates"

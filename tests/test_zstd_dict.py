@@ -18,10 +18,7 @@ from pyspark_postgres_loader_spark.operators.zstddict import (
     _zd_payload,
     parse_zstd_dictionary,
 )
-from pyspark_postgres_loader_spark.operators.zstdfse import (
-    decompress_frame,
-    xxh64,
-)
+from pyspark_postgres_loader_spark.operators.zstdfse import decompress_frame
 
 
 def _dict_blob() -> bytes:

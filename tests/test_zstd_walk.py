@@ -13,8 +13,8 @@ from pyspark_postgres_loader_spark.operators.zstdwalk import (
     build_skippable_frame,
     build_zstd_frame,
     walk_zstd_frames,
-    xxh64,
 )
+from pyspark_postgres_loader_spark.operators.byteprim import xxh64
 
 
 def test_xxh64_published_vectors():
