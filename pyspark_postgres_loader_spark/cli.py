@@ -33,22 +33,6 @@ def _parse_source_args(pairs: list[str]) -> dict[str, str]:
     return out
 
 
-def _connect_sqlite(path: str):
-    # Imports the whole driver module: pickled ``sqlite3.connect`` is
-    # ``_sqlite3.connect``, and an executor that never imports
-    # ``sqlite3`` has no datetime adapters registered.
-    import sqlite3
-
-    return sqlite3.connect(path)
-
-
-def _connect_duckdb(path: str):
-    # ``duckdb.connect`` is a pybind builtin that does not pickle.
-    import duckdb
-
-    return duckdb.connect(path)
-
-
 def make_file_db_connection_factory(dialect: str, db_path: str):
     """Zero-arg picklable connection factory for the file-backed
     dialects (sqlite/duckdb). Each writer partition calls it to open
@@ -57,6 +41,8 @@ def make_file_db_connection_factory(dialect: str, db_path: str):
     via file locking; DuckDB is single-writer — use ``--parallelism 1``
     or the staging strategy for DuckDB targets)."""
     import functools
+
+    from .sinks.upsert import _connect_duckdb, _connect_sqlite
 
     connect = {"sqlite": _connect_sqlite, "duckdb": _connect_duckdb}.get(dialect)
     if connect is None:

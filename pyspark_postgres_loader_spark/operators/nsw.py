@@ -24,10 +24,11 @@ Scale design (100 TB):
   in the engine (finer blocking → smaller quadratic terms). The M·N
   edge list IS the stored index, written partitionBy(cell) like the
   IVF layout.
-- Query: the frontier is |Q|·B rows — ALWAYS the broadcast side; each
-  hop is one broadcast join against the edge list + one |Q|·B·M-row
-  exact re-score against the corpus (again broadcast), then a window
-  top-B. No corpus shuffle at query time, ever.
+- Query: the frontier is |Q|·B rows and carries its query vector —
+  ALWAYS the broadcast side against the edge list; each hop re-scores
+  its ≤ |Q|·B·M candidates against the corpus, then sends frontier ∪
+  candidates through ONE ``qid`` exchange that serves both the dedup
+  and the window top-B. The corpus itself is never broadcast by hint.
 - The entry layer (every 8th vector) is what HNSW's upper levels
   degenerate to with one level; at 10^9 vectors you add more levels,
   each a further 1/8 sample — the same geometric construction.
@@ -38,7 +39,7 @@ Reference: no counterpart (SURVEY.md §2l LLM-pipeline extension).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -260,32 +261,112 @@ def _nsw_adj(
     )
 
 
-def _beam_hop(frontier, adj, corpus, q, w_beam) -> DataFrame:
-    """One beam-expansion hop: frontier ∪ exact-rescored graph
-    neighbors of the frontier, keep the per-query best B. The frontier
-    is |Q|·B rows — ALWAYS the broadcast side; the corpus-side joins
-    are map-side lookups. Lineage is truncated per hop (the connected-
-    components recipe) or the plan re-derives every earlier hop per
-    consumer and the task binary grows ~2x per hop."""
+def _keep_beam(df: DataFrame, k: int = _NSW_BEAM) -> DataFrame:
+    """Each query's best ``k`` rows by the total order (d, vec_id)."""
+    w = Window.partitionBy("qid").orderBy("d", "vec_id")
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+    )
+
+
+def _qdist() -> Column:
+    """``d``: the exact distance from the query vector ``qm`` to ``m``.
+    Built once per search and reused: each ``_sqdist`` call costs tens
+    of milliseconds of driver-side lambda plumbing."""
+    return _sqdist(F.col("qm"), F.col("m")).alias("d")
+
+
+def _hop_plan(
+    frontier: DataFrame, adj: DataFrame, corpus: DataFrame, n: int, d: Column
+) -> DataFrame:
+    """One beam-expansion hop, before its checkpoint: frontier ∪
+    exact-rescored graph neighbors of the frontier, keep the per-query
+    best B. The frontier is |Q|·B rows and carries its query vector
+    ``qm``, so neighbors are re-scored without a query-side join. It is
+    the broadcast side against the edge list; the corpus join carries
+    no hint. The hop plans ONE exchange: the ≤ |Q|·B·(M+1) rows of
+    frontier ∪ expanded are hashed on ``qid`` into ``n`` partitions,
+    which both the dedup aggregate and the ``qid`` window accept."""
     expanded = (
         adj.join(F.broadcast(frontier), adj["a"] == frontier["vec_id"])
-        .select("qid", F.col("b").alias("vec_id"))
-        .distinct()
+        .select("qid", "qm", F.col("b").alias("vec_id"))
         .join(corpus, "vec_id")
-        .join(F.broadcast(q), "qid")
-        .select("qid", "vec_id", _sqdist(F.col("qm"), F.col("m")).alias("d"))
+        .select("qid", "qm", "vec_id", d)
     )
-    return (
+    return _keep_beam(
         frontier.unionByName(expanded)
-        .distinct()  # (qid, vec_id, d) — d is an exact BIGINT, so a
-        # revisited node collapses to one row
-        .withColumn("rn", F.row_number().over(w_beam))
-        .filter(F.col("rn") <= _NSW_BEAM)
-        .select("qid", "vec_id", "d")
-        # r16 A/B: eager 2.65 s vs lazy 2.83 s isolated at sf0.1 — the
-        # eager hop pin stays (lazy defers every hop into the final job
-        # AFTER the corpus cache is already released at build time)
-        .localCheckpoint(eager=True)
+        .repartition(n, "qid")
+        # qm and d are functions of (qid, vec_id): a node reached twice
+        # (from two frontier rows, or already in the frontier) collapses
+        # to one row
+        .distinct()
+    ).drop("rn")
+
+
+def _seed_beam(
+    corpus: DataFrame, entries: DataFrame, n: int, d: Column
+) -> DataFrame:
+    """Each query's first frontier: its best B ``entries``, carrying
+    the query vector ``qm`` that every hop re-scores against."""
+    q = corpus.filter(F.col("vec_id") < _NSW_NQ).select(
+        F.col("vec_id").alias("qid"), F.col("m").alias("qm")
+    )
+    return _keep_beam(
+        q.join(F.broadcast(entries))
+        .select("qid", "qm", "vec_id", d)
+        .repartition(n, "qid")
+    ).drop("rn")
+
+
+def _beam_search(
+    corpus: DataFrame, entries: DataFrame, adjs: list[DataFrame]
+) -> DataFrame:
+    """Seed each query's beam with its best B ``entries``, run one hop
+    per edge list in ``adjs`` and rank the final top-K (the query
+    itself excluded). ``corpus`` is cached by the caller and released
+    here once every hop is materialized."""
+    # no more hop partitions than queries or cores
+    n = min(_NSW_NQ, corpus.sparkSession.sparkContext.defaultParallelism)
+    d = _qdist()
+    # Every frontier, the seed included, is an eager localCheckpoint.
+    # Lineage is cut per hop (the connected-components recipe), or the
+    # plan re-derives every earlier hop per consumer and the task
+    # binary grows ~2x per hop (SCALE.md). A hop reads its frontier
+    # twice (broadcast and union), so an unpinned seed would also scan
+    # the cached corpus once per reference, one AQE cache-stage job each.
+    # NOTE A/B, 4 vCPUs, sf0.01, warm in-process median of reps 3-6,
+    # three alternating process pairs: the old hop (query broadcast,
+    # pre-join distinct, three shuffles) ran ann_nsw_beam_topk in
+    # 3.1-3.3 s with 41 jobs; this one-exchange hop with a pinned seed
+    # and a single-partition final rank runs it in 1.9-2.1 s with 20
+    # jobs (ann_hnsw_layered_topk 2.5-3.7 s, 52 jobs -> 1.7-2.0 s, 24).
+    # Memoizing the corpus projection with app_cache.app_scoped was
+    # measured at no wall gain and moves work into setup.
+    frontier = _seed_beam(corpus, entries, n, d).localCheckpoint(eager=True)
+    for adj in adjs:
+        frontier = _hop_plan(frontier, adj, corpus, n, d).localCheckpoint(
+            eager=True
+        )
+    # every consumer of the cache (graph build, entry scoring, hop
+    # re-scores) has been EAGERLY materialized into checkpoints above —
+    # drop the cache entry now, or it leaks into the session's cache
+    # registry and substitutes into OTHER queries' matching subtrees
+    # (observed: ann_pq_adc_topk's plan text doubled its FileScan count
+    # when this cache was live)
+    corpus.unpersist()
+    # the last frontier is |Q|·B rows: one partition ranks and orders
+    # it with no exchange and no range-sort sampling job
+    last = frontier.filter(F.col("vec_id") != F.col("qid")).coalesce(1)
+    return (
+        _keep_beam(last, _NSW_TOPK)
+        .select(
+            "qid",
+            F.col("rn").cast("int").alias("rank"),
+            "vec_id",
+            (F.col("d").cast("double") / (_MICRO * _MICRO)).alias("dist"),
+        )
+        .sortWithinPartitions("qid", "rank")
     )
 
 
@@ -303,49 +384,15 @@ def ann_nsw_beam_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the slim (vec_id, micros) projection is consumed ~6 times (graph
     # build, entry scoring, and one re-score per hop) — cache it; at
     # scale this is the deliberate ANN-serving residency (~0.5 KB per
-    # vector for d=64), the same projection every hop's broadcast-
-    # candidate lookup scans
+    # vector for d=64), the same projection every hop's candidate
+    # lookup scans
     corpus = _nsw_corpus(spark, sf_dir).cache()
     # the edge list is consumed once per hop — the memoized
     # checkpoint IS the stored index at scale (M·N slim rows here),
     # built once per session and served to every later call
     adj = _nsw_adj(spark, sf_dir, corpus)
-    q = corpus.filter(F.col("vec_id") < _NSW_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("m").alias("qm")
-    )
-
     entries = corpus.filter(F.col("vec_id") % _NSW_L1_MOD == 0)
-    w_beam = Window.partitionBy("qid").orderBy("d", "vec_id")
-    frontier = (
-        q.join(F.broadcast(entries))
-        .select(
-            "qid", "vec_id", _sqdist(F.col("qm"), F.col("m")).alias("d")
-        )
-        .withColumn("rn", F.row_number().over(w_beam))
-        .filter(F.col("rn") <= _NSW_BEAM)
-        .select("qid", "vec_id", "d")
-    )
-    for _ in range(_NSW_HOPS):
-        frontier = _beam_hop(frontier, adj, corpus, q, w_beam)
-    # every consumer of the cache (graph build, entry scoring, hop
-    # re-scores) has been EAGERLY materialized into checkpoints above —
-    # drop the cache entry now, or it leaks into the session's cache
-    # registry and substitutes into OTHER queries' matching subtrees
-    # (observed: ann_pq_adc_topk's plan text doubled its FileScan count
-    # when this cache was live)
-    corpus.unpersist()
-    return (
-        frontier.filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("rank", F.row_number().over(w_beam).cast("int"))
-        .filter(F.col("rank") <= _NSW_TOPK)
-        .select(
-            "qid",
-            "rank",
-            "vec_id",
-            (F.col("d").cast("double") / (_MICRO * _MICRO)).alias("dist"),
-        )
-        .orderBy("qid", "rank")
-    )
+    return _beam_search(corpus, entries, [adj] * _NSW_HOPS)
 
 
 ann_nsw_beam_topk.__doc__ = ann_nsw_beam_topk.__doc__.format(
@@ -359,7 +406,7 @@ _HNSW_MODS = (64, 8)   # upper layers: L2 = every 64th, L1 = every 8th
 # hop schedule measured at sf0.001+sf0.01: with the centroid-clique
 # navigation edges, (L2x1, L1x1, L0x2) already reaches recall 0.979 —
 # identical to (L2x1, L1x2, L0x3) — so the shorter schedule wins (each
-# extra hop is a checkpoint + three joins); (L0x1) drops to 0.94
+# extra hop is a checkpoint + two joins); (L0x1) drops to 0.94
 _HNSW_L1_HOPS = 1      # expansion hops on the middle layer
 _HNSW_HOPS0 = 2        # expansion hops on the base layer (all vectors)
 
@@ -502,42 +549,17 @@ def ann_hnsw_layered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     N/{l2} rows, while frontiers stay |Q|·B broadcast rows and the
     corpus is never shuffled."""
     corpus = _nsw_corpus(spark, sf_dir).cache()
-    adjs = [
+    l2, l1 = (
         _nsw_adj(spark, sf_dir, corpus, members_mod=mod, hub=True)
         for mod in _HNSW_MODS
-    ]
-    adj0 = _nsw_adj(spark, sf_dir, corpus, hub=True)
-    q = corpus.filter(F.col("vec_id") < _NSW_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("m").alias("qm")
     )
+    adj0 = _nsw_adj(spark, sf_dir, corpus, hub=True)
     entries = corpus.filter(
         (F.col("vec_id") % _HNSW_MODS[0] == 0)
         | (F.col("vec_id") < _NSW_CELLS)
     )
-    w_beam = Window.partitionBy("qid").orderBy("d", "vec_id")
-    frontier = (
-        q.join(F.broadcast(entries))
-        .select(
-            "qid", "vec_id", _sqdist(F.col("qm"), F.col("m")).alias("d")
-        )
-        .withColumn("rn", F.row_number().over(w_beam))
-        .filter(F.col("rn") <= _NSW_BEAM)
-        .select("qid", "vec_id", "d")
-    )
-    for adj in [adjs[0]] + [adjs[1]] * _HNSW_L1_HOPS + [adj0] * _HNSW_HOPS0:
-        frontier = _beam_hop(frontier, adj, corpus, q, w_beam)
-    corpus.unpersist()
-    return (
-        frontier.filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("rank", F.row_number().over(w_beam).cast("int"))
-        .filter(F.col("rank") <= _NSW_TOPK)
-        .select(
-            "qid",
-            "rank",
-            "vec_id",
-            (F.col("d").cast("double") / (_MICRO * _MICRO)).alias("dist"),
-        )
-        .orderBy("qid", "rank")
+    return _beam_search(
+        corpus, entries, [l2] + [l1] * _HNSW_L1_HOPS + [adj0] * _HNSW_HOPS0
     )
 
 

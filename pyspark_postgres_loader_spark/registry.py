@@ -112,6 +112,10 @@ _TOUCHED: dict[str, int] = {
     "ingest_avro_single_object": 17,
     # hub customers filtered by a count before the supplier sets build
     "graph_triangle_count_suppliers": 17,
+    # beam hop: frontier carries the query vector, one qid exchange
+    "ann_nsw_beam_topk": 17,
+    "ann_hnsw_layered_topk": 17,
+    "ann_recall_hnsw_report": 17,
 }
 
 

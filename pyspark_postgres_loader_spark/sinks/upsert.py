@@ -395,6 +395,28 @@ def _batch_and_upsert(
     yield seen, loaded, rejected, messages, aborted, truncated
 
 
+# File-backed connection factories. They live in this module so they
+# pickle by value with it (``_register_self_by_value``): an executor
+# that cannot import the package still opens the target.
+
+
+def _connect_sqlite(path: str, timeout: float = 5.0):
+    # Imported in the worker: pickled ``sqlite3.connect`` is
+    # ``_sqlite3.connect``, and an executor that never imports
+    # ``sqlite3`` has no datetime adapters registered. 5 s is
+    # sqlite3's own lock-wait default.
+    import sqlite3
+
+    return sqlite3.connect(path, timeout=timeout)
+
+
+def _connect_duckdb(path: str):
+    # ``duckdb.connect`` is a pybind builtin that does not pickle.
+    import duckdb
+
+    return duckdb.connect(path)
+
+
 _BY_VALUE_REGISTERED = False
 
 

@@ -35,9 +35,9 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sinks.sql_builder import SQLITE
-from ..sinks.upsert import upsert_dataframe
+from ..sinks.upsert import _connect_sqlite, upsert_dataframe
 from ..tables import load_table
-from .windows import _events_stream, _run_to_memory
+from .windows import _events_stream, _run_to_memory, _start_and_await
 
 _TARGET_DDL = (
     "CREATE TABLE IF NOT EXISTS user_latest ("
@@ -93,11 +93,6 @@ def _time_split_source(spark: SparkSession, sf_dir: str, n_slices: int) -> str:
     return src
 
 
-def _connect(path: str):
-    """Top-level (picklable) connection factory for executor-side use."""
-    return sqlite3.connect(path, timeout=30.0)
-
-
 @register(
     "stream_upsert_incremental",
     oracle="""
@@ -139,7 +134,7 @@ def stream_upsert_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         with sqlite3.connect(path) as conn:
             conn.execute(_TARGET_DDL)
-        factory = partial(_connect, path)
+        factory = partial(_connect_sqlite, path, timeout=30.0)
 
         def load_batch(batch_df: DataFrame, batch_id: int) -> None:
             w = Window.partitionBy("user_id", "event_type").orderBy(
@@ -176,13 +171,14 @@ def stream_upsert_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_id long, ts timestamp, user_id long, event_type string,"
                 " value double, props string"
             ).option("maxFilesPerTrigger", 1).parquet(src)
-            q = (
+            _start_and_await(
+                spark,
                 stream.writeStream.foreachBatch(load_batch)
                 .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
+                .option("checkpointLocation", ckpt),
+                "foreachBatch:user_latest",
+                "append",  # the writer's default output mode
             )
-            q.awaitTermination()
         finally:
             # the result is read back from the DB below — the stream's
             # scratch space has no further readers (repeated bench/

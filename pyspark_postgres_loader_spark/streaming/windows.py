@@ -21,6 +21,7 @@ use Spark's native session_window (merging state), not a Python loop.
 
 from __future__ import annotations
 
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,7 +76,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATE_PARTITIONS = 8  # state stores per stateful operator; see note below
 
 
-# Per-stream phase attribution: every _run_to_memory call appends one
+# Per-stream phase attribution: every stream query this package drives
+# (_run_to_memory, stream_upsert_incremental's foreachBatch) appends one
 # "stream" record to registry.RUN_LOG splitting its wall time into
 # stream START (trigger/source setup, offset log creation), microbatch
 # EXECUTION (from Spark's own progress events: triggerExecution with
@@ -83,6 +85,59 @@ _STATE_PARTITIONS = 8  # state stores per stateful operator; see note below
 # state-store COMMIT portion (stateOperators[].commitTimeMs summed).
 # Measurement only — bench.py copies it into BENCH_DETAIL's
 # attribution block; nothing on the query path reads it.
+def _start_and_await(
+    spark: SparkSession, writer, sink: str, output_mode: str
+) -> None:
+    """Start the stream ``writer``, wait for its query to end and append
+    the query's ``stream`` record to ``registry.RUN_LOG``."""
+    t0 = time.perf_counter()
+    q = writer.start()
+    t_start = time.perf_counter()
+    q.awaitTermination()
+    t_done = time.perf_counter()
+    try:
+        # StreamingQueryProgress / StateOperatorProgress are
+        # dict-likes in PySpark 4 — .get() reads them directly
+        progress = list(q.recentProgress or [])
+        dur = [p.get("durationMs", {}) for p in progress]
+        # recentProgress keeps at most numRecentProgressUpdates - 1
+        # records (the oldest are dropped), so once it is full the
+        # sums below may cover only the last batches
+        cap = int(
+            spark.conf.get("spark.sql.streaming.numRecentProgressUpdates")
+        )
+        RUN_LOG.append({
+            "kind": "stream",
+            "sink": sink,
+            "output_mode": output_mode,
+            "n_batches": len(progress),
+            "progress_truncated": len(progress) >= cap - 1,
+            "start_sec": round(t_start - t0, 3),
+            "await_sec": round(t_done - t_start, 3),
+            "trigger_execution_ms": sum(
+                d.get("triggerExecution", 0) for d in dur
+            ),
+            "add_batch_ms": sum(d.get("addBatch", 0) for d in dur),
+            "offset_log_ms": sum(
+                d.get("walCommit", 0) + d.get("commitOffsets", 0)
+                + d.get("latestOffset", 0)
+                for d in dur
+            ),
+            "state_commit_ms": sum(
+                int(op.get("commitTimeMs", 0))
+                for p in progress
+                for op in p.get("stateOperators", [])
+            ),
+            "n_state_stores": sum(
+                int(op.get("numStateStoreInstances", 0))
+                for p in progress[-1:]
+                for op in p.get("stateOperators", [])
+            ),
+        })
+    except Exception:  # noqa: BLE001 — attribution must never fail a query
+        pass
+
+
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Drive a streaming DataFrame to completion into a memory sink.
 
@@ -94,8 +149,6 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     track KEY CARDINALITY and load, not core count. We scope a smaller
     value to the stream's lifetime and restore the session conf after.
     """
-    import time as _time
-
     spark = stream_df.sparkSession
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     name = "s" + uuid.uuid4().hex[:12]
@@ -104,57 +157,15 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     # state store (default) 24.1 s vs RocksDB 28.7 s; 8 state partitions
     # 24.1 s vs 4 → 24.5 s, 2 → 25.4 s. Defaults kept.
     try:
-        t0 = _time.perf_counter()
-        q = (
+        _start_and_await(
+            spark,
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            name,
+            output_mode,
         )
-        t_start = _time.perf_counter()
-        q.awaitTermination()
-        t_done = _time.perf_counter()
-        try:  # attribution from Spark's own progress events
-            # StreamingQueryProgress / StateOperatorProgress are
-            # dict-likes in PySpark 4 — .get() reads them directly
-            progress = list(q.recentProgress or [])
-            dur = [p.get("durationMs", {}) for p in progress]
-            # recentProgress keeps at most numRecentProgressUpdates - 1
-            # records (the oldest are dropped), so once it is full the
-            # sums below may cover only the last batches
-            cap = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
-            rec = {
-                "kind": "stream",
-                "sink": name,
-                "output_mode": output_mode,
-                "n_batches": len(progress),
-                "progress_truncated": len(progress) >= cap - 1,
-                "start_sec": round(t_start - t0, 3),
-                "await_sec": round(t_done - t_start, 3),
-                "trigger_execution_ms": sum(
-                    d.get("triggerExecution", 0) for d in dur
-                ),
-                "add_batch_ms": sum(d.get("addBatch", 0) for d in dur),
-                "offset_log_ms": sum(
-                    d.get("walCommit", 0) + d.get("commitOffsets", 0)
-                    + d.get("latestOffset", 0)
-                    for d in dur
-                ),
-                "state_commit_ms": sum(
-                    int(op.get("commitTimeMs", 0))
-                    for p in progress
-                    for op in p.get("stateOperators", [])
-                ),
-                "n_state_stores": sum(
-                    int(op.get("numStateStoreInstances", 0))
-                    for p in progress[-1:]
-                    for op in p.get("stateOperators", [])
-                ),
-            }
-            RUN_LOG.append(rec)
-        except Exception:  # noqa: BLE001 — attribution must never fail a query
-            pass
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
     return spark.table(name)

@@ -140,3 +140,18 @@ def test_upsert_incremental_exercises_cross_batch_overwrites(spark, sf_dir):
     for r in latest.collect():
         lv, lt = out[(r.user_id, r.event_type)]
         assert lv == r.value
+
+
+def test_upsert_incremental_logs_its_stream(spark, sf_dir):
+    """The ``foreachBatch`` load writes the same ``stream`` record to
+    ``registry.RUN_LOG`` as the memory-sink streams, so bench
+    attribution covers all of the stream queries."""
+    from pyspark_postgres_loader_spark import registry
+
+    mark = len(registry.RUN_LOG)
+    stream_upsert_incremental(spark, sf_dir)
+    (rec,) = [r for r in registry.RUN_LOG[mark:] if r["kind"] == "stream"]
+    assert rec["output_mode"] == "append"
+    assert rec["n_batches"] == 3  # one per time-ordered source file
+    assert rec["add_batch_ms"] > 0
+    assert rec["await_sec"] > 0

@@ -191,3 +191,34 @@ def test_layered_query_matches_oracle(spark):
     from oracle_harness import compare_query
 
     compare_query(spark, SF_DIR, "ann_hnsw_layered_topk")
+
+
+def test_hop_plans_one_exchange(spark):
+    """A beam hop shuffles once: frontier ∪ expanded is hashed on
+    ``qid``, which both the dedup aggregate and the ``qid`` window
+    accept. The frontier carries the query vector, so the only
+    broadcasts left are the frontier itself and one side of the corpus
+    join. The hop is read before its checkpoint, because a checkpointed
+    plan shows only ``Scan ExistingRDD``."""
+    import re
+
+    from pyspark_postgres_loader_spark.operators.nsw import (
+        _NSW_L1_MOD,
+        _hop_plan,
+        _nsw_corpus,
+        _qdist,
+        _seed_beam,
+    )
+
+    corpus = _nsw_corpus(spark, SF_DIR).localCheckpoint()
+    adj = nsw_graph(spark, SF_DIR, corpus).localCheckpoint()
+    entries = corpus.filter(F.col("vec_id") % _NSW_L1_MOD == 0)
+    frontier = _seed_beam(corpus, entries, 4, _qdist()).localCheckpoint()
+    plan = (
+        _hop_plan(frontier, adj, corpus, 4, _qdist())
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    shuffles = re.findall(r"(?<![A-Za-z])Exchange (\S+)", plan)
+    assert len(shuffles) == 1, plan
+    assert re.fullmatch(r"hashpartitioning\(qid#\d+L,", shuffles[0]), plan
+    assert plan.count("BroadcastExchange") == 2, plan

@@ -2,7 +2,8 @@
 Arrow relation (``sinks.upsert.chunk_writer``), so every Spark type the
 aligned DataFrame carries must land in DuckDB with the value the Row
 path holds; and the file-backed CLI factories must pickle and load
-DATE/TIMESTAMP rows on a fresh executor. The statement count of the
+DATE/TIMESTAMP rows on a fresh executor, also one that cannot import
+the package. The statement count of the
 ``sink_upsert_final_state`` workload is pinned here."""
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark_postgres_loader_spark.sinks.sql_builder import DUCKDB
 from pyspark_postgres_loader_spark.sinks.upsert import (
     _batch_and_upsert,
     _dedup_key_indices,
+    _register_self_by_value,
     chunk_writer,
     upsert_dataframe,
 )
@@ -170,6 +172,37 @@ def test_file_db_factory_binds_datetimes_in_a_fresh_process(dialect, tmp_path):
     assert proc.returncode == 0, proc.stderr.decode()
     assert proc.stdout.decode().strip() == "1"
     assert pickle.loads(blob).args == (db,)
+
+
+@pytest.mark.parametrize("dialect", ["sqlite", "duckdb"])
+def test_file_db_factory_unpickles_without_the_package(dialect, tmp_path):
+    """The sink ships its module by value, and the connection factories
+    live in it, so an executor that cannot import the package (working
+    directory outside the checkout, package not on ``PYTHONPATH``)
+    still opens the target."""
+    import os
+
+    from pyspark import cloudpickle
+
+    from pyspark_postgres_loader_spark import cli
+
+    _register_self_by_value()
+    db = str(tmp_path / f"bare.{dialect}")
+    blob = cloudpickle.dumps(cli.make_file_db_connection_factory(dialect, db))
+    script = (
+        "import pickle, sys\n"
+        "con = pickle.loads(sys.stdin.buffer.read())()\n"
+        "cur = con.cursor()\n"
+        "cur.execute('SELECT 41 + 1')\n"
+        "print(cur.fetchone()[0])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], input=blob, capture_output=True,
+        cwd=tmp_path, env=env, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    assert proc.stdout.decode().strip() == "42"
 
 
 class _CountedCursor:
