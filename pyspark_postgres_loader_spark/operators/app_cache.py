@@ -1,6 +1,6 @@
-"""App-id-scoped DataFrame memo — the `_ASSIGN_CACHE` pattern
-(clustering.py:159) factored out for every operator family that
-builds a reusable substrate (ANN graphs, IVF codebooks, coarse
+"""App-id-scoped DataFrame memo, the one memo for every operator
+family that builds a reusable substrate (the k-means final assignment,
+trained quality-model weights, ANN graphs, IVF codebooks, coarse
 centroids).
 
 Why this exists at 100 TB: an ANN index / trained codebook is built

@@ -87,59 +87,79 @@ def _sql_sqdist(v: str, c: str) -> str:
     )
 
 
-def _assign(corpus: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment with ZERO data shuffle: the k x d
-    centroid table folds into ONE broadcast array-of-structs row, and
-    the per-row argmin is ``array_min`` over (sq_dist, cluster) structs
-    — struct ordering is lexicographic, so equal distances tie-break on
-    the lower cluster id, matching the oracle's ``ORDER BY dist,
-    cluster`` ROW_NUMBER argmin. (A first cut used a
-    ``Window.partitionBy(vec_id)`` argmin — that shuffled the whole
-    corpus once per Lloyd round; this keeps every assignment map-side,
-    leaving the k*d-row centroid update as the only shuffle per round.)
-    Returns (vec_id, emb_micro, cluster, sq_dist)."""
-    cents_arr = cents.agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("cluster"), F.col("c_micro")))
-        ).alias("cents")
+def _micro_corpus(
+    spark: SparkSession, sf_dir: str, name: str = "emb_micro"
+) -> DataFrame:
+    """(vec_id, ``name``): the embeddings quantized to micro-units, read
+    through the spread scan — the projection every quantizer starts from
+    (the scan reads exactly the 2 pruned columns)."""
+    return _spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", _quantize(F.col("embedding")).alias(name)
     )
+
+
+def _nearest(
+    rows: DataFrame,
+    vec: str,
+    cents: DataFrame,
+    key: str,
+    cvec: str,
+    *,
+    dist: str | None = None,
+    within: str | None = None,
+) -> DataFrame:
+    """Nearest-centroid assignment with ZERO data shuffle: ``rows``
+    with ``key`` (the id of the centroid nearest to ``vec``) added, plus
+    the exact distance as ``dist`` when given. The centroid table
+    (``key``, ``cvec``) folds into ONE broadcast array-of-structs row,
+    and the per-row argmin is ``array_min`` over (distance, key)
+    structs — struct ordering is lexicographic, so equal distances
+    tie-break on the lower key, matching the oracles' ``ORDER BY dist,
+    key`` ROW_NUMBER argmin. ``within`` names a column both sides carry
+    (the PQ subspace): a row only competes among centroids with its
+    value. (A first cut used a ``Window.partitionBy(vec_id)`` argmin —
+    that shuffled the whole corpus once per Lloyd round; this keeps
+    every assignment map-side, leaving the centroid update as the only
+    shuffle per round.)"""
+    fields = ([within] if within else []) + [key, cvec]
+    folded = cents.agg(
+        F.sort_array(F.collect_list(F.struct(*fields))).alias("_cents")
+    )
+    cands = F.col("_cents")
+    if within:
+        cands = F.filter(cands, lambda c: c[within] == F.col(within))
     best = F.array_min(
         F.transform(
-            F.col("cents"),
+            cands,
             lambda c: F.struct(
-                _sqdist(F.col("emb_micro"), c["c_micro"]).alias("sq_dist"),
-                c["cluster"].alias("cluster"),
+                _sqdist(F.col(vec), c[cvec]).alias("d"), c[key].alias("key")
             ),
         )
     )
+    out = [F.col("_best.key").alias(key)]
+    if dist:
+        out.append(F.col("_best.d").alias(dist))
     return (
-        corpus.crossJoin(F.broadcast(cents_arr))
-        .withColumn("best", best)
-        .select(
-            "vec_id",
-            "emb_micro",
-            F.col("best.cluster").alias("cluster"),
-            F.col("best.sq_dist").alias("sq_dist"),
-        )
+        rows.crossJoin(F.broadcast(folded))
+        .withColumn("_best", best)
+        .select(*rows.columns, *out)
     )
 
 
-def _recompute(assigned: DataFrame) -> DataFrame:
-    """New centroids as floored per-dimension means in micro-units:
-    posexplode to (cluster, dim, val), BIGINT sum + count per (cluster,
-    dim) — partial aggregation keeps the shuffle at ~k*d rows per
-    partition — then ``floor(sum/count)``: one IEEE double division of
-    identical small integers, so both engines floor the same value.
-    Re-assembles the dim-ordered BIGINT array per cluster."""
-    exploded = assigned.select(
-        "cluster", F.posexplode("emb_micro").alias("dim", "val")
-    )
-    means = exploded.groupBy("cluster", "dim").agg(
+def _lloyd_update(assigned: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """New centroids (``keys``, c_micro) as floored per-dimension means
+    of ``vec`` in micro-units: posexplode to (keys, dim, val), BIGINT
+    sum + count per (keys, dim) — partial aggregation keeps the shuffle
+    at ~k*d rows per partition — then ``floor(sum/count)``: one IEEE
+    double division of identical small integers, so both engines floor
+    the same value. Re-assembles the dim-ordered BIGINT array per key."""
+    exploded = assigned.select(*keys, F.posexplode(vec).alias("dim", "val"))
+    means = exploded.groupBy(*keys, "dim").agg(
         F.floor(F.sum("val").cast("double") / F.count("val"))
         .cast("long")
         .alias("mean_micro")
     )
-    return means.groupBy("cluster").agg(
+    return means.groupBy(*keys).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "mean_micro"))),
             lambda s: s["mean_micro"],
@@ -150,13 +170,9 @@ def _recompute(assigned: DataFrame) -> DataFrame:
 # Final-assignment artifact shared by the three k-means consumers
 # (cluster_kmeans_embeddings, sample_cluster_diversity,
 # dedup_semantic_cluster): each used to re-derive the identical
-# fixed-Lloyd pipeline (~2.4 s apiece in-suite). Keyed by
-# (sf_dir, applicationId) so a DataFrame never leaks across Spark
-# sessions — a fresh session (the driver's vanilla rehearsal, a new
-# bench process) gets a fresh applicationId and rebuilds; fixture
-# files never change under a live session, so the memo cannot go
-# stale (the tokenizer._TRAINED precedent).
-_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
+# fixed-Lloyd pipeline (~2.4 s apiece in-suite). App-scoped (see
+# operators/app_cache.py), so a fresh session rebuilds.
+_KMEANS_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _build_final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,33 +180,27 @@ def _build_final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final centroids — (vec_id, emb_micro, cluster, sq_dist
     [micro^2]). Plan-shape tests inspect THIS (broadcast centroids,
     pruned scan); consumers go through the memoizing wrapper below."""
-    corpus = _spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _quantize(F.col("embedding")).alias("emb_micro")
-    )
+    corpus = _micro_corpus(spark, sf_dir)
     cents = corpus.filter(F.col("vec_id") < _K).select(
         F.col("vec_id").alias("cluster"), F.col("emb_micro").alias("c_micro")
     )
     for _ in range(_ITERS):
-        cents = _recompute(_assign(corpus, cents))
-    return _assign(corpus, cents)
+        cents = _lloyd_update(
+            _nearest(corpus, "emb_micro", cents, "cluster", "c_micro"),
+            ["cluster"], "emb_micro",
+        )
+    return _nearest(
+        corpus, "emb_micro", cents, "cluster", "c_micro", dist="sq_dist"
+    )
 
 
 def _kmeans_final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    key = (sf_dir, app_id)
-    cached = _ASSIGN_CACHE.get(key)
-    if cached is None:
-        # Evict entries from dead sessions: a long-lived process that
-        # restarts Spark would otherwise accumulate unreachable
-        # DataFrames (and their localCheckpoint blocks) keyed by old
-        # applicationIds (r10 ADVICE).
-        for stale_key in [k for k in _ASSIGN_CACHE if k[1] != app_id]:
-            del _ASSIGN_CACHE[stale_key]
-        cached = _build_final_assignment(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-        _ASSIGN_CACHE[key] = cached
-    return cached
+    from .app_cache import app_scoped
+
+    return app_scoped(
+        _KMEANS_CACHE, spark, (sf_dir, "kmeans"),
+        lambda: _build_final_assignment(spark, sf_dir),
+    )
 
 
 def _kmeans_oracle_ctes() -> str:

@@ -37,11 +37,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.planctl import spread as _spread
 from ..registry import register
-from ..tables import load_table
-from .clustering import _MICRO, _quantize, _sqdist, _sql_sqdist, _SQL_QUANTIZE
-from .pq import _PQ_ITERS, _PQ_K, _PQ_M, _PQ_SUBDIM, _pq_assign, _pq_recompute
+from .clustering import (
+    _MICRO,
+    _SQL_QUANTIZE,
+    _micro_corpus,
+    _nearest,
+    _sql_sqdist,
+    _sqdist,
+)
+from .pq import (
+    _PQ_ITERS,
+    _PQ_K,
+    _PQ_M,
+    _PQ_SUBDIM,
+    _subvectors,
+    _train_codebook,
+)
 
 _IVFPQ_CELLS = 8    # coarse centroids = emb of vec_id 0..7 (fixed seed set)
 
@@ -53,48 +65,6 @@ _IVFPQ_NQ = 6       # queries: vec_id < _IVFPQ_NQ
 _IVFPQ_TOPK = 5
 # PQ codebook init: residual subvectors of vec_id CELLS..CELLS+K-1
 # (the first K NON-centroid vectors — centroids' own residuals are 0)
-
-
-def _residual_svs(res: DataFrame) -> DataFrame:
-    """(vec_id, cell, r_micro) → (vec_id, cell, sub, sv): the pq.py
-    subvector explode with the cell carried through."""
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice("r_micro", s * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("sv"),
-            )
-            for s in range(_PQ_M)
-        ]
-    )
-    return res.select("vec_id", "cell", F.explode(subs).alias("x")).select(
-        "vec_id", "cell", F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv")
-    )
-
-
-def _encode_with_cell(svs: DataFrame, cb: DataFrame) -> DataFrame:
-    """pq._pq_assign's broadcast array_min argmin, keeping the cell
-    column (the training helper drops it)."""
-    cb_arr = cb.agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("sub"), F.col("code"), F.col("c_micro")))
-        ).alias("cbs")
-    )
-    mine = F.filter(F.col("cbs"), lambda c: c["sub"] == F.col("sub"))
-    best = F.array_min(
-        F.transform(
-            mine,
-            lambda c: F.struct(
-                _sqdist(F.col("sv"), c["c_micro"]).alias("d"),
-                c["code"].alias("code"),
-            ),
-        )
-    )
-    return (
-        svs.crossJoin(F.broadcast(cb_arr))
-        .withColumn("best", best)
-        .select("vec_id", "cell", "sub", F.col("best.code").alias("code"))
-    )
 
 
 def _ivfpq_oracle() -> str:
@@ -217,38 +187,18 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     against THAT cell's centroid, and summing m lookups per candidate
     — candidates outside probed cells are never touched (the join on
     cell is the prune). Top-{topk} per query under a total order."""
-    corpus = _spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _quantize(F.col("embedding")).alias("emb_micro")
-    )
+    corpus = _micro_corpus(spark, sf_dir)
     cents = corpus.filter(F.col("vec_id") < _IVFPQ_CELLS).select(
         F.col("vec_id").alias("cell"), F.col("emb_micro").alias("c_micro")
     )
-    cents_arr = cents.agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("cell"), F.col("c_micro")))
-        ).alias("cs")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                _sqdist(F.col("emb_micro"), c["c_micro"]).alias("d"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )
-    assigned = (
-        corpus.crossJoin(F.broadcast(cents_arr))
-        .withColumn("best", best)
-        .select("vec_id", "emb_micro", F.col("best.cell").alias("cell"))
-    )
+    assigned = _nearest(corpus, "emb_micro", cents, "cell", "c_micro")
     res = assigned.join(F.broadcast(cents), "cell").select(
         "vec_id",
         "cell",
         F.zip_with("emb_micro", "c_micro", lambda x, y: x - y).alias("r_micro"),
     )
-    svs = _residual_svs(res)
-    cb = svs.filter(
+    svs = _subvectors(res, "r_micro", "vec_id", "cell")
+    cb0 = svs.filter(
         (F.col("vec_id") >= _IVFPQ_CELLS)
         & (F.col("vec_id") < _IVFPQ_CELLS + _PQ_K)
     ).select(
@@ -256,8 +206,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") - _IVFPQ_CELLS).alias("code"),
         F.col("sv").alias("c_micro"),
     )
-    for _ in range(_PQ_ITERS):
-        cb = _pq_recompute(_pq_assign(svs.drop("cell"), cb))
     # the trained codebook is m·k rows — materialize it once so the
     # THREE downstream consumers (encode, dtable, and the per-iteration
     # lineage they'd otherwise replay) don't re-plan two Lloyd rounds
@@ -268,9 +216,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .app_cache import app_scoped
 
     cb = app_scoped(_IVFPQ_CACHE, spark, (sf_dir, "cb"),
-                    lambda cb=cb: cb)
-    codes = app_scoped(_IVFPQ_CACHE, spark, (sf_dir, "codes"),
-                       lambda: _encode_with_cell(svs, cb))
+                    lambda: _train_codebook(svs, cb0))
+    codes = app_scoped(
+        _IVFPQ_CACHE, spark, (sf_dir, "codes"),
+        lambda: _nearest(svs, "sv", cb, "code", "c_micro", within="sub")
+        .select("vec_id", "cell", "sub", "code"))
 
     # --- query side: probe nprobe cells, residual PER PROBED CELL
     w_probe = Window.partitionBy("qid").orderBy("d", "cell")
@@ -288,21 +238,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prn") <= _IVFPQ_NPROBE)
         .select("qid", "cell", "qr")
     )
-    qsvs = probes.select(
-        "qid",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("sub"),
-                        F.slice("qr", s * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("sv"),
-                    )
-                    for s in range(_PQ_M)
-                ]
-            )
-        ).alias("x"),
-    ).select("qid", "cell", F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv"))
+    qsvs = _subvectors(probes, "qr", "qid", "cell")
     dtable = qsvs.join(F.broadcast(cb), "sub").select(
         "qid", "cell", "sub", "code",
         _sqdist(F.col("sv"), F.col("c_micro")).alias("d"),

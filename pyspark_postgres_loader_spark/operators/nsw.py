@@ -43,10 +43,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.planctl import spread as _spread
 from ..registry import register
-from ..tables import load_table
-from .clustering import _MICRO, _quantize, _sqdist, _sql_sqdist, _SQL_QUANTIZE
+from .clustering import (
+    _MICRO,
+    _SQL_QUANTIZE,
+    _micro_corpus,
+    _nearest,
+    _sql_sqdist,
+    _sqdist,
+)
 
 _NSW_CELLS = 8    # blocking cells for graph construction (centroids = vec 0..7)
 _NSW_M = 6        # graph degree: M nearest within cell
@@ -132,12 +137,6 @@ def _nsw_oracle() -> str:
     )
 
 
-def _nsw_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _quantize(F.col("embedding")).alias("m")
-    )
-
-
 def nsw_graph(
     spark: SparkSession,
     sf_dir: str,
@@ -161,27 +160,11 @@ def nsw_graph(
     quantizer) that makes every cell reachable within one hop of any
     centroid."""
     if corpus is None:
-        corpus = _nsw_corpus(spark, sf_dir)
+        corpus = _micro_corpus(spark, sf_dir, "m")
     cents = corpus.filter(F.col("vec_id") < _NSW_CELLS).select(
         F.col("vec_id").alias("cell"), F.col("m").alias("cm")
     )
-    cents_arr = cents.agg(
-        F.sort_array(F.collect_list(F.struct("cell", "cm"))).alias("cs")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                _sqdist(F.col("m"), c["cm"]).alias("d"),
-                c["cell"].alias("cell"),
-            ),
-        )
-    )
-    assigned = (
-        corpus.crossJoin(F.broadcast(cents_arr))
-        .withColumn("best", best)
-        .select("vec_id", "m", F.col("best.cell").alias("cell"))
-    )
+    assigned = _nearest(corpus, "m", cents, "cell", "cm")
     if members_mod is not None:
         assigned = assigned.filter(
             (F.col("vec_id") % members_mod == 0)
@@ -386,7 +369,7 @@ def ann_nsw_beam_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale this is the deliberate ANN-serving residency (~0.5 KB per
     # vector for d=64), the same projection every hop's candidate
     # lookup scans
-    corpus = _nsw_corpus(spark, sf_dir).cache()
+    corpus = _micro_corpus(spark, sf_dir, "m").cache()
     # the edge list is consumed once per hop — the memoized
     # checkpoint IS the stored index at scale (M·N slim rows here),
     # built once per session and served to every later call
@@ -548,7 +531,7 @@ def ann_hnsw_layered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     payoff: the entry scan shrinks from N/{l1} (single-layer NSW) to
     N/{l2} rows, while frontiers stay |Q|·B broadcast rows and the
     corpus is never shuffled."""
-    corpus = _nsw_corpus(spark, sf_dir).cache()
+    corpus = _micro_corpus(spark, sf_dir, "m").cache()
     l2, l1 = (
         _nsw_adj(spark, sf_dir, corpus, members_mod=mod, hub=True)
         for mod in _HNSW_MODS
@@ -632,7 +615,7 @@ def ann_recall_hnsw_report(
     memoized graphs (app_cache), so this report costs one search +
     one scan."""
     hnsw = ann_hnsw_layered_topk(spark, sf_dir).select("qid", "vec_id")
-    corpus = _nsw_corpus(spark, sf_dir)
+    corpus = _micro_corpus(spark, sf_dir, "m")
     q = corpus.filter(F.col("vec_id") < _NSW_NQ).select(
         F.col("vec_id").alias("qid"), F.col("m").alias("qm")
     )

@@ -42,10 +42,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.planctl import spread as _spread
 from ..registry import register
-from ..tables import load_table
-from .clustering import _MICRO, _quantize, _sqdist, _sql_sqdist, _SQL_QUANTIZE
+from .clustering import (
+    _MICRO,
+    _SQL_QUANTIZE,
+    _lloyd_update,
+    _micro_corpus,
+    _nearest,
+    _sql_sqdist,
+    _sqdist,
+)
 
 # stored-index memo: trained codebook + codes per (session, sf_dir)
 _PQADC_CACHE: dict[tuple, "DataFrame"] = {}
@@ -58,68 +64,33 @@ _PQ_NQ = 8  # query vectors: vec_id < _PQ_NQ
 _PQ_TOPK = 5
 
 
-def _subvectors(corpus: DataFrame) -> DataFrame:
-    """(vec_id, emb_micro) → (vec_id, sub, sv): m fixed slices per
-    vector. The explode is m slim rows per vector — never d rows."""
+def _subvectors(rows: DataFrame, vec: str, *carry: str) -> DataFrame:
+    """(``carry``, ``vec``) → (``carry``, sub, sv): m fixed slices of
+    ``vec`` per row. The explode is m slim rows per vector — never d
+    rows."""
     subs = F.array(
         *[
             F.struct(
                 F.lit(s).alias("sub"),
-                F.slice("emb_micro", s * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("sv"),
+                F.slice(vec, s * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("sv"),
             )
             for s in range(_PQ_M)
         ]
     )
-    return corpus.select("vec_id", F.explode(subs).alias("x")).select(
-        "vec_id", F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv")
+    return rows.select(*carry, F.explode(subs).alias("x")).select(
+        *carry, F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv")
     )
 
 
-def _pq_assign(svs: DataFrame, cb: DataFrame) -> DataFrame:
-    """Nearest-code assignment with ZERO data shuffle: all m·k codebook
-    entries fold into ONE broadcast array row; per subvector the argmin
-    is ``array_min`` over (sq_dist, code) structs (ties → lower code),
-    matching the oracle's ROW_NUMBER argmin."""
-    cb_arr = cb.agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("sub"), F.col("code"), F.col("c_micro")))
-        ).alias("cbs")
-    )
-    mine = F.filter(F.col("cbs"), lambda c: c["sub"] == F.col("sub"))
-    best = F.array_min(
-        F.transform(
-            mine,
-            lambda c: F.struct(
-                _sqdist(F.col("sv"), c["c_micro"]).alias("d"),
-                c["code"].alias("code"),
-            ),
+def _train_codebook(svs: DataFrame, cb: DataFrame) -> DataFrame:
+    """_PQ_ITERS Lloyd rounds per subspace from the initial codebook
+    ``cb`` (sub, code, c_micro); ``svs`` carries (sub, sv)."""
+    for _ in range(_PQ_ITERS):
+        cb = _lloyd_update(
+            _nearest(svs, "sv", cb, "code", "c_micro", within="sub"),
+            ["sub", "code"], "sv",
         )
-    )
-    return (
-        svs.crossJoin(F.broadcast(cb_arr))
-        .withColumn("best", best)
-        .select("vec_id", "sub", "sv", F.col("best.code").alias("code"))
-    )
-
-
-def _pq_recompute(assigned: DataFrame) -> DataFrame:
-    """New per-(sub, code) centroids as floored per-dimension means in
-    micros — posexplode + partial-aggregated groupBy, the clustering.py
-    update shape with the subspace key added."""
-    exploded = assigned.select(
-        "sub", "code", F.posexplode("sv").alias("dim", "val")
-    )
-    means = exploded.groupBy("sub", "code", "dim").agg(
-        F.floor(F.sum("val").cast("double") / F.count("val"))
-        .cast("long")
-        .alias("mean_micro")
-    )
-    return means.groupBy("sub", "code").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "mean_micro"))),
-            lambda s: s["mean_micro"],
-        ).alias("c_micro")
-    )
+    return cb
 
 
 def _pq_oracle() -> str:
@@ -207,24 +178,20 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every stage (training argmins, floored centroid updates, encoding,
     the BIGINT ADC sums) is bit-deterministic, so the DuckDB oracle
     replays the full pipeline as unrolled CTEs."""
-    corpus = _spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _quantize(F.col("embedding")).alias("emb_micro")
-    )
-    svs = _subvectors(corpus)
-    cb = svs.filter(F.col("vec_id") < _PQ_K).select(
+    svs = _subvectors(_micro_corpus(spark, sf_dir), "emb_micro", "vec_id")
+    cb0 = svs.filter(F.col("vec_id") < _PQ_K).select(
         "sub", F.col("vec_id").alias("code"), F.col("sv").alias("c_micro")
     )
     # app-scoped memo (round 15): codebook training + encoding are
     # index build — once per corpus version; only ADC is per-query
     from .app_cache import app_scoped
 
-    for _ in range(_PQ_ITERS):
-        cb = _pq_recompute(_pq_assign(svs, cb))
     cb = app_scoped(_PQADC_CACHE, spark, (sf_dir, "cb"),
-                    lambda cb=cb: cb)
+                    lambda: _train_codebook(svs, cb0))
     codes = app_scoped(
         _PQADC_CACHE, spark, (sf_dir, "codes"),
-        lambda: _pq_assign(svs, cb).select("vec_id", "sub", "code"))
+        lambda: _nearest(svs, "sv", cb, "code", "c_micro", within="sub")
+        .select("vec_id", "sub", "code"))
 
     q_svs = svs.filter(F.col("vec_id") < _PQ_NQ).select(
         F.col("vec_id").alias("qid"), "sub", "sv"

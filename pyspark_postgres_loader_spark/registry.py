@@ -116,6 +116,13 @@ _TOUCHED: dict[str, int] = {
     "ann_nsw_beam_topk": 17,
     "ann_hnsw_layered_topk": 17,
     "ann_recall_hnsw_report": 17,
+    # one nearest-centroid argmin kernel owns the tie-break
+    "cluster_kmeans_embeddings": 17,
+    "sample_cluster_diversity": 17,
+    "dedup_semantic_cluster": 17,
+    "ann_pq_adc_topk": 17,
+    "ann_ivfpq_topk": 17,
+    "ann_ivf_incremental_topk": 17,
 }
 
 

@@ -46,7 +46,12 @@ def test_assignment_is_argmin(final_assign, spark, sf_dir):
         F.col("vec_id").alias("cluster"), F.col("emb_micro").alias("c_micro")
     )
     for _ in range(clustering._ITERS):
-        cents = clustering._recompute(clustering._assign(corpus, cents))
+        cents = clustering._lloyd_update(
+            clustering._nearest(
+                corpus, "emb_micro", cents, "cluster", "c_micro"
+            ),
+            ["cluster"], "emb_micro",
+        )
     all_d = (
         corpus.crossJoin(F.broadcast(cents.withColumnRenamed("cluster", "other")))
         .select(
@@ -78,15 +83,124 @@ def test_diversity_sample_shape(spark, sf_dir):
         assert sorted(grp["pick_rank"]) == list(range(1, len(grp) + 1))
 
 
-def test_kmeans_plan_broadcasts_centroids_and_prunes_scan(spark, sf_dir):
+def _memoized(query, part):
+    """Plan builder: the unpinned DataFrame ``query`` memoizes as
+    ``part``, captured by standing in for ``app_cache.app_scoped``."""
+
+    def plan(spark, sf_dir, monkeypatch):
+        from pyspark_postgres_loader_spark.operators import app_cache
+
+        built = {}
+
+        def capture(cache, session, key_tail, build):
+            built[key_tail[-1]] = df = build()
+            return df
+
+        monkeypatch.setattr(app_cache, "app_scoped", capture)
+        query(spark, sf_dir)
+        return built[part]
+
+    return plan
+
+
+def _corpus_exchanges(plan: str) -> tuple[int, list[str]]:
+    """(BroadcastNestedLoopJoin BuildRight count, corpus-side
+    Exchanges) in a tree-string physical plan. An Exchange is on the
+    corpus side when, walking up, it meets a nested-loop join through
+    that join's streamed (first) child before any BroadcastExchange.
+    ``planctl.spread``'s round-robin over a one-split scan does not
+    count: it is skipped whenever the scan is already wide."""
+    stack: list[tuple[int, str, bool]] = []  # (depth, node, first child)
+    joins, found = 0, []
+    for line in plan.splitlines():
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        first = line[depth - 3:depth] == ":- "
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        joins += node.startswith("BroadcastNestedLoopJoin BuildRight")
+        if node.startswith("Exchange") and not node.startswith(
+            "Exchange RoundRobinPartitioning"
+        ):
+            via_first = first
+            for _, up, up_first in reversed(stack):
+                if up.startswith("BroadcastExchange"):
+                    break
+                if up.startswith("BroadcastNestedLoopJoin"):
+                    if via_first:
+                        found.append(node)
+                    break
+                via_first = up_first
+        stack.append((depth, node, first))
+    return joins, found
+
+
+def _plan_builders():
+    from pyspark_postgres_loader_spark.operators import ivfpq, nsw, pq
+
+    return {
+        "kmeans": lambda spark, sf_dir, _: clustering._build_final_assignment(
+            spark, sf_dir
+        ),
+        "pq_encode": _memoized(pq.ann_pq_adc_topk, "codes"),
+        "ivfpq_coarse": _memoized(ivfpq.ann_ivfpq_topk, "codes"),
+        "nsw_cells": lambda spark, sf_dir, _: nsw.nsw_graph(spark, sf_dir),
+    }
+
+
+@pytest.mark.parametrize("plan_of", list(_plan_builders()))
+def test_kmeans_plan_broadcasts_centroids_and_prunes_scan(
+    spark, sf_dir, monkeypatch, plan_of
+):
     """Assignment must be map-side (broadcast centroid join, no shuffle
     of the corpus for scoring) and the scan must read only the two
-    needed columns."""
-    df = clustering._build_final_assignment(spark, sf_dir)
+    needed columns — for k-means and for every quantizer that shares
+    its nearest-centroid argmin."""
+    df = _plan_builders()[plan_of](spark, sf_dir, monkeypatch)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "label" not in optimized  # unused column pruned from the scan
+    # unused column pruned from the scan: the physical FileScan lists
+    # what it reads (the optimized plan's Relation node names every
+    # column of the table, pruned or not)
+    assert "label" not in plan
+    joins, exchanges = _corpus_exchanges(plan)
+    assert joins and not exchanges, plan
+
+
+def test_nearest_ties_go_to_the_lower_key(spark):
+    """Equal distances break on the lower centroid key, as the oracles'
+    ``ORDER BY dist, key`` does; ``within=`` keeps each row among its
+    own subspace's centroids."""
+    rows = spark.createDataFrame(
+        [(1, [0, 0]), (2, [3, 3])], "vec_id long, v array<long>"
+    )
+    cents = spark.createDataFrame(
+        [(7, [1, 1]), (9, [1, -1]), (3, [-1, -1]), (5, [5, 5])],
+        "k long, c array<long>",
+    )
+    out = clustering._nearest(rows, "v", cents, "k", "c", dist="d")
+    assert out.columns == ["vec_id", "v", "k", "d"]
+    # vec 1: keys 3, 7 and 9 all at 2; vec 2: keys 5 and 7 both at 8
+    assert sorted((r.vec_id, r.k, r.d) for r in out.collect()) == [
+        (1, 3, 2), (2, 5, 8),
+    ]
+
+    svs = spark.createDataFrame(
+        [(1, 0, [0, 0]), (1, 1, [4, 4])], "vec_id long, sub int, sv array<long>"
+    )
+    cb = spark.createDataFrame(
+        [(0, 0, [9, 9]), (0, 2, [1, 1]), (0, 1, [-1, -1]),
+         (1, 1, [8, 8]), (1, 0, [0, 0])],
+        "sub int, code long, c_micro array<long>",
+    )
+    out = clustering._nearest(
+        svs, "sv", cb, "code", "c_micro", dist="d", within="sub"
+    )
+    # sub 0: codes 1 and 2 at 2 (sub 1's code 0 would be at 0);
+    # sub 1: codes 0 and 1 both at 32
+    assert sorted((r.sub, r.code, r.d) for r in out.collect()) == [
+        (0, 1, 2), (1, 0, 32),
+    ]
 
 
 def test_tfidf_scores_and_ranks(spark, sf_dir):

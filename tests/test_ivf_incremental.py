@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from pyspark_postgres_loader_spark.functions.planctl import spread as _spread
 from pyspark_postgres_loader_spark.operators.clustering import (
-    _assign,
+    _lloyd_update,
+    _nearest,
     _quantize,
-    _recompute,
 )
 from pyspark_postgres_loader_spark.operators.ivf_incremental import (
     _IVFI_K,
@@ -34,7 +34,9 @@ def test_incremental_insert_is_drift_free(spark):
     corpus, row for row — cell ids AND distances."""
     corpus = _corpus(spark)
     index, cents = build_incremental_index(spark, SF)
-    batch = _assign(corpus, cents).select("vec_id", "cluster", "sq_dist")
+    batch = _nearest(
+        corpus, "emb_micro", cents, "cluster", "c_micro", dist="sq_dist"
+    ).select("vec_id", "cluster", "sq_dist")
     merged = index.select("vec_id", "cluster", "sq_dist")
     diff = merged.join(batch, "vec_id").filter(
         (merged["cluster"] != batch["cluster"])
@@ -51,7 +53,9 @@ def test_base_assignments_untouched_by_delta(spark):
     corpus = _corpus(spark)
     base = corpus.filter(~_delta_col())
     cents = _frozen_centroids(base)
-    pre = _assign(base, cents).select("vec_id", "cluster")
+    pre = _nearest(base, "emb_micro", cents, "cluster", "c_micro").select(
+        "vec_id", "cluster"
+    )
     index, _ = build_incremental_index(spark, SF)
     post = index.filter(~F.col("is_delta")).select("vec_id", "cluster")
     assert pre.count() == post.count()
@@ -69,7 +73,10 @@ def test_freeze_is_not_vacuous(spark):
         F.col("vec_id").alias("cluster"), F.col("emb_micro").alias("c_micro")
     )
     for _ in range(2):
-        refit = _recompute(_assign(corpus, refit))
+        refit = _lloyd_update(
+            _nearest(corpus, "emb_micro", refit, "cluster", "c_micro"),
+            ["cluster"], "emb_micro",
+        )
     joined = frozen.alias("f").join(refit.alias("r"), "cluster").select(
         (F.col("f.c_micro") != F.col("r.c_micro")).alias("moved")
     )

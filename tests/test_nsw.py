@@ -93,13 +93,13 @@ def test_matmul_knn_equals_relational_form(spark):
     product <= 4e12 and every 64-term sum <= 2.6e14, both < 2^53)."""
     from pyspark.sql.window import Window
 
-    from pyspark_postgres_loader_spark.operators.clustering import _sqdist
-    from pyspark_postgres_loader_spark.operators.nsw import (
-        _NSW_CELLS,
-        _nsw_corpus,
+    from pyspark_postgres_loader_spark.operators.clustering import (
+        _micro_corpus,
+        _sqdist,
     )
+    from pyspark_postgres_loader_spark.operators.nsw import _NSW_CELLS
 
-    c = _nsw_corpus(spark, SF_DIR)
+    c = _micro_corpus(spark, SF_DIR, "m")
     new = {(r.a, r.b) for r in nsw_graph(spark, SF_DIR, c).collect()}
 
     cents = c.filter(F.col("vec_id") < _NSW_CELLS).select(
@@ -202,15 +202,17 @@ def test_hop_plans_one_exchange(spark):
     plan shows only ``Scan ExistingRDD``."""
     import re
 
+    from pyspark_postgres_loader_spark.operators.clustering import (
+        _micro_corpus,
+    )
     from pyspark_postgres_loader_spark.operators.nsw import (
         _NSW_L1_MOD,
         _hop_plan,
-        _nsw_corpus,
         _qdist,
         _seed_beam,
     )
 
-    corpus = _nsw_corpus(spark, SF_DIR).localCheckpoint()
+    corpus = _micro_corpus(spark, SF_DIR, "m").localCheckpoint()
     adj = nsw_graph(spark, SF_DIR, corpus).localCheckpoint()
     entries = corpus.filter(F.col("vec_id") % _NSW_L1_MOD == 0)
     frontier = _seed_beam(corpus, entries, 4, _qdist()).localCheckpoint()

@@ -14,12 +14,14 @@ from pyspark_postgres_loader_spark.operators.pq import (
     _PQ_NQ,
     _PQ_SUBDIM,
     _PQ_TOPK,
-    _pq_assign,
-    _pq_recompute,
     _subvectors,
     ann_pq_adc_topk,
 )
-from pyspark_postgres_loader_spark.operators.clustering import _quantize
+from pyspark_postgres_loader_spark.operators.clustering import (
+    _lloyd_update,
+    _nearest,
+    _quantize,
+)
 from pyspark_postgres_loader_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -29,12 +31,15 @@ def _trained(spark):
     corpus = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", _quantize(F.col("embedding")).alias("emb_micro")
     )
-    svs = _subvectors(corpus)
+    svs = _subvectors(corpus, "emb_micro", "vec_id")
     cb = svs.filter(F.col("vec_id") < _PQ_K).select(
         "sub", F.col("vec_id").alias("code"), F.col("sv").alias("c_micro")
     )
     for _ in range(2):
-        cb = _pq_recompute(_pq_assign(svs, cb))
+        cb = _lloyd_update(
+            _nearest(svs, "sv", cb, "code", "c_micro", within="sub"),
+            ["sub", "code"], "sv",
+        )
     return svs, cb
 
 
@@ -46,7 +51,7 @@ def test_codebook_and_code_invariants(spark):
     assert all(0 <= r.code < _PQ_K for r in entries)
     assert all(len(r.c_micro) == _PQ_SUBDIM for r in entries)
 
-    codes = _pq_assign(svs, cb).collect()
+    codes = _nearest(svs, "sv", cb, "code", "c_micro", within="sub").collect()
     n_vecs = load_table(spark, SF_DIR, "embeddings").count()
     assert len(codes) == n_vecs * _PQ_M  # every vector fully encoded
     assert all(0 <= r.code < _PQ_K for r in codes)
