@@ -14,3 +14,9 @@ only inside the upsert sink and clearly-marked Pandas-UDF operators.
 """
 
 __version__ = "0.1.0"
+
+# Unpickling any by-reference engine function imports this package, so
+# every Python worker that runs an engine task installs the guard.
+from .workerenv import install as _install_worker_env
+
+_install_worker_env()

@@ -74,6 +74,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from ..workerenv import install as _install_worker_env
 from .sql_builder import (
     ARROW,
     EXECUTEMANY,
@@ -305,6 +306,7 @@ def _batch_and_upsert(
     needing per-occurrence verdicts uses a dialect whose chunk form is
     ``executemany`` and pays one round trip per row, like the
     reference's asyncpg personality."""
+    _install_worker_env()
     conn = None
     cursor = None
     seen = loaded = rejected = truncated = 0
@@ -421,18 +423,22 @@ _BY_VALUE_REGISTERED = False
 
 
 def _register_self_by_value() -> None:
-    """Ship this module's code inside the task closure (cloudpickle
-    by-value) so executors don't need the package importable — the sink
-    works from a bare checkout without spark-submit --py-files."""
+    """Ship this module's code, and the worker guard it installs, inside
+    the task closure (cloudpickle by-value) so executors don't need the
+    package importable — the sink works from a bare checkout without
+    spark-submit --py-files."""
     global _BY_VALUE_REGISTERED
     if _BY_VALUE_REGISTERED:
         return
     import sys
 
+    from .. import workerenv
+
     try:
         from pyspark import cloudpickle
 
         cloudpickle.register_pickle_by_value(sys.modules[__name__])
+        cloudpickle.register_pickle_by_value(workerenv)
         _BY_VALUE_REGISTERED = True
     except Exception:  # pragma: no cover - older cloudpickle: fall back
         pass

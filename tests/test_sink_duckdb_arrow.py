@@ -205,6 +205,67 @@ def test_file_db_factory_unpickles_without_the_package(dialect, tmp_path):
     assert proc.stdout.decode().strip() == "42"
 
 
+def test_sink_partition_closure_unpickles_without_the_package(
+    spark, tmp_path, monkeypatch
+):
+    """The partition function ``upsert_dataframe`` hands to Spark, with
+    the worker import-cache guard it installs, unpickles and loads its
+    rows in a task process that cannot import the package."""
+    import os
+
+    from pyspark import cloudpickle
+
+    from pyspark_postgres_loader_spark.sinks import upsert
+
+    db = str(tmp_path / "closure.duckdb")
+    con = duckdb.connect(db)
+    con.execute(_DDL)
+    con.close()
+    shipped = []
+
+    class _Layout:
+        """Stands in for ``_layout``'s DataFrame: keeps the function
+        the sink would run on each partition."""
+
+        rdd = property(lambda self: self)
+
+        def mapPartitions(self, fn):
+            shipped.append(fn)
+            return self
+
+        def collect(self):
+            return []
+
+    monkeypatch.setattr(upsert, "_layout", lambda df, *a: _Layout())
+    df = spark.createDataFrame(_rows(1), _SCHEMA)
+    factory = functools.partial(upsert._connect_duckdb, db)
+    upsert_dataframe(df, factory, "typed", ["k"], batch_size=16, dialect=DUCKDB)
+    blob = cloudpickle.dumps((shipped[0], _rows(1)))
+    script = (
+        "import pickle, sys, zipimport\n"
+        "from pyspark import TaskContext\n"
+        "TaskContext._getOrCreate()  # set before unpickling, as in a worker\n"
+        "fn, rows = pickle.loads(sys.stdin.buffer.read())\n"
+        "[(seen, loaded, rejected, *_)] = fn(iter(rows))\n"
+        "guarded = getattr(zipimport.zipimporter.invalidate_caches, "
+        "'_stat_guarded', False)\n"
+        "print(seen, loaded, rejected, guarded, "
+        "'pyspark_postgres_loader_spark' in sys.modules)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], input=blob, capture_output=True,
+        cwd=tmp_path, env=env, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    assert proc.stdout.decode().split() == ["39", "39", "0", "True", "False"]
+    con = duckdb.connect(db)
+    try:
+        assert con.execute("SELECT COUNT(*) FROM typed").fetchone()[0] == 39
+    finally:
+        con.close()
+
+
 class _CountedCursor:
     def __init__(self, cur, counts: dict):
         self._cur, self._counts = cur, counts
